@@ -1,11 +1,17 @@
 """Public operator API — the engine's reusable surface over arbitrary
 DataFrames.
 
-The ``operators.*`` modules bind each capability to the synthetic fixture
-tables for the correctness driver; this module is the same machinery
-parameterized by (df, column) so a user can point it at their own data —
-the 'switch from the reference and run every query' contract
-(SURVEY §2.5: ``minhash_dedup(df, text_col)``, ``ann_join(df, emb_col, k)``).
+Every function is parameterized by (df, column) so a user can point it
+at their own data — the 'switch from the reference and run every query'
+contract (SURVEY §2.5: ``minhash_dedup(df, text_col)``,
+``ann_join(df, emb_col, k)``). Where a registry query in
+``operators.*`` computes the same thing, the query is a binding of the
+function here: it calls the function on the fixture table and adds only
+its final shaping (t06 → :func:`quality_score`, t12 →
+:func:`pack_sequences`, t13 → :func:`repetition_signals`, d03 →
+:func:`minhash_dedup_pairs`, d10 → :func:`incremental_dedup`, q36 →
+:func:`merge_upsert`). The DuckDB oracles that check those queries
+therefore check the functions users call.
 
 All functions return DataFrames (lazy, composable) and never collect
 except where the algorithm itself is driver-scale (documented per
@@ -18,7 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE
+from big_data_analytics_cse545_spark.functions.text import (
+    bigrams,
+    shingles,
+    stopword_count,
+    tokens,
+)
+from big_data_analytics_cse545_spark.operators.dedup import (
+    MINHASH_SCHEME,
+    _band_keys_df,
+)
 
 # ---------------------------------------------------------------------------
 # text
@@ -28,29 +43,34 @@ from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE
 def tokenize(df: DataFrame, text_col: str, out_col: str = "tokens") -> DataFrame:
     """Lowercase word tokens (the reference's tokenizer semantics,
     a1p1_ahuja.py:184 / a1p2b_ahuja.py:68, normalized to one regex)."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    return df.withColumn(out_col, toks)
+    return df.withColumn(out_col, tokens(F.col(text_col)))
 
 
 def quality_score(df: DataFrame, text_col: str, out_col: str = "quality") -> DataFrame:
-    """[0,1] quality from length / stopword share / mean token length
-    (operators.text.t06 semantics, reusable)."""
-    from big_data_analytics_cse545_spark.functions.text import (
-        stopword_count,
-        token_count,
+    """[0,1] quality from length / stopword share / mean token length;
+    NULL for a row without tokens (empty or NULL text). t06 is this
+    function's bucket histogram."""
+    ts = F.col("_ts")
+    n_tok = F.size(ts)
+    # try_divide: a zero divisor gives NULL, as in DuckDB (ANSI `/`
+    # raises on one empty document)
+    mean_len = F.try_divide(
+        F.aggregate(F.transform(ts, F.length), F.lit(0), lambda acc, x: acc + x),
+        n_tok,
     )
-
-    toks = token_count(F.col(text_col))
-    mean_len = F.length(F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")) / toks
-    stop_ratio = stopword_count(F.col(text_col)) / toks
+    stop_ratio = F.try_divide(stopword_count(ts), n_tok)
     q = (
-        F.least(toks / F.lit(100.0), F.lit(1.0)) * 0.5
+        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.5
         + F.least(stop_ratio / F.lit(0.1), F.lit(1.0)) * 0.3
         + F.least(mean_len / F.lit(6.0), F.lit(1.0)) * 0.2
     )
-    return df.withColumn(out_col, q)
+    # LEAST skips NULLs, so without the guard a row without tokens would
+    # score 0.5 (empty text) or 1.0 (NULL text)
+    return (
+        df.withColumn("_ts", tokens(F.col(text_col)))
+        .withColumn(out_col, F.when(n_tok > 0, q))
+        .drop("_ts")
+    )
 
 
 def pack_sequences(
@@ -62,20 +82,17 @@ def pack_sequences(
     max_len: int = 512,
     out_col: str = "pack_id",
 ) -> DataFrame:
-    """Assign each row to a context-window pack (operators.text.t12
-    semantics, row-level): rows are concatenated per ``stream_col`` in
-    ``id_col`` order and chunked every ``max_len`` whitespace tokens; a
-    row's pack is where its first token lands. One running-sum window
-    per stream — no cross-stream shuffle."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
+    """Assign each row to a context-window pack: rows are concatenated
+    per ``stream_col`` in ``id_col`` order and chunked every ``max_len``
+    tokens; a row's pack is where its first token lands (t12 aggregates
+    this per pack). One running-sum window per stream — no cross-stream
+    shuffle."""
     w = (
         Window.partitionBy(stream_col)
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    n_tok = F.size(toks).cast("long")
+    n_tok = F.size(tokens(F.col(text_col))).cast("long")
     return (
         df.withColumn("_n_tok", n_tok)
         .withColumn("_cum", F.sum("_n_tok").over(w))
@@ -87,43 +104,40 @@ def pack_sequences(
 
 
 def repetition_signals(df: DataFrame, text_col: str) -> DataFrame:
-    """Append Gopher-style repetition signals (operators.text.t13
-    semantics): ``dup_token_frac`` (1 - distinct/total tokens) and
-    ``top_bigram_frac`` (most frequent bigram's share of bigrams).
+    """Append Gopher-style repetition signals: ``dup_token_frac``
+    (1 - distinct/total tokens, NULL for a row without tokens) and
+    ``top_bigram_frac`` (most frequent bigram's share of bigrams, 0.0
+    for a row without bigrams). t13 adds the token count and the
+    repetitive flag.
 
     Shuffle-free form: the top-bigram count is a per-row array
     expression (count each distinct bigram inside the row), quadratic in
     the row's distinct-bigram count but zero data movement — the right
-    trade for filter pipelines where docs are bounded. t13's
-    explode+groupBy form is the alternative when single docs can be
-    huge; the two are cross-checked in tests/test_sampling.py."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    df = df.withColumn("_ts", toks).withColumn(
-        "_bg",
-        F.expr(
-            "transform(slice(_ts, 1, greatest(size(_ts) - 1, 0)),"
-            " (x, i) -> concat(x, ' ', element_at(_ts, i + 2)))"
-        ),
-    )
+    trade for filter pipelines where docs are bounded."""
+    bg = F.col("_bg")
     top_n = F.array_max(
         F.transform(
-            F.array_distinct(F.col("_bg")),
-            lambda b: F.size(F.filter(F.col("_bg"), lambda x: x == b)),
+            F.array_distinct(bg), lambda b: F.size(F.filter(bg, lambda x: x == b))
         )
     )
+    # try_divide: a zero divisor gives NULL, as in DuckDB (ANSI `/`
+    # raises on one empty document)
     return (
-        df.withColumn(
+        df.withColumn("_ts", tokens(F.col(text_col)))
+        .withColumn("_bg", bigrams(F.col("_ts"), " "))
+        .withColumn(
             "dup_token_frac",
             F.lit(1.0)
-            - F.size(F.array_distinct("_ts")).cast("double")
-            / F.size("_ts").cast("double"),
+            - F.try_divide(
+                F.size(F.array_distinct("_ts")).cast("double"),
+                F.size("_ts").cast("double"),
+            ),
         )
         .withColumn(
             "top_bigram_frac",
             F.coalesce(
-                top_n.cast("double") / F.size("_bg").cast("double"), F.lit(0.0)
+                F.try_divide(top_n.cast("double"), F.size(bg).cast("double")),
+                F.lit(0.0),
             ),
         )
         .drop("_ts", "_bg")
@@ -200,20 +214,11 @@ def pii_scrub(df: DataFrame, text_col: str) -> DataFrame:
     return df.withColumn(text_col, pii_scrub_col(F.col(text_col)))
 
 
-def _word_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id_col, shingle) — distinct word n-gram shingles per row."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    shingles = F.expr(
-        f"CASE WHEN size(_ts) >= {n} THEN array_distinct(transform("
-        f"sequence(1, size(_ts) - {n} + 1), "
-        f"i -> array_join(slice(_ts, i, {n}), '_'))) ELSE array() END"
-    )
-    return (
-        df.select(id_col, toks.alias("_ts"))
-        .select(id_col, F.explode(shingles).alias("shingle"))
-    )
+def _shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """(_id, _sh) — distinct word ``n``-gram shingles per row."""
+    return df.select(
+        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_ts")
+    ).select("_id", F.explode(shingles(F.col("_ts"), n)).alias("_sh"))
 
 
 def decontaminate(
@@ -230,14 +235,14 @@ def decontaminate(
     shingles with any ``benchmark`` row. The benchmark shingle set is
     broadcast (eval suites are small); the corpus never shuffles its
     text — at 100 TB this is a broadcast semi-join over a narrow scan."""
-    csh = _word_shingles(corpus, text_col, id_col, n)
-    bsh = _word_shingles(benchmark, text_col, id_col, n).select("shingle").distinct()
+    csh = _shingles(corpus, text_col, id_col, n)
+    bsh = _shingles(benchmark, text_col, id_col, n).select("_sh").distinct()
     contaminated = (
-        csh.join(F.broadcast(bsh), "shingle")
-        .groupBy(id_col)
+        csh.join(F.broadcast(bsh), "_sh")
+        .groupBy("_id")
         .agg(F.count(F.lit(1)).alias("_n_shared"))
         .filter(F.col("_n_shared") >= min_shared)
-        .select(id_col)
+        .select(F.col("_id").alias(id_col))
     )
     return corpus.join(contaminated, id_col, "left_anti")
 
@@ -260,86 +265,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-# Hash-family tag persisted in dedup_index params (and save/load
-# round-trips): band keys from different families never collide, so a
-# mismatch must be a loud error, not an empty candidate join.
-MINHASH_SCHEME = "km2-md5"
-
-
-def _shingle_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    n_hashes: int,
-    band_rows: int,
-    shingle_size: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(shingles, band_keys) for MinHash-LSH: shingles = (_id, _sh)
-    distinct word n-grams; band_keys = (_id, _band, _key). One
-    aggregation pass computes all minhashes as separate agg columns (a
-    single doc-keyed shuffle, never an n_hashes× explode). Shared by
-    minhash_dedup_pairs (self-join dedup) and incremental_dedup
-    (batch-vs-corpus)."""
-    n_bands = n_hashes // band_rows
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
-    shingles = F.expr(
-        f"CASE WHEN size(_ts) >= {shingle_size} THEN array_distinct(transform("
-        f"sequence(1, size(_ts) - {shingle_size - 1}), "
-        f"i -> concat_ws('_', {', '.join(f'element_at(_ts, i + {k})' for k in range(shingle_size))})"
-        ")) ELSE array() END"
-    )
-    sh = (
-        df.select(F.col(id_col).alias("_id"), toks.alias("_ts"))
-        .select("_id", F.explode(shingles).alias("_sh"))
-    )
-    # K-M double hashing (round 7, the operators.dedup._band_keys_df
-    # scheme and rationale): 2 md5's per shingle row instead of
-    # n_hashes — measured 5.7× faster signature aggregation at the 10×
-    # scale corpus, same oracle-replayable exact integer arithmetic
-    from big_data_analytics_cse545_spark.operators.dedup import MINHASH_P
-
-    h1 = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("a|"), F.col("_sh"))), 1, 15),
-            16, 10,
-        ).cast("long") % MINHASH_P
-    )
-    h2 = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("b|"), F.col("_sh"))), 1, 15),
-            16, 10,
-        ).cast("long") % MINHASH_P
-    )
-    minh = (
-        sh.select("_id", h1.alias("_h1"), h2.alias("_h2"))
-        .groupBy("_id")
-        .agg(
-            *[
-                F.min((F.col("_h1") + s * F.col("_h2")) % MINHASH_P).alias(f"_mh{s}")
-                for s in range(n_hashes)
-            ]
-        )
-    )
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"_mh{s}") for s in range(b * band_rows, (b + 1) * band_rows)]
-            )
-        ).alias(f"_bk{b}")
-        for b in range(n_bands)
-    ]
-    bands = minh.select("_id", *band_cols).select(
-        "_id",
-        F.posexplode(F.array(*[F.col(f"_bk{b}") for b in range(n_bands)])).alias(
-            "_band", "_key"
-        ),
-    )
-    return sh, bands
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str,
@@ -351,12 +276,14 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Near-duplicate id pairs (id1 < id2, jaccard) via MinHash+LSH with
-    exact verification on candidates — operators.dedup.d03 generalized.
-    Returns columns (id1, id2, jaccard)."""
-    sh, bands = _shingle_bands(
-        df, text_col, id_col,
-        n_hashes=n_hashes, band_rows=band_rows, shingle_size=shingle_size,
-    )
+    exact verification on candidates; d03 is this function over the
+    documents fixture. Returns columns (id1, id2, jaccard)."""
+    # sh is NOT cached for its four uses (round-12 A/B on d03/d10: the
+    # eager materialization barrier cost more than the re-tokenizes it
+    # saved; at scale the pipelined recompute also avoids a corpus-sized
+    # cache)
+    sh = _shingles(df, text_col, id_col, shingle_size)
+    bands = _band_keys_df(sh, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -458,9 +385,7 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
     """64-bit SimHash fingerprint column (md5-nibble bits, no UDF)."""
     from big_data_analytics_cse545_spark.operators.dedup import _bit_weight
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
-    )
+    toks = tokens(F.col(text_col))
     # one md5 per token, pre-parsed into four 16-bit integer quarters;
     # each bit vote is then an integer shift+mask over the quarter array
     # (the round-2 form re-derived md5+locate per bit — 64× per token)
@@ -1313,10 +1238,7 @@ def chunk_documents(
     posexplode, all JVM-side."""
     toked = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-            lambda t: t != F.lit(""),
-        ).alias("toks"),
+        tokens(F.col(text_col)).alias("toks"),
     )
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)), F.lit(stride)
@@ -1444,7 +1366,8 @@ def dedup_index(
     parameters (mismatched band keys or shingle sizes would silently
     produce zero candidates and admit every near-duplicate)."""
     kw = dict(n_hashes=n_hashes, band_rows=band_rows, shingle_size=shingle_size)
-    sh, bands = _shingle_bands(corpus, text_col, id_col, **kw)
+    sh = _shingles(corpus, text_col, id_col, shingle_size)
+    bands = _band_keys_df(sh, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
     return {
         "hashes": corpus.select(F.md5(F.col(text_col)).alias("_h")).distinct(),
         "bands": bands,
@@ -1472,8 +1395,8 @@ def incremental_dedup(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Judge each BATCH row against an existing CORPUS without any
-    corpus-vs-corpus work (operators.dedup.d10 generalized to two
-    arbitrary DataFrames). Returns the batch with three extra columns:
+    corpus-vs-corpus work; d10 is this function over two slices of the
+    documents fixture. Returns the batch with three extra columns:
 
     - ``exact_dup``   — md5(text) collides with a corpus row;
     - ``near_dup_of`` — smallest corpus id with verified shingle
@@ -1507,7 +1430,8 @@ def incremental_dedup(
         .select("_eid")
         .withColumn("_exact", F.lit(True))
     )
-    sh_b, bands_b = _shingle_bands(batch, text_col, id_col, **kw)
+    sh_b = _shingles(batch, text_col, id_col, shingle_size)
+    bands_b = _band_keys_df(sh_b, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
     cand = (
         bands_b.select(F.col("_id").alias("_bid"), "_band", "_key")
         .join(index["bands"].select(F.col("_id").alias("_cid"), "_band", "_key"),
@@ -1619,12 +1543,7 @@ def bm25_score(
     and broadcast, so the text column never leaves the scan."""
     tok = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_w"),
+        F.explode(tokens(F.col(text_col))).alias("_w"),
     )
     doclen = tok.groupBy("_id").agg(F.count(F.lit(1)).alias("_dl"))
     stats = doclen.agg(
@@ -1674,12 +1593,7 @@ def perplexity_gate(
     Returns (id, n_tok, sum_nll_micro, ppl_bucket, mean_nll)."""
     tok = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("_w"),
+        F.explode(tokens(F.col(text_col))).alias("_w"),
     )
     vocab = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_cnt"))
     tot = vocab.agg(F.sum("_cnt").alias("_t"), F.count(F.lit(1)).alias("_v"))

@@ -68,6 +68,31 @@ def bigrams(ts: Column, sep: str = "_") -> Column:
     )
 
 
-def stopword_count(col: Column) -> Column:
+def shingles(ts: Column, n: int, sep: str = "_") -> Column:
+    """Distinct word ``n``-gram shingles of a token ARRAY, ``sep``-joined;
+    ``[]`` for arrays shorter than ``n``. The one shingle construction
+    shared by the MinHash/Jaccard dedup family (d02/d03/d06/d07/d10) and
+    the ``api`` dedup and decontamination functions. Pass a column
+    REFERENCE (a projected token array), not the tokenizer expression:
+    ``ts`` is read ``n + 2`` times per row.
+
+    Equivalent DuckDB expression (n=3):
+      list_distinct(list_transform(range(1, len(ts) - 1),
+                    i -> ts[i] || '_' || ts[i + 1] || '_' || ts[i + 2]))
+    """
+
+    def gram(i: Column) -> Column:
+        return F.concat_ws(
+            sep, *[F.element_at(ts, i + k if k else i) for k in range(n)]
+        )
+
+    return F.when(
+        F.size(ts) >= n,
+        F.array_distinct(F.transform(F.sequence(F.lit(1), F.size(ts) - (n - 1)), gram)),
+    ).otherwise(F.array())
+
+
+def stopword_count(ts: Column) -> Column:
+    """Number of STOPWORDS entries in a token ARRAY."""
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(stop, t)))
+    return F.size(F.filter(ts, lambda t: F.array_contains(stop, t)))

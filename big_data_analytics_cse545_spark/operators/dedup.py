@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark.cache import swap_cached
-from big_data_analytics_cse545_spark.functions.text import TOKEN_SPLIT_RE, tokens
+from big_data_analytics_cse545_spark.functions.text import shingles, tokens
 from big_data_analytics_cse545_spark.sources import load_table, spread_scan
 
 _SQL_TOKENS = (
@@ -34,18 +34,14 @@ N_HASHES = 32
 # is reproducible as exact integer arithmetic in DuckDB (see
 # _band_keys_df).
 MINHASH_P = 2147483647
+# Hash-family tag persisted in api.dedup_index params (and save/load
+# round-trips): band keys from different families never collide, so a
+# mismatch must be a loud error, not an empty candidate join.
+MINHASH_SCHEME = "km2-md5"
 BAND_ROWS = 4
-N_BANDS = N_HASHES // BAND_ROWS
 JACCARD_THRESHOLD = 0.8
 JACCARD_THRESHOLD_D10 = 0.7  # batch-vs-corpus near-dup verify (d10), same
                              # bar as d03's pair output threshold
-
-
-def _tokens_col():
-    # the one shared tokenizer (functions.text.tokens) — a verbatim
-    # local copy used to live here, a silent-divergence surface for any
-    # future tokenization change (round-6 review)
-    return tokens(F.col("text"))
 
 
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,15 +52,9 @@ def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise runs as ONE scan-stage task; at scale the spread is a
     no-op (round-12 optimization, guide §2.5/§6)."""
     d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    shingles = F.expr(
-        "CASE WHEN size(ts) >= 3 THEN array_distinct(transform("
-        "sequence(1, size(ts) - 2), "
-        "i -> concat_ws('_', element_at(ts, i), element_at(ts, i + 1), element_at(ts, i + 2))"
-        ")) ELSE array() END"
-    )
     return (
-        d.select("doc_id", _tokens_col().alias("ts"))
-        .select("doc_id", F.explode(shingles).alias("shingle"))
+        d.select("doc_id", tokens(F.col("text")).alias("ts"))
+        .select("doc_id", F.explode(shingles(F.col("ts"), 3)).alias("shingle"))
     )
 
 
@@ -88,7 +78,7 @@ def d01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is one shuffle on a 16-byte key, never on the text itself.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens_col()
+    toks = tokens(F.col("text"))
     return (
         d.select(
             "source",
@@ -193,15 +183,25 @@ ORDER BY d1, d2
 # d03 — MinHash + LSH banding (the scale path)
 # ---------------------------------------------------------------------------
 
-def _band_keys_df(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) — MinHash(N_HASHES) banded into N_BANDS
-    keys per document. One aggregation pass computes all minhashes as
-    separate agg columns — a single shuffle keyed by doc_id instead of a
-    N_HASHES× shingle-row explode (the naive seeds-cross-join shuffles
+def _band_keys_df(
+    sh: DataFrame,
+    id_col: str,
+    shingle_col: str,
+    *,
+    n_hashes: int,
+    band_rows: int,
+) -> DataFrame:
+    """(id_col, _band, _key) — MinHash(n_hashes) banded into
+    n_hashes // band_rows keys per row of an (id_col, shingle_col)
+    shingle relation. The one Spark copy of the band-key expression:
+    ``api.minhash_dedup_pairs``, ``api.dedup_index`` and
+    ``api.incremental_dedup`` (and through them d03 and d10) call it.
+    One aggregation pass computes all minhashes as separate agg columns
+    — a single shuffle keyed by id_col instead of an n_hashes×
+    shingle-row explode (the naive seeds-cross-join shuffles
     N_HASHES× the shingle table; at 100 TB that explode is the
     bottleneck). Band key = md5 of the band's minhashes, seed-ordered
-    (matches the oracle's string_agg ORDER BY seed). Shared by d03
-    (self-dedup) and d10 (incremental batch-vs-corpus dedup).
+    (matches the oracle's string_agg ORDER BY seed).
 
     Hash family (round 7): Kirsch–Mitzenmacher double hashing — per
     shingle TWO md5-derived 60-bit values reduced mod MINHASH_P, then
@@ -224,38 +224,39 @@ def _band_keys_df(sh: DataFrame) -> DataFrame:
     matches independent hashing up to O(1/P) terms."""
     h1 = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit("a|"), F.col("shingle"))), 1, 15),
+            F.substring(F.md5(F.concat(F.lit("a|"), F.col(shingle_col))), 1, 15),
             16, 10,
         ).cast("long") % MINHASH_P
     )
     h2 = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit("b|"), F.col("shingle"))), 1, 15),
+            F.substring(F.md5(F.concat(F.lit("b|"), F.col(shingle_col))), 1, 15),
             16, 10,
         ).cast("long") % MINHASH_P
     )
     minh = (
-        sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-        .groupBy("doc_id")
+        sh.select(id_col, h1.alias("_h1"), h2.alias("_h2"))
+        .groupBy(id_col)
         .agg(
             *[
-                F.min((F.col("h1") + s * F.col("h2")) % MINHASH_P).alias(f"mh{s}")
-                for s in range(N_HASHES)
+                F.min((F.col("_h1") + s * F.col("_h2")) % MINHASH_P).alias(f"_mh{s}")
+                for s in range(n_hashes)
             ]
         )
     )
+    n_bands = n_hashes // band_rows
     band_cols = [
         F.md5(
             F.concat_ws(
-                "|", *[F.col(f"mh{s}") for s in range(b * BAND_ROWS, (b + 1) * BAND_ROWS)]
+                "|", *[F.col(f"_mh{s}") for s in range(b * band_rows, (b + 1) * band_rows)]
             )
-        ).alias(f"bk{b}")
-        for b in range(N_BANDS)
+        ).alias(f"_bk{b}")
+        for b in range(n_bands)
     ]
-    return minh.select("doc_id", *band_cols).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(N_BANDS)])).alias(
-            "band", "band_key"
+    return minh.select(id_col, *band_cols).select(
+        id_col,
+        F.posexplode(F.array(*[F.col(f"_bk{b}") for b in range(n_bands)])).alias(
+            "_band", "_key"
         ),
     )
 
@@ -295,44 +296,18 @@ def d03_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join for candidates (≙ ``computeSimilarCandidates``,
     ``a2_ahuja.py:164-170``), exact Jaccard only on candidates. Cost at
     scale: shuffles on 16-byte band keys; the all-pairs join never runs.
+
+    A binding of :func:`api.minhash_dedup_pairs` over the spread
+    documents scan, so the oracle checks the function users call.
     """
-    # NOT cached (round-12 A/B): persisting sh for its 4 references
-    # measured a wash for d03 (3.89→3.47s min, median worse) and a
-    # regression for d10 (2.45→2.95s) — the eager materialization
-    # barrier costs more than the re-tokenizes it saves, here and at
-    # scale the pipelined recompute also avoids a corpus-sized cache.
-    sh = _shingles_df(spark, sf_dir)
-    bands = _band_keys_df(sh)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    # exact verification on candidates only
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.select(F.col("doc_id").alias("d1"), F.col("shingle").alias("s1"))
-    b_sh = sh.select(F.col("doc_id").alias("bd2"), F.col("shingle").alias("s2"))
-    inter = (
-        cand.join(a_sh, "d1")
-        .join(b_sh, (F.col("d2") == F.col("bd2")) & (F.col("s1") == F.col("s2")))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    c1 = cnt.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    c2 = cnt.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
+    from big_data_analytics_cse545_spark import api
+
+    d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
-        inter.join(c1, "d1")
-        .join(c2, "d2")
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.7)
+        api.minhash_dedup_pairs(
+            d, "text", "doc_id", n_hashes=N_HASHES, band_rows=BAND_ROWS, threshold=0.7
+        )
+        .select(F.col("id1").alias("d1"), F.col("id2").alias("d2"), "jaccard")
         .orderBy("d1", "d2")
     )
 
@@ -478,7 +453,7 @@ def simhash_near_dup_pairs(
     # restores the pushdown (PushedFilters gate in PLANS.md), with the
     # join making it a no-op on values by construction.
     toks = spread_scan(d.filter(F.col("doc_id").isNotNull()), "doc_id").select(
-        "doc_id", F.explode(_tokens_col()).alias("tok")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     # ONE md5 per token, parsed into four 16-bit integer quarters with
     # conv(); each of the 64 vote sums is then an integer shift+mask on
@@ -1211,65 +1186,21 @@ D10_BATCH_REM = 1   # newly-ingested batch; the rest are the existing corpus
 
 
 def d10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    is_batch = d["doc_id"] % D10_BATCH_MOD == D10_BATCH_REM
-    batch = d.filter(is_batch)
-    # exact path: 16-byte content-hash semi-join (never the text itself)
-    corpus_hashes = (
-        d.filter(~is_batch).select(F.md5("text").alias("h")).distinct()
-    )
-    exact = (
-        batch.select("doc_id", F.md5("text").alias("h"))
-        .join(corpus_hashes, "h", "left_semi")
-        .select("doc_id")
-    )
-    # near path: band-bucket candidates restricted to batch×corpus.
-    # sh NOT cached — measured regression (2.45→2.95s min; see d03).
-    sh = _shingles_df(spark, sf_dir)
-    bands = _band_keys_df(sh)
-    band_is_batch = F.col("doc_id") % D10_BATCH_MOD == D10_BATCH_REM
-    bb = bands.filter(band_is_batch).select(
-        F.col("doc_id").alias("bid"), "band", "band_key"
-    )
-    cb = bands.filter(~band_is_batch).select(
-        F.col("doc_id").alias("cid"), "band", "band_key"
-    )
-    cand = bb.join(cb, ["band", "band_key"]).select("bid", "cid").distinct()
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    s1 = sh.select(F.col("doc_id").alias("bid"), F.col("shingle").alias("s1"))
-    s2 = sh.select(F.col("doc_id").alias("scid"), F.col("shingle").alias("s2"))
-    inter = (
-        cand.join(s1, "bid")
-        .join(s2, (F.col("cid") == F.col("scid")) & (F.col("s1") == F.col("s2")))
-        .groupBy("bid", "cid")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    c1 = cnt.select(F.col("doc_id").alias("bid"), F.col("n").alias("n1"))
-    c2 = cnt.select(F.col("doc_id").alias("cid"), F.col("n").alias("n2"))
-    jac = F.round(
-        F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter")), 6
-    )
-    near = (
-        inter.join(c1, "bid")
-        .join(c2, "cid")
-        .filter(jac >= JACCARD_THRESHOLD_D10)
-        .groupBy("bid")
-        .agg(F.min("cid").alias("near_dup_of"))
-    )
-    e = exact.withColumn("is_exact", F.lit(True))
+    from big_data_analytics_cse545_spark import api
+
+    d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    is_batch = F.col("doc_id") % D10_BATCH_MOD == D10_BATCH_REM
     return (
-        batch.select("doc_id")
-        .join(e, "doc_id", "left")
-        .join(near, batch["doc_id"] == near["bid"], "left")
-        .select(
+        api.incremental_dedup(
+            d.filter(is_batch),
+            d.filter(~is_batch),
+            "text",
             "doc_id",
-            F.coalesce("is_exact", F.lit(False)).alias("exact_dup"),
-            "near_dup_of",
-            F.when(F.coalesce("is_exact", F.lit(False)), "drop_exact")
-            .when(F.col("near_dup_of").isNotNull(), "drop_near")
-            .otherwise("keep")
-            .alias("decision"),
+            n_hashes=N_HASHES,
+            band_rows=BAND_ROWS,
+            threshold=JACCARD_THRESHOLD_D10,
         )
+        .select("doc_id", "exact_dup", "near_dup_of", "decision")
         .orderBy("doc_id")
     )
 
@@ -1296,6 +1227,10 @@ d10_incremental_dedup.__doc__ = """Incremental ingestion dedup: for
     corpus text never shuffles — only its hashes and band keys do.
     Exact-verify shingle traffic is limited to candidate pairs, exactly
     the d03 discipline (reference funnel: ``a2_ahuja.py:140-170``).
+
+    A binding of :func:`api.incremental_dedup` (batch and corpus are
+    two filters of one spread documents scan), so the oracle checks the
+    function users call.
     """.format(M=D10_BATCH_MOD, R=D10_BATCH_REM, J=JACCARD_THRESHOLD_D10)
 
 

@@ -212,7 +212,7 @@ def t05_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     # try_divide: a zero-token doc has an undefined ratio -> NULL -> the
     # 'other' branch on both engines (DuckDB x/0 is NULL; ANSI Spark /
     # would THROW on the whole job for one empty page)
-    ratio = F.try_divide(stopword_count(F.col("text")), token_count(F.col("text")))
+    ratio = F.try_divide(stopword_count(tokens(F.col("text"))), token_count(F.col("text")))
     guess = F.when(ratio >= 0.05, F.lit("en_like")).otherwise(F.lit("other"))
     return (
         d.select("lang", guess.alias("guess"))
@@ -246,30 +246,15 @@ def t06_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Length / mean-token-length / stopword-ratio features (the classic
     pre-training quality filters) as pure expressions; the final
     histogram keeps the output small and hash-stable at any scale.
+    A binding of :func:`api.quality_score`: documents without tokens
+    score NULL and land in the NULL bucket.
     """
+    from big_data_analytics_cse545_spark import api
+
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tok = F.size(toks)
-    # try_divide: empty docs get NULL metrics -> NULL bucket, exactly
-    # DuckDB's x/0 semantics (ANSI Spark / would throw on one empty page)
-    mean_len = F.try_divide(
-        F.aggregate(
-            F.transform(toks, lambda t: F.length(t)),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ),
-        n_tok,
-    )
-    stop_ratio = F.try_divide(stopword_count(F.col("text")), n_tok)
-    # quality in [0,1]: long-enough docs with natural stopword share win
-    quality = (
-        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.5
-        + F.least(stop_ratio / F.lit(0.1), F.lit(1.0)) * 0.3
-        + F.least(mean_len / F.lit(6.0), F.lit(1.0)) * 0.2
-    )
-    bucket = F.floor(quality * 10).cast("int")
     return (
-        d.select(bucket.alias("q_bucket"))
+        api.quality_score(d, "text")
+        .select(F.floor(F.col("quality") * 10).cast("int").alias("q_bucket"))
         .groupBy("q_bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("q_bucket")
@@ -285,10 +270,10 @@ m AS (
     len(list_filter(ts, t -> t IN {STOPWORDS!r})) / CAST(len(ts) AS DOUBLE) AS stop_ratio
   FROM toks
 )
-SELECT CAST(FLOOR((
+SELECT CAST(FLOOR(CASE WHEN n_tok > 0 THEN (
          LEAST(n_tok / 100.0, 1.0) * 0.5
        + LEAST(stop_ratio / 0.1, 1.0) * 0.3
-       + LEAST(mean_len / 6.0, 1.0) * 0.2) * 10) AS INT) AS q_bucket,
+       + LEAST(mean_len / 6.0, 1.0) * 0.2) END * 10) AS INT) AS q_bucket,
        COUNT(*) AS n_docs
 FROM m GROUP BY 1 ORDER BY q_bucket
 """
@@ -651,25 +636,21 @@ def t12_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     packs independently in its own partition, no cross-stream shuffle.
     At 100 TB pick a finer stream key ((source, day)) so no single
     window partition is unbounded; packing quality is unchanged because
-    packs never span stream keys anyway.
+    packs never span stream keys anyway. A binding of
+    :func:`api.pack_sequences`.
     """
-    from pyspark.sql.window import Window
+    from big_data_analytics_cse545_spark import api
 
     d = load_table(spark, sf_dir, "documents")
     per = d.select(
-        "source", "doc_id", F.size(tokens(F.col("text"))).cast("long").alias("n_tok")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    packed = per.withColumn("cum", F.sum("n_tok").over(w)).withColumn(
-        "pack_id",
-        F.floor((F.col("cum") - F.col("n_tok")) / PACK_LEN).cast("long"),
+        "source",
+        "doc_id",
+        "text",
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tok"),
     )
     return (
-        packed.groupBy("source", "pack_id")
+        api.pack_sequences(per, "text", "doc_id", "source", max_len=PACK_LEN)
+        .groupBy("source", "pack_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").alias("n_tokens"),
@@ -715,46 +696,23 @@ def t13_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 - distinct/total) and top-bigram fraction (most frequent bigram's
     share of all bigrams), plus the combined repetitive flag.
 
-    Shape at scale: token/distinct counts are per-row array expressions
-    inside codegen (no shuffle); the top-bigram count is one
-    explode → (doc_id, bigram) partial+final count → per-doc max —
-    exactly WordCount's shape keyed by doc, so it shards like t01. The
-    doc_id join back to the per-row signals is on the natural key and
-    AQE-broadcastable when the filtered side is small.
+    A binding of :func:`api.repetition_signals` (per-row array
+    expressions, no shuffle) plus the token count and the flag.
     """
+    from big_data_analytics_cse545_spark import api
+
     d = load_table(spark, sf_dir, "documents")
-    base = (
-        d.select("doc_id", tokens(F.col("text")).alias("ts"))
-        .withColumn("n_tok", F.size("ts").cast("long"))
-        .withColumn("n_distinct", F.size(F.array_distinct("ts")).cast("long"))
-        .withColumn("bigrams", bigrams(F.col("ts"), " "))
-    )
-    top = (
-        base.select("doc_id", F.explode("bigrams").alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(F.max("c").alias("top_n"))
-    )
-    # try_divide: double / yields NaN for 0/0 where DuckDB yields NULL —
-    # try_divide is NULL on a zero divisor for floats too, matching
-    dup_frac = F.lit(1.0) - F.try_divide(
-        F.col("n_distinct").cast("double"), F.col("n_tok").cast("double")
-    )
-    top_frac = F.coalesce(
-        F.col("top_n").cast("double") / (F.col("n_tok") - F.lit(1)).cast("double"),
-        F.lit(0.0),
-    )
+    dup_frac, top_frac = F.col("dup_token_frac"), F.col("top_bigram_frac")
     return (
-        base.join(top, "doc_id", "left")
+        api.repetition_signals(d, "text")
         .select(
             "doc_id",
-            "n_tok",
-            dup_frac.alias("dup_token_frac"),
-            top_frac.alias("top_bigram_frac"),
-            (
-                (dup_frac > DUP_TOKEN_MAX) | (top_frac > TOP_BIGRAM_MAX)
-            ).alias("repetitive"),
+            F.size(tokens(F.col("text"))).cast("long").alias("n_tok"),
+            dup_frac,
+            top_frac,
+            ((dup_frac > DUP_TOKEN_MAX) | (top_frac > TOP_BIGRAM_MAX)).alias(
+                "repetitive"
+            ),
         )
         .orderBy("doc_id")
     )

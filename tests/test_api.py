@@ -3,6 +3,9 @@ arbitrary (df, column) inputs — cross-checked against the operators."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark import api
@@ -1422,3 +1425,89 @@ def test_shared_spans_api_and_min_span_guard(spark):
     }
     assert stripped[2] == "kappa red green blue yellow purple".split()
     assert len(stripped[1]) == 17
+
+
+def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
+    """Empty, NULL and punctuation-only text reach the public functions
+    in production but in no fixture. Each function must run on them,
+    and a row without tokens gets the SQL (DuckDB-oracle) value: a NULL
+    ratio, never a DIVIDE_BY_ZERO or a made-up score."""
+    df = spark.createDataFrame(
+        [(1, "the cat and the dog"), (2, ""), (3, None), (4, "!!! ...")],
+        "doc_id bigint, text string",
+    ).withColumn("source", F.lit("web"))
+    no_tokens = {2, 3, 4}
+
+    q = {r["doc_id"]: r["quality"] for r in api.quality_score(df, "text").collect()}
+    # 5 tokens (0.05 of the length cap), stopword share 3/5, mean length 3
+    assert q[1] == pytest.approx(0.05 * 0.5 + 1.0 * 0.3 + 0.5 * 0.2)
+    assert all(q[i] is None for i in no_tokens)
+
+    rep = {r["doc_id"]: r for r in api.repetition_signals(df, "text").collect()}
+    assert rep[1]["dup_token_frac"] == pytest.approx(1 - 4 / 5)
+    assert rep[1]["top_bigram_frac"] == pytest.approx(1 / 4)
+    assert all(rep[i]["dup_token_frac"] is None for i in no_tokens)
+    assert all(rep[i]["top_bigram_frac"] == 0.0 for i in no_tokens)
+
+    packs = {
+        r["doc_id"]: r["pack_id"]
+        for r in api.pack_sequences(df, "text", "doc_id", "source", max_len=4).collect()
+    }
+    # NULL text has no token count, so its pack is NULL (t12's oracle)
+    assert packs == {1: 0, 2: 1, 3: None, 4: 1}
+
+    assert api.minhash_dedup_pairs(df, "text", "doc_id").collect() == []
+
+    corpus = spark.createDataFrame(
+        [(10, "the cat and the dog"), (11, "")], "doc_id bigint, text string"
+    )
+    inc = {
+        r["doc_id"]: (r["exact_dup"], r["near_dup_of"], r["decision"])
+        for r in api.incremental_dedup(df, corpus, "text", "doc_id").collect()
+    }
+    assert inc == {
+        1: (True, 10, "drop_exact"),
+        2: (True, None, "drop_exact"),  # md5('') matches the empty corpus doc
+        3: (False, None, "keep"),
+        4: (False, None, "keep"),
+    }
+
+    bench = spark.createDataFrame([(100, "the cat and the dog")], "doc_id bigint, text string")
+    kept = api.decontaminate(df, bench, "text", "doc_id").collect()
+    assert sorted(r["doc_id"] for r in kept) == [2, 3, 4]
+
+
+@pytest.mark.parametrize(
+    "module, query, function",
+    [
+        (text_ops, "t06_quality_score", "quality_score"),
+        (text_ops, "t12_pack_sequences", "pack_sequences"),
+        (text_ops, "t13_repetition_filter", "repetition_signals"),
+        (dedup, "d03_minhash_lsh_dedup", "minhash_dedup_pairs"),
+        (dedup, "d10_incremental_dedup", "incremental_dedup"),
+    ],
+)
+def test_registry_query_is_a_binding_of_the_api_function(
+    spark, sf_smoke, monkeypatch, module, query, function
+):
+    """Each of these registry queries must build through its public api
+    function, so its DuckDB oracle checks the code users call. A second
+    copy of the logic inside the operator module fails this test."""
+    real = getattr(api, function)
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(api, function, spy)
+    module.QUERIES[query](spark, sf_smoke)
+    assert calls, f"{query} did not call api.{function}"
+
+
+def test_tokenizer_expression_has_one_copy():
+    """The tokenizer lives in functions.text.tokens only; an inlined
+    copy in api.py or operators/ is where the copies drifted apart."""
+    pkg = Path(api.__file__).parent
+    for path in [pkg / "api.py", *sorted((pkg / "operators").glob("*.py"))]:
+        assert "F.split(F.lower(" not in path.read_text(), path

@@ -97,10 +97,11 @@ def test_simhash64_pigeonhole_recall(spark, sf_correctness):
     without banding — must appear in d04's banded output."""
     from pyspark.sql import functions as F
 
+    from big_data_analytics_cse545_spark.functions.text import tokens
     from big_data_analytics_cse545_spark.sources import load_table
 
     d = load_table(spark, sf_correctness, "documents")
-    toks = d.select("doc_id", F.explode(dedup._tokens_col()).alias("tok"))
+    toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     bit_exprs = dedup._simhash_bit_exprs(dedup.SIMHASH_BITS, "locate")
     votes = toks.groupBy("doc_id").agg(
         *[F.sum(F.expr(f"2 * ({e}) - 1")).alias(f"v{j}") for j, e in enumerate(bit_exprs)]

@@ -340,8 +340,8 @@ def _breaches(walls):
     the quiet-calibration medians read 0.55-0.9, so quiet-box behavior
     (and every mutation-check reading in this file's analyses) is
     unchanged. A regression hitting MANY queries at once would read as
-    storm and pass here — that class is global, and the bench control
-    (tools/bench_control.py) is its gate."""
+    storm and pass here — that class is global, and perfbench/ (the
+    repository benchmark, perfbench/README.md) is its gate."""
     import statistics
 
     # judge only the floors PRESENT in this probe: recorded probes
@@ -393,7 +393,7 @@ def test_hot_queries_stay_within_factor_of_recorded_floor(spark):
             f"exceeded their per-query trip factor over the recorded "
             f"floors {FLOORS} in BOTH of two independent storm-normalized "
             "probes — an expression/plan regression is reaching the "
-            "bench; A/B it with tools/bench_control.py before shipping "
+            "bench; A/B it with perfbench/run.py before shipping "
             "(per-probe walls + loadavg: "
             "/tmp/spark_graft_tripwire_probes.jsonl)"
         )

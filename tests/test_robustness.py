@@ -61,21 +61,30 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
     NULL-user purchase never as-of-matches a NULL-user click (window
     partitionBy groups NULLs, joins do not — q18); an all-NULL-n_chars
     host sums junk_docs to 0, not NULL (t23); a NULL p_brand flows
-    through q13's try_cast as NULL instead of killing the scan."""
+    through q13's try_cast as NULL instead of killing the scan.
+
+    The twin corpus also holds documents without tokens (NULL text on
+    one doc_id residue, '' on another; no fixture has one): the text
+    and MinHash-dedup queries bound to the public api (t06, t12, t13,
+    d03, d10) and d07 must match their oracles on them."""
     import os
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from big_data_analytics_cse545_spark.operators import relational, text
+    from big_data_analytics_cse545_spark.operators import dedup, relational, text
     from big_data_analytics_cse545_spark.streaming import ops as st
     from tests.oracle_utils import assert_parity
 
+    # table -> (key, [(column, mod, rem, planted value)])
     plan = {
-        "events.parquet": ("event_id", [("user_id", 3, 1)]),
-        "documents.parquet": ("doc_id", [("n_chars", 3, 2)]),
-        "part.parquet": ("p_partkey", [("p_brand", 3, 0)]),
+        "events.parquet": ("event_id", [("user_id", 3, 1, None)]),
+        "documents.parquet": (
+            "doc_id",
+            [("n_chars", 3, 2, None), ("text", 11, 3, None), ("text", 11, 7, "")],
+        ),
+        "part.parquet": ("p_partkey", [("p_brand", 3, 0, None)]),
     }
     d = str(tmp_path / "null_keys_sf")
     os.makedirs(d)
@@ -85,7 +94,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
             continue
         t = pq.read_table(os.path.join(sf_correctness, f))
         key, cols = plan.get(f, (None, []))
-        for col, mod, rem in cols:
+        for col, mod, rem, value in cols:
             keys = t.column(key).to_numpy()
             mask = pa.array((keys % mod) == rem)
             idx = t.schema.get_field_index(col)
@@ -94,25 +103,26 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
                 col,
                 pc.if_else(
                     mask,
-                    pa.scalar(None, t.schema.field(col).type),
+                    pa.scalar(value, t.schema.field(col).type),
                     t.column(col).combine_chunks(),
                 ),
             )
-            planted += t.column(col).null_count
+            planted += int(pc.sum(mask).as_py())
         pq.write_table(t, os.path.join(d, f))
     assert planted > 0, "fixture must actually plant nulls"
-    for name, fn in (
-        ("q29", relational.q29_skew_safe_distinct),
-        ("q18", relational.q18_asof_join),
-        ("q13", relational.q13_string_funcs),
-        ("t23", text.t23_host_reputation),
-        ("st04", st.st04_streaming_dedup),
-        ("st10", st.st10_sliding_distinct_users),
+    for name, mod in (
+        ("q29", relational),
+        ("q18", relational),
+        ("q13", relational),
+        ("t23", text),
+        ("st04", st),
+        ("st10", st),
+        ("t06", text),
+        ("t12", text),
+        ("t13", text),
+        ("d03", dedup),
+        ("d07", dedup),
+        ("d10", dedup),
     ):
-        mod = text if name.startswith("t2") else (
-            st if name.startswith("st") else relational
-        )
-        oracle = next(
-            sql for qname, sql in mod.ORACLE.items() if qname.startswith(name)
-        )
-        assert_parity(fn(spark, d), oracle, d, name)
+        qname = next(q for q in mod.ORACLE if q.startswith(name + "_"))
+        assert_parity(mod.QUERIES[qname](spark, d), mod.ORACLE[qname], d, name)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark import api
-from big_data_analytics_cse545_spark.operators import sampling, text
+from big_data_analytics_cse545_spark.operators import sampling
 from tests.oracle_utils import assert_parity
 
 
@@ -77,25 +77,6 @@ def test_api_temperature_mix_matches_x02_counts(spark, sf_correctness):
         for r in sampling.x02_temperature_mix(spark, sf_correctness).collect()
     }
     assert {r["source"]: r["n"] for r in kept} == expected
-
-
-def test_api_repetition_signals_match_t13(spark, sf_correctness):
-    """The shuffle-free array-expression form (api) and the
-    explode+groupBy form (t13) must produce identical fractions."""
-    from big_data_analytics_cse545_spark.sources import load_table
-
-    d = load_table(spark, sf_correctness, "documents")
-    via_api = {
-        r["doc_id"]: (r["dup_token_frac"], r["top_bigram_frac"])
-        for r in api.repetition_signals(d, "text")
-        .select("doc_id", "dup_token_frac", "top_bigram_frac")
-        .collect()
-    }
-    via_op = {
-        r["doc_id"]: (r["dup_token_frac"], r["top_bigram_frac"])
-        for r in text.t13_repetition_filter(spark, sf_correctness).collect()
-    }
-    assert via_api == via_op
 
 
 def test_repetition_signals_planted(spark):

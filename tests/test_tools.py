@@ -10,227 +10,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def test_bench_control_summary_math():
-    from tools.bench_control import summarize
-
-    head = {"q01": 2.0, "q02": 1.0, "q03": 4.5, "only_head": 1.0, "q04": -1.0}
-    prev = {"q01": 1.0, "q02": 1.0, "q03": 3.0, "only_prev": 2.0, "q04": 1.0}
-    s = summarize(head, prev)
-    assert s["common_queries"] == 3
-    assert s["failed_queries"] == ["q04"]  # a crash is reported, not dropped
-    assert s["head_total_common"] == 7.5
-    assert s["prev_total_common"] == 5.0
-    assert s["median_ratio"] == 1.5
-    assert s["worst_query"] == ("q01", 2.0)
-    assert s["ratios_over_1p5"] == {"q01": 2.0, "q03": 1.5}
-
-
-def test_bench_control_summary_empty_inputs():
-    from tools.bench_control import summarize
-
-    s = summarize({}, {})
-    assert s["common_queries"] == 0
-    assert s["median_ratio"] is None and s["worst_query"] is None
-
-
-def test_bench_control_check_flags_stale_and_dirty_controls(tmp_path, monkeypatch):
-    """--check must fail a control recorded before the current last
-    source-touching commit (the round-6 failure mode: a control 7
-    commits early let a 3.3x regression pass as noise), a control
-    recorded on a dirty source tree, and a pre-anchoring control with
-    no commit recorded at all; it passes only an anchored, clean one."""
-    import json
-
-    import tools.bench_control as bc
-
-    now = {"last_source_commit": "a" * 40, "source_dirty": False}
-    monkeypatch.setattr(bc, "source_state", lambda: now)
-
-    def record(payload):
-        p = tmp_path / "ctl.json"
-        p.write_text(json.dumps(payload))
-        return str(p)
-
-    ok = {"queries": {}, "last_source_commit": "a" * 40, "source_dirty": False}
-    assert bc.check_control(record(ok)) == 0
-    stale = dict(ok, last_source_commit="b" * 40)
-    assert bc.check_control(record(stale)) == 1
-    dirty = dict(ok, source_dirty=True)
-    assert bc.check_control(record(dirty)) == 1
-    unanchored = {"queries": {}}
-    assert bc.check_control(record(unanchored)) == 1
-    now_dirty = {"last_source_commit": "a" * 40, "source_dirty": True}
-    monkeypatch.setattr(bc, "source_state", lambda: now_dirty)
-    assert bc.check_control(record(ok)) == 1, "a dirty tree NOW must also fail"
-
-
-def test_bench_control_vs_prior_bench_reads_driver_shape(monkeypatch):
-    """The driver's BENCH_r{N}.json nests bench.py's payload under
-    'parsed' and keys queries by SHORT code; the cross-round tripwire
-    must read that shape (the first cut looked for a top-level
-    'queries' and silently compared nothing)."""
-    import tools.bench_control as bc
-
-    monkeypatch.setattr(
-        bc, "prior_bench",
-        lambda exclude_round=None: (
-            "BENCH_r06.json", 6, {"q01": 1.0, "t13": 5.0, "q99": -1.0}
-        ),
-    )
-    monkeypatch.setattr(bc, "prior_final_min", lambda n: None)
-    out = bc.vs_prior_bench(
-        {"q01_pricing_summary": 2.5, "t13_repetition_filter": 5.0,
-         "q98_unknown": 1.0}
-    )
-    assert out["prior_bench"] == "BENCH_r06.json"
-    assert out["basis"] == "single_run_vs_single_run"
-    assert out["over_2x"] == {"q01": 2.5}
-    assert out["median_ratio"] == 1.75
-
-
-def test_bench_control_vs_prior_uses_collision_safe_short_codes(monkeypatch):
-    """vs_prior_bench must map full names to short codes via bench.py's
-    exact '#N'-suffixing, not a dict comprehension that silently keeps
-    only the LAST colliding name (r7 ADVICE — a colliding future query
-    would drop rows from the cross-round tripwire unnoticed)."""
-    import tools.bench_control as bc
-
-    monkeypatch.setattr(
-        bc, "prior_bench",
-        lambda exclude_round=None: (
-            "BENCH_r07.json", 7, {"q01#1": 1.0, "q01#2": 1.0}
-        ),
-    )
-    monkeypatch.setattr(bc, "prior_final_min", lambda n: None)
-    out = bc.vs_prior_bench({"q01_alpha": 2.5, "q01_beta": 1.0})
-    # both colliding entries must survive into the ratio set
-    assert out["over_2x"] == {"q01#1": 2.5}
-    assert out["median_ratio"] == 1.75
-
-
-def test_bench_control_vs_prior_prefers_min_artifact(monkeypatch):
-    """When the prior round recorded a min-across-finals artifact, the
-    cross-round tripwire must compare against IT (full query names, no
-    short codes) and say so in 'basis' — min-based denominators are the
-    scheduling-noise-free estimate that ends q15/m04-style single-run
-    adjudication (VERDICT r8 task #7)."""
-    import tools.bench_control as bc
-
-    monkeypatch.setattr(
-        bc, "prior_bench",
-        lambda exclude_round=None: (
-            "BENCH_r08.json", 8, {"q01": 99.0}  # must be ignored
-        ),
-    )
-    monkeypatch.setattr(
-        bc, "prior_final_min",
-        lambda n: (
-            "r8_final_min.json",
-            {"q01_pricing_summary": 1.0, "t13_repetition_filter": 2.0},
-        ),
-    )
-    out = bc.vs_prior_bench(
-        {"q01_pricing_summary": 2.5, "t13_repetition_filter": 2.0},
-        head_kind="min",
-    )
-    assert out["prior_bench"] == "r8_final_min.json"
-    assert out["basis"] == "min_vs_min"
-    assert out["over_2x"] == {"q01_pricing_summary": 2.5}
-    assert out["median_ratio"] == 1.75
-
-
-def test_bench_control_single_run_head_never_divides_by_min(monkeypatch):
-    """A SINGLE-RUN numerator must compare against the prior round's
-    single-run BENCH, never its min artifact (round-9 review): one
-    noisy run divided by a 5-run minimum systematically inflates every
-    ratio and manufactures the q15-class false trips the min artifact
-    exists to kill. prior_final_min must not even be consulted."""
-    import tools.bench_control as bc
-
-    monkeypatch.setattr(
-        bc, "prior_bench",
-        lambda exclude_round=None: ("BENCH_r08.json", 8, {"q01": 2.0}),
-    )
-    def _boom(n):  # noqa: ANN001
-        raise AssertionError("min artifact consulted for single-run head")
-    monkeypatch.setattr(bc, "prior_final_min", _boom)
-    out = bc.vs_prior_bench({"q01_pricing_summary": 2.5})
-    assert out["basis"] == "single_run_vs_single_run"
-    assert out["prior_bench"] == "BENCH_r08.json"
-    assert out["median_ratio"] == 1.25
-
-
-def test_bench_control_tripwire_cannot_self_compare(monkeypatch, tmp_path):
-    """Once this round's BENCH_r{N}.json is committed, the newest-BENCH
-    heuristic would resolve the tripwire denominator to the SAME round
-    as the numerator and read a vacuous 1.0 (round-9 review) —
-    exclude_round must step the resolution back one round."""
-    import tools.bench_control as bc
-
-    calls = []
-
-    def fake_prior(exclude_round=None):
-        calls.append(exclude_round)
-        # simulate: r9 is the newest BENCH but must be skipped
-        assert exclude_round == 9
-        return ("BENCH_r08.json", 8, {"q01": 1.0})
-
-    monkeypatch.setattr(bc, "prior_bench", fake_prior)
-    monkeypatch.setattr(
-        bc, "prior_final_min",
-        lambda n: ("r8_final_min.json", {"q01_pricing_summary": 1.0}),
-    )
-    out = bc.vs_prior_bench(
-        {"q01_pricing_summary": 3.0}, head_kind="min", exclude_round=9
-    )
-    assert calls == [9]
-    assert out["prior_bench"] == "r8_final_min.json"
-    assert out["over_2x"] == {"q01_pricing_summary": 3.0}
-    # and prior_bench itself must honor the exclusion on real files
-    import json as _json
-    import os as _os
-    monkeypatch.setattr(bc, "REPO", str(tmp_path))
-    for n, v in ((8, 1.0), (9, 2.0)):
-        with open(_os.path.join(tmp_path, f"BENCH_r{n}.json"), "w") as f:
-            _json.dump({"queries": {"q01": v}}, f)
-    name, rn, q = bc.prior_bench(exclude_round=9)
-    assert (name, rn, q) == ("BENCH_r08.json", 8, {"q01": 1.0})
-
-
-def test_bench_finals_run_bench_fails_loudly_without_stderr_line(monkeypatch):
-    """_run_bench must REFUSE the short-code stdout fallback: a series
-    mixing full-name and short-code payloads gives aggregate() disjoint
-    key spaces and a silently double-counted min (r8 ADVICE)."""
-    import subprocess as sp
-    import pytest
-    import tools.bench_finals as bf
-
-    fake = sp.CompletedProcess(
-        args=[], returncode=0, stdout='{"queries": {"q01": 1.0}}\n',
-        stderr="no timing mirror here\n",
-    )
-    monkeypatch.setattr(bf.subprocess, "run", lambda *a, **k: fake)
-    with pytest.raises(RuntimeError, match="full-name timings"):
-        bf._run_bench("/root/testdata/sf0.01")
-
-
-def test_bench_finals_aggregate_min_and_spread():
-    """The min-across-finals artifact (VERDICT r7 task #4): per-query
-    MIN over runs, [min,max] spread, failed runs excluded unless a
-    query failed in EVERY run (then -1.0 stays visible)."""
-    from tools.bench_finals import aggregate
-
-    p1 = {"sf": 0.1, "queries": {"a": 2.0, "b": -1.0, "c": 5.0, "d": -1.0}}
-    p2 = {"sf": 0.1, "queries": {"a": 1.5, "b": 3.0, "c": -1.0, "d": -1.0}}
-    out = aggregate([p1, p2], "r8_final")
-    assert out["queries"] == {"a": 1.5, "b": 3.0, "c": 5.0, "d": -1.0}
-    assert out["spread"] == {
-        "a": [1.5, 2.0], "b": [3.0, 3.0], "c": [5.0, 5.0], "d": [-1.0, -1.0],
-    }
-    assert out["value"] == 9.5  # -1.0 rows excluded from the total
-    assert out["n_runs"] == 2 and out["sf"] == 0.1
-
-
 def test_bench_short_code_collision_disambiguation():
     """bench.py's driver-tail line keys by short code; colliding codes
     must be disambiguated per-key, never by falling back to the
@@ -256,16 +35,6 @@ def test_bench_registry_has_no_short_code_collisions():
     short = short_code_timings(names)
     assert len(short) == len(names)
     assert not any("#" in c for c in short)
-
-
-def test_bench_control_usage_without_args(monkeypatch, capsys):
-    """Invoking the control protocol with no prev ref must print usage
-    and exit 2, not die with a raw IndexError (round-5 ADVICE)."""
-    import tools.bench_control as bc
-
-    monkeypatch.setattr(sys, "argv", ["bench_control.py"])
-    assert bc.main() == 2
-    assert "usage:" in capsys.readouterr().err
 
 
 def test_configure_runtime_respects_creator_shuffle_setting(spark, monkeypatch):

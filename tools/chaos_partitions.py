@@ -99,7 +99,7 @@ of events onto ONE user (sessionize, stateful streaming, DAU), and
 ANN) — while every ORIGINAL distinct key keeps at least one row, so
 the key universe is identical to the uniform table and a skew-vs-
 uniform timing delta measures skew, not cardinality (the r10 twin's
-confound). ``tools/skew_tax.py`` runs that timing comparison. This is the 100 TB failure mode
+confound). This is the 100 TB failure mode
 the skew playbook (SCALE.md) addresses: a shuffle where one reducer
 key carries 10× the median. The sweep checks both survival (no
 OOM/timeout at pathological splits) and, with ``--oracle``,
