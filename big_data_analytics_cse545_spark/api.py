@@ -110,15 +110,28 @@ def repetition_signals(df: DataFrame, text_col: str) -> DataFrame:
     for a row without bigrams). t13 adds the token count and the
     repetitive flag.
 
-    Shuffle-free form: the top-bigram count is a per-row array
-    expression (count each distinct bigram inside the row), quadratic in
-    the row's distinct-bigram count but zero data movement — the right
-    trade for filter pipelines where docs are bounded."""
+    Shuffle-free form: the top-bigram count is the longest run of equal
+    bigrams in the row's sorted bigram array — O(n log n) in the row's
+    bigram count, no data movement and no row key. Measured faster than
+    an explode+groupBy count and a quadratic per-distinct-bigram count,
+    on bounded and on 50k-token documents (SCALE.md)."""
     bg = F.col("_bg")
-    top_n = F.array_max(
-        F.transform(
-            F.array_distinct(bg), lambda b: F.size(F.filter(bg, lambda x: x == b))
+
+    def run_step(acc, b):
+        run = F.when(acc["prev"] == b, acc["run"] + 1).otherwise(1)
+        return F.struct(
+            b.alias("prev"), run.alias("run"), F.greatest(acc["top"], run).alias("top")
         )
+
+    top_n = F.aggregate(
+        F.array_sort(bg),
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit(0).alias("top"),
+        ),
+        run_step,
+        lambda acc: acc["top"],
     )
     # try_divide: a zero divisor gives NULL, as in DuckDB (ANSI `/`
     # raises on one empty document)
@@ -283,7 +296,7 @@ def minhash_dedup_pairs(
     # saved; at scale the pipelined recompute also avoids a corpus-sized
     # cache)
     sh = _shingles(df, text_col, id_col, shingle_size)
-    bands = _band_keys_df(sh, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
+    bands = _band_keys_df(sh, n_hashes=n_hashes, band_rows=band_rows)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1367,7 +1380,7 @@ def dedup_index(
     produce zero candidates and admit every near-duplicate)."""
     kw = dict(n_hashes=n_hashes, band_rows=band_rows, shingle_size=shingle_size)
     sh = _shingles(corpus, text_col, id_col, shingle_size)
-    bands = _band_keys_df(sh, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
+    bands = _band_keys_df(sh, n_hashes=n_hashes, band_rows=band_rows)
     return {
         "hashes": corpus.select(F.md5(F.col(text_col)).alias("_h")).distinct(),
         "bands": bands,
@@ -1431,7 +1444,7 @@ def incremental_dedup(
         .withColumn("_exact", F.lit(True))
     )
     sh_b = _shingles(batch, text_col, id_col, shingle_size)
-    bands_b = _band_keys_df(sh_b, "_id", "_sh", n_hashes=n_hashes, band_rows=band_rows)
+    bands_b = _band_keys_df(sh_b, n_hashes=n_hashes, band_rows=band_rows)
     cand = (
         bands_b.select(F.col("_id").alias("_bid"), "_band", "_key")
         .join(index["bands"].select(F.col("_id").alias("_cid"), "_band", "_key"),

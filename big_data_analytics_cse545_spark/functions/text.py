@@ -68,8 +68,8 @@ def bigrams(ts: Column, sep: str = "_") -> Column:
     )
 
 
-def shingles(ts: Column, n: int, sep: str = "_") -> Column:
-    """Distinct word ``n``-gram shingles of a token ARRAY, ``sep``-joined;
+def shingles(ts: Column, n: int) -> Column:
+    """Distinct word ``n``-gram shingles of a token ARRAY, ``_``-joined;
     ``[]`` for arrays shorter than ``n``. The one shingle construction
     shared by the MinHash/Jaccard dedup family (d02/d03/d06/d07/d10) and
     the ``api`` dedup and decontamination functions. Pass a column
@@ -83,7 +83,7 @@ def shingles(ts: Column, n: int, sep: str = "_") -> Column:
 
     def gram(i: Column) -> Column:
         return F.concat_ws(
-            sep, *[F.element_at(ts, i + k if k else i) for k in range(n)]
+            "_", *[F.element_at(ts, i + k if k else i) for k in range(n)]
         )
 
     return F.when(

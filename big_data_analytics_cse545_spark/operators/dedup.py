@@ -183,21 +183,14 @@ ORDER BY d1, d2
 # d03 — MinHash + LSH banding (the scale path)
 # ---------------------------------------------------------------------------
 
-def _band_keys_df(
-    sh: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    *,
-    n_hashes: int,
-    band_rows: int,
-) -> DataFrame:
-    """(id_col, _band, _key) — MinHash(n_hashes) banded into
-    n_hashes // band_rows keys per row of an (id_col, shingle_col)
-    shingle relation. The one Spark copy of the band-key expression:
+def _band_keys_df(sh: DataFrame, *, n_hashes: int, band_rows: int) -> DataFrame:
+    """(_id, _band, _key) — MinHash(n_hashes) banded into
+    n_hashes // band_rows keys per ``_id`` of an (_id, _sh) shingle
+    relation. The one Spark copy of the band-key expression:
     ``api.minhash_dedup_pairs``, ``api.dedup_index`` and
     ``api.incremental_dedup`` (and through them d03 and d10) call it.
     One aggregation pass computes all minhashes as separate agg columns
-    — a single shuffle keyed by id_col instead of an n_hashes×
+    — a single shuffle keyed by _id instead of an n_hashes×
     shingle-row explode (the naive seeds-cross-join shuffles
     N_HASHES× the shingle table; at 100 TB that explode is the
     bottleneck). Band key = md5 of the band's minhashes, seed-ordered
@@ -224,19 +217,19 @@ def _band_keys_df(
     matches independent hashing up to O(1/P) terms."""
     h1 = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit("a|"), F.col(shingle_col))), 1, 15),
+            F.substring(F.md5(F.concat(F.lit("a|"), F.col("_sh"))), 1, 15),
             16, 10,
         ).cast("long") % MINHASH_P
     )
     h2 = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit("b|"), F.col(shingle_col))), 1, 15),
+            F.substring(F.md5(F.concat(F.lit("b|"), F.col("_sh"))), 1, 15),
             16, 10,
         ).cast("long") % MINHASH_P
     )
     minh = (
-        sh.select(id_col, h1.alias("_h1"), h2.alias("_h2"))
-        .groupBy(id_col)
+        sh.select("_id", h1.alias("_h1"), h2.alias("_h2"))
+        .groupBy("_id")
         .agg(
             *[
                 F.min((F.col("_h1") + s * F.col("_h2")) % MINHASH_P).alias(f"_mh{s}")
@@ -253,8 +246,8 @@ def _band_keys_df(
         ).alias(f"_bk{b}")
         for b in range(n_bands)
     ]
-    return minh.select(id_col, *band_cols).select(
-        id_col,
+    return minh.select("_id", *band_cols).select(
+        "_id",
         F.posexplode(F.array(*[F.col(f"_bk{b}") for b in range(n_bands)])).alias(
             "_band", "_key"
         ),

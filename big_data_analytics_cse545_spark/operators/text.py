@@ -697,7 +697,9 @@ def t13_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of all bigrams), plus the combined repetitive flag.
 
     A binding of :func:`api.repetition_signals` (per-row array
-    expressions, no shuffle) plus the token count and the flag.
+    expressions, no shuffle; the top-bigram count sorts the row's
+    bigrams, so cost is O(n log n) in a document's length) plus the
+    token count and the flag.
     """
     from big_data_analytics_cse545_spark import api
 
