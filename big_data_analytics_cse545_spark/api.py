@@ -7,11 +7,17 @@ contract (SURVEY §2.5: ``minhash_dedup(df, text_col)``,
 ``ann_join(df, emb_col, k)``). Where a registry query in
 ``operators.*`` computes the same thing, the query is a binding of the
 function here: it calls the function on the fixture table and adds only
-its final shaping (t06 → :func:`quality_score`, t12 →
-:func:`pack_sequences`, t13 → :func:`repetition_signals`, d03 →
-:func:`minhash_dedup_pairs`, d10 → :func:`incremental_dedup`, q36 →
-:func:`merge_upsert`). The DuckDB oracles that check those queries
-therefore check the functions users call.
+its final shaping. The DuckDB oracles that check those queries therefore
+check the functions users call:
+
+* text: t06 → :func:`quality_score`, t12 → :func:`pack_sequences`,
+  t13 → :func:`repetition_signals`, t17 → :func:`chunk_documents`,
+  t21 → :func:`bm25_score`, t22 → :func:`perplexity_gate`;
+* selection and sampling: x04 → :func:`token_budget_select`,
+  x05 → :func:`stratified_sample`, x06 → :func:`leakage_safe_split`;
+* dedup: d03 → :func:`minhash_dedup_pairs`, d08 → :func:`dup_clusters`,
+  d10 → :func:`incremental_dedup`, d12 → :func:`cdc_dedup`;
+* relational: q36 → :func:`merge_upsert`.
 
 All functions return DataFrames (lazy, composable) and never collect
 except where the algorithm itself is driver-scale (documented per
@@ -348,8 +354,9 @@ def dup_clusters(
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Transitive near-dup clusters over any corpus: 64-bit SimHash
-    hamming-banded pairs (d04 semantics) closed into components by
-    distributed min-label propagation (d08).
+    hamming-banded pairs (d04) closed into components by distributed
+    min-label propagation; d08 is this function over the documents
+    fixture.
 
     ``wide_keys`` (default True, matching the operator layer): the
     Manku-style 3-of-(ham_k+3)-block candidate keys (~32-bit key space)
@@ -1245,11 +1252,14 @@ def chunk_documents(
     chunk_tokens: int = 32,
     stride: int = 24,
 ) -> DataFrame:
-    """Overlapping token-window chunking (operators.text.t17 semantics
-    over any table): one row per (id, chunk_idx) with the chunk's tokens
-    re-joined. Zero-shuffle narrow fan-out — sequence/transform/slice/
+    """Overlapping token-window chunking over any table: one row per
+    (id, chunk_idx) with the chunk's tokens re-joined; t17 is this
+    function over the documents fixture. A NULL-text row has no chunks
+    (without the filter, size(NULL) = -1 would route one junk NULL
+    chunk through the sequence/slice chain); an empty text is one empty
+    chunk. Zero-shuffle narrow fan-out — sequence/transform/slice/
     posexplode, all JVM-side."""
-    toked = df.select(
+    toked = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         tokens(F.col(text_col)).alias("toks"),
     )
@@ -1281,26 +1291,43 @@ def token_budget_select(
 ) -> DataFrame:
     """Keep the highest-``score_col`` rows whose ``weight_col`` mass fits
     ``budget`` — the distributed exact form of ORDER BY score + running-
-    sum cutoff (operators.sampling.x04): per-score histogram → tiny
-    running-offset window → broadcast back → within-score cumulative sum.
-    ``score_col`` should be low-cardinality (bucketed) — the histogram is
-    score-cardinality-sized. Ties break by ``id_col``."""
+    sum cutoff; x04 is this function over the documents fixture. Ties
+    break by ``id_col``; weights must be non-negative.
+
+    1. per-score histogram (map-side-combined; score-cardinality-sized,
+       so ``score_col`` should be low-cardinality, i.e. bucketed);
+    2. running offsets over the tiny histogram, broadcast back;
+    3. triage on the histogram alone: scores whose whole mass fits under
+       the budget are kept outright, scores starting past the budget are
+       dropped outright, and ONLY the one boundary score runs the
+       within-score cumulative-sum window.
+
+    Windowing every row partitioned by score would funnel a hot score
+    (say every non-Latin document scoring 0) through one reducer; the
+    window input here is one score's rows, and if even that score is
+    hot, :func:`stratified_sample`'s salting pattern applies to it."""
     hist = df.groupBy(score_col).agg(F.sum(weight_col).alias("_bucket_w"))
     w_hist = Window.orderBy(F.desc(score_col)).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     offsets = hist.withColumn(
         "_prev_w", F.sum("_bucket_w").over(w_hist) - F.col("_bucket_w")
-    ).select(score_col, "_prev_w")
+    )
+    joined = df.join(F.broadcast(offsets), score_col)
+    full = joined.filter(F.col("_prev_w") + F.col("_bucket_w") <= budget)
     w_bucket = Window.partitionBy(score_col).orderBy(id_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    return (
-        df.join(F.broadcast(offsets), score_col)
+    boundary = (
+        joined.filter(
+            (F.col("_prev_w") <= budget)
+            & (F.col("_prev_w") + F.col("_bucket_w") > budget)
+        )
         .withColumn("_cum", F.sum(weight_col).over(w_bucket))
         .filter(F.col("_prev_w") + F.col("_cum") <= budget)
-        .drop("_prev_w", "_cum")
+        .drop("_cum")
     )
+    return full.unionByName(boundary).drop("_prev_w", "_bucket_w")
 
 
 def stratified_sample(
@@ -1312,9 +1339,10 @@ def stratified_sample(
     tag: str = "strat|",
     n_salts: int = 8,
 ) -> DataFrame:
-    """Deterministic fixed-K-per-stratum sample (operators.sampling.x05):
-    md5-hash order, salted two-phase exact top-K so a hot stratum never
-    funnels through one reducer. Adds a ``rank`` column (1..K)."""
+    """Deterministic fixed-K-per-stratum sample: md5-hash order, salted
+    two-phase exact top-K so a hot stratum never funnels through one
+    reducer; x05 is this function over the documents fixture's
+    languages. Adds a ``rank`` column (1..K)."""
     from big_data_analytics_cse545_spark.operators.sampling import hash_bucket
 
     h = hash_bucket(F.col(id_col), tag)
@@ -1491,21 +1519,30 @@ def leakage_safe_split(
 ) -> DataFrame:
     """Deterministic train/val/test split (x01's 98/1/1 md5 rule) keyed
     by the near-dup cluster representative instead of the row id, so no
-    near-duplicate pair ever straddles train and test (the x06 operator
-    on an arbitrary corpus). Appends ``split_key`` and ``split``;
-    singleton docs get exactly ``hash_split``'s assignment.
+    near-duplicate pair ever straddles train and test; x06 is this
+    function over the documents fixture. Appends ``split_key`` and
+    ``split``; singleton docs get exactly ``hash_split``'s assignment.
 
-    The cluster relation holds one row per doc with any near-dup —
-    corpus-proportional at real dup rates — so the join carries no
-    broadcast hint: AQE broadcasts only when it measures small."""
+    SimHash near-dup pairs (d04) → connected components (d08's
+    min-label propagation) → left join of the (id, label) relation:
+    no cluster-size aggregation, which :func:`dup_clusters` adds and
+    the split does not need. The label relation holds one row per doc
+    with any near-dup — corpus-proportional at real dup rates — so the
+    join carries no broadcast hint: AQE broadcasts only when it
+    measures small."""
+    from big_data_analytics_cse545_spark.operators.dedup import (
+        connected_components,
+        simhash_near_dup_pairs,
+    )
     from big_data_analytics_cse545_spark.operators.sampling import (
         TRAIN_PCT,
         VAL_PCT,
         hash_bucket,
     )
 
-    cc = dup_clusters(df, text_col, id_col, ham_k=ham_k).select(
-        F.col(id_col).alias("_cid"), F.col("cluster_id").alias("_label")
+    d = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    cc = connected_components(simhash_near_dup_pairs(d, ham_k), "d1", "d2").select(
+        F.col("id").alias("_cid"), F.col("label").alias("_label")
     )
     key = F.coalesce("_label", F.col(id_col))
     bucket = hash_bucket(key, "split|", mod=100)
@@ -1547,11 +1584,11 @@ def bm25_score(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Okapi BM25 relevance of every row against ``terms`` (t21
-    semantics over arbitrary data): (id, n_terms_hit, bm25_micro) for
-    rows matching ≥1 term, with per-term contributions rounded to
-    integer micro-units and summed as BIGINT — deterministic under any
-    parallelism. The term dictionary is a literal ``isin`` filter
+    """Okapi BM25 relevance of every row against ``terms``: (id,
+    n_terms_hit, bm25_micro) for rows matching ≥1 term, with per-term
+    contributions rounded to integer micro-units and summed as BIGINT —
+    deterministic under any parallelism; t21 is this function over the
+    documents fixture. The term dictionary is a literal ``isin`` filter
     BEFORE any shuffle; corpus stats and the df table are result-sized
     and broadcast, so the text column never leaves the scan."""
     tok = df.select(
@@ -1599,16 +1636,31 @@ def perplexity_gate(
     head_micro: int,
     middle_micro: int,
 ) -> DataFrame:
-    """CCNet-style unigram-LM perplexity bucketing (t22 semantics over
-    arbitrary data): fit the add-one-smoothed corpus unigram LM in one
-    WordCount pass, score each row's mean NLL in exact integer
-    micro-nats, and bucket by the caller's offline-calibrated cutoffs.
-    Returns (id, n_tok, sum_nll_micro, ppl_bucket, mean_nll)."""
+    """CCNet-style unigram-LM perplexity bucketing over any table: fit
+    the add-one-smoothed corpus unigram LM in one WordCount pass, score
+    each row's mean NLL in exact integer micro-nats, and bucket by the
+    caller's offline-calibrated cutoffs; t22 is this function over the
+    documents fixture. Returns (id, n_tok, sum_nll_micro, ppl_bucket,
+    mean_nll).
+
+    nll(w) = −ln((count(w) + 1) / (T + V)) with T = corpus token count,
+    V = vocabulary size, rounded to integer micro-nats per word and
+    summed as BIGINT, so the per-row sum is exact under any
+    partitioning. ``mean_nll`` floor-divides those exact integers and
+    scales once by 1e-6 (never a ROUND of a raw double ratio, whose
+    .5-micro boundary rounds differently per engine).
+
+    The LM joins the pre-aggregated (id, word, tf) relation, not the
+    raw token explosion: n_tok = Σ tf and sum_nll = Σ tf·nll are the
+    same exact sums, and the Zipf-hot shuffle on the word shrinks by
+    the average term frequency. Text never shuffles; the LM is the
+    vocab-sized relation, which Catalyst broadcasts when stats allow."""
     tok = df.select(
         F.col(id_col).alias("_id"),
         F.explode(tokens(F.col(text_col))).alias("_w"),
     )
-    vocab = tok.groupBy("_w").agg(F.count(F.lit(1)).alias("_cnt"))
+    doc_tf = tok.groupBy("_id", "_w").agg(F.count(F.lit(1)).alias("_tf"))
+    vocab = doc_tf.groupBy("_w").agg(F.sum("_tf").alias("_cnt"))
     tot = vocab.agg(F.sum("_cnt").alias("_t"), F.count(F.lit(1)).alias("_v"))
     lm = vocab.crossJoin(F.broadcast(tot)).select(
         "_w",
@@ -1620,11 +1672,11 @@ def perplexity_gate(
         .alias("_nll"),
     )
     scored = (
-        tok.join(lm, "_w")
+        doc_tf.join(lm, "_w")
         .groupBy("_id")
         .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum("_nll").alias("sum_nll_micro"),
+            F.sum("_tf").alias("n_tok"),
+            F.sum(F.col("_tf") * F.col("_nll")).alias("sum_nll_micro"),
         )
     )
     return scored.select(
@@ -1635,25 +1687,24 @@ def perplexity_gate(
         .when(F.col("sum_nll_micro") < middle_micro * F.col("n_tok"), "middle")
         .otherwise("tail")
         .alias("ppl_bucket"),
-        F.round(
-            F.col("sum_nll_micro").cast("double")
-            / (F.col("n_tok").cast("double") * 1e6),
-            6,
-        ).alias("mean_nll"),
+        (F.expr("CAST(sum_nll_micro DIV n_tok AS DOUBLE)") / F.lit(1e6)).alias(
+            "mean_nll"
+        ),
     )
 
 
 def cdc_dedup(
     df: DataFrame, text_col: str, id_col: str, *, hash: str = "xx"
 ) -> DataFrame:
-    """Content-defined-chunking duplicate report over arbitrary rows
-    (d12 semantics): (chunk_hash, n_copies, n_docs, chunk_len,
-    first_doc) for every chunk stored more than once. Boundary = 8-char
-    window-hash ≡ 0 mod 64; every boundary is an independent local
-    predicate, so chunking is one parallel JVM expression and a prefix
-    edit invalidates only the chunk it touches. Defaults to the
-    xxhash64 window hash (the ~3× cheaper production form); pass
-    hash='md5' for the oracle-exact d12 boundaries."""
+    """Content-defined-chunking duplicate report over arbitrary rows:
+    (chunk_hash, n_copies, n_docs, chunk_len, first_doc) for every
+    chunk stored more than once. Boundary = 8-char window-hash ≡ 0 mod
+    64; every boundary is an independent local predicate, so chunking
+    is one parallel JVM expression and a prefix edit invalidates only
+    the chunk it touches. Defaults to the xxhash64 window hash (the ~3×
+    cheaper production form); ``hash='md5'`` gives the oracle-exact
+    boundaries, and d12 is this function with it over the documents
+    fixture."""
     from big_data_analytics_cse545_spark.operators.dedup import cdc_chunks
 
     src = df.select(
@@ -1870,25 +1921,30 @@ def host_reputation(
     min_support: int = 4,
     junk_frac: float = 0.25,
 ) -> DataFrame:
-    """Per-host (domain) reputation verdicts over arbitrary rows (t23
-    semantics, operators/text.py): aggregate a caller-supplied boolean
-    junk signal BY HOST and return one row per host — (host, n_docs,
-    junk_docs, verdict) with verdict ∈ {'low_support', 'junky',
-    'keep'}. Join the 'keep' hosts back onto the corpus as the
-    drop-entire-domains gate C4/RefinedWeb apply before any per-doc
+    """Per-host (domain) reputation verdicts over arbitrary rows:
+    aggregate a caller-supplied boolean junk signal BY HOST and return
+    one row per host — (host, n_docs, junk_docs, verdict) with verdict
+    ∈ {'low_support', 'junky', 'keep'}. A NULL junk flag (a torn
+    crawl field) counts as not junk, so a host whose flags are all
+    NULL has junk_docs 0, never NULL (a NULL sum would silently take
+    the 'keep' branch). Join the 'keep' hosts back onto the corpus as
+    the drop-entire-domains gate C4/RefinedWeb apply before any per-doc
     filtering; the verdict relation is hosts-sized (millions, not
-    billions), so that join broadcasts.
+    billions), so that join broadcasts. t23 computes the same verdicts
+    in its own single aggregation, which also yields its mean length (a
+    binding here would need a second host aggregation and a join,
+    measured slower); test_api cross-checks the two.
 
     One partial+final aggregation keyed by host; only (host, junk)
     pairs shuffle, never document payloads. The junky compare runs in
     exact integer arithmetic (junk·den ≥ n·num with junk_frac reduced
     to a rational) — a float multiply would misclassify boundary hosts
     for non-dyadic fractions (n_docs·0.1 is 3.0000000000000004 in
-    double, so a host at exactly 10% junk would escape), the same
-    t23 discipline. ``junk_frac`` is snapped to the nearest rational
-    with denominator ≤ 1e6 for that integer compare; a threshold whose
-    exact value can't be represented within 1e-9 of such a rational is
-    rejected rather than silently altered (ADVICE r4 #3).
+    double, so a host at exactly 10% junk would escape). ``junk_frac``
+    is snapped to the nearest rational with denominator ≤ 1e6 for that
+    integer compare; a threshold whose exact value can't be represented
+    within 1e-9 of such a rational is rejected rather than silently
+    altered (ADVICE r4 #3).
     """
     from fractions import Fraction
 
@@ -1904,7 +1960,9 @@ def host_reputation(
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("__junk").cast("bigint")).alias("junk_docs"),
+            F.sum(F.coalesce(F.col("__junk").cast("bigint"), F.lit(0))).alias(
+                "junk_docs"
+            ),
         )
     )
     return stats.select(

@@ -20,12 +20,16 @@ TOKEN_SPLIT_RE = "[^a-z0-9]+"
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
 
-def tokens(col: Column) -> Column:
-    """Lowercase tokens of a text column, empties removed.
+# DuckDB twin of tokens() over a ``text`` column — the one copy every
+# oracle query interpolates.
+SQL_TOKENS = (
+    f"list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT_RE}'), t -> t <> '')"
+)
 
-    Equivalent DuckDB expression:
-      list_filter(string_split_regex(lower(x), '[^a-z0-9]+'), t -> t <> '')
-    """
+
+def tokens(col: Column) -> Column:
+    """Lowercase tokens of a text column, empties removed (DuckDB twin:
+    :data:`SQL_TOKENS`)."""
     return F.filter(
         F.split(F.lower(col), TOKEN_SPLIT_RE), lambda t: t != F.lit("")
     )

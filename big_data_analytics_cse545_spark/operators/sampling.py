@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_analytics_cse545_spark.functions.text import SQL_TOKENS
 from big_data_analytics_cse545_spark.sources import load_table, spread_scan
 
 # 2^32 — the hash domain: first 8 md5 hex chars parsed as an integer.
@@ -236,8 +237,7 @@ def x03_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X03_SQL = f"""
 WITH raw AS (
   SELECT doc_id, source, md5(lower(text)) AS h,
-         CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                              t -> t <> '')) AS BIGINT) AS n_tok
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 gated AS (SELECT * FROM raw WHERE n_tok >= {MIN_TOKENS}),
@@ -276,32 +276,22 @@ def x04_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     every pre-training run starts with.
 
     The naive spelling is a GLOBAL ORDER BY quality + running-sum cutoff
-    — a single-reducer window, dead at 100 TB. This is the distributed
-    exact form:
-
-    1. integer quality bucket per doc (``floor(1000·alpha_ratio)`` —
-       ≤ 1001 distinct values by construction);
-    2. per-bucket token totals (map-side-combined agg; result is
-       histogram-sized, ≤ 1001 rows);
-    3. running total over the tiny histogram (window over ≤ 1001 rows —
-       result-sized, NOT data-sized);
-    4. broadcast the per-bucket running offsets back and TRIAGE on the
-       histogram alone: buckets whose whole token mass fits under the
-       budget are kept outright, buckets starting past the budget are
-       dropped outright, and ONLY the single boundary bucket runs the
-       within-bucket cumulative-sum window. The earlier form windowed
-       the entire corpus partitioned by ≤ 1001 clustered score values —
-       one hot score (all non-Latin docs score 0) could funnel a
-       double-digit share of a 100 TB corpus through one reducer
-       (round-6 review); now the window input is one bucket, and if
-       even that bucket is hot the x05 salting pattern applies to it.
+    — a single-reducer window, dead at 100 TB. The distributed exact
+    form is :func:`api.token_budget_select` (this query is a binding of
+    it, so the oracle checks the function users call) over an integer
+    quality bucket per doc, ``floor(1000·alpha_ratio)`` — ≤ 1001
+    distinct values by construction, so the per-bucket histogram and
+    its running offsets are result-sized. Triage on that histogram keeps the buckets that
+    fit whole, drops the ones starting past the budget, and runs the
+    within-bucket cumulative-sum window on the single boundary bucket
+    only: one hot score (all non-Latin docs score 0) can no longer
+    funnel a double-digit share of the corpus through one reducer.
 
     Keep iff ``bucket_offset + within_bucket_cumsum <= BUDGET``: exact,
     deterministic (ties broken by doc_id), and every data-sized stage
     is either a narrow projection or a one-bucket window.
     """
-    from pyspark.sql.window import Window
-
+    from big_data_analytics_cse545_spark import api
     from big_data_analytics_cse545_spark.functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -324,34 +314,8 @@ def x04_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("long").alias("score"),
     )
-    hist = base.groupBy("score").agg(F.sum("n_tok").alias("bucket_tok"))
-    w_hist = Window.orderBy(F.desc("score")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = hist.withColumn(
-        "prev_tok", F.sum("bucket_tok").over(w_hist) - F.col("bucket_tok")
-    ).select("score", "prev_tok", "bucket_tok")
-    joined = base.join(F.broadcast(offsets), "score")
-    # histogram triage: fully-fitting buckets need no per-doc order at
-    # all; buckets starting past the budget cannot contribute (cum ≥ 0
-    # for every doc, so prev_tok > BUDGET already fails the test)
-    full = joined.filter(
-        F.col("prev_tok") + F.col("bucket_tok") <= TOKEN_BUDGET
-    )
-    w_bucket = Window.partitionBy("score").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    boundary = (
-        joined.filter(
-            (F.col("prev_tok") <= TOKEN_BUDGET)
-            & (F.col("prev_tok") + F.col("bucket_tok") > TOKEN_BUDGET)
-        )
-        .withColumn("cum", F.sum("n_tok").over(w_bucket))
-        .filter(F.col("prev_tok") + F.col("cum") <= TOKEN_BUDGET)
-        .drop("cum")
-    )
     return (
-        full.unionByName(boundary)
+        api.token_budget_select(base, "score", "n_tok", "doc_id", TOKEN_BUDGET)
         .select("doc_id", "score", "n_tok")
         .orderBy(F.desc("score"), "doc_id")
     )
@@ -360,8 +324,7 @@ def x04_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X04_SQL = f"""
 WITH base AS (
   SELECT doc_id,
-         CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                              t -> t <> '')) AS BIGINT) AS n_tok,
+         CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok,
          CAST(coalesce(floor(1000.0 * len(regexp_replace(lower(text), '[^a-z]', '', 'g'))
                     / nullif(n_chars, 0)), 0) AS BIGINT) AS score
   FROM documents
@@ -403,35 +366,24 @@ def x05_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     version of the single-reducer window. This is the two-phase exact
     top-K instead:
 
-    1. phase 1 partitions by (lang, salt) — salt = hash mod {_X05_SALTS},
-       deterministic per doc — and keeps each salt-group's local top-K;
-       a stratum of any size is spread over {_X05_SALTS} reducers, each
-       emitting ≤ K candidate rows;
-    2. phase 2 ranks the ≤ {_X05_SALTS}·K survivors per stratum — a
+    1. phase 1 partitions by (lang, salt) — salt = hash mod
+       ``_X05_SALTS``, deterministic per doc — and keeps each
+       salt-group's local top-K; a stratum of any size is spread over
+       ``_X05_SALTS`` reducers, each emitting ≤ K candidate rows;
+    2. phase 2 ranks the ≤ ``_X05_SALTS``·K survivors per stratum — a
        window over candidate-sized input (result-sized, not data-sized).
 
     The local top-K of every salt group is a superset of the global
     top-K members hashed into it, so the two phases are exactly
     equivalent to the naive window; the oracle runs the naive spelling.
+    A binding of :func:`api.stratified_sample`, so the oracle checks
+    the function users call.
     """
-    from pyspark.sql.window import Window
+    from big_data_analytics_cse545_spark import api
 
     d = load_table(spark, sf_dir, "documents")
-    ranked_key = hash_bucket(F.col("doc_id"), "strat|")
-    base = d.select(
-        "doc_id", "lang", ranked_key.alias("h"),
-        (ranked_key % _X05_SALTS).alias("_salt"),
-    )
-    w1 = Window.partitionBy("lang", "_salt").orderBy("h", "doc_id")
-    candidates = (
-        base.withColumn("_r", F.row_number().over(w1))
-        .filter(F.col("_r") <= STRATUM_K)
-        .drop("_r", "_salt")
-    )
-    w2 = Window.partitionBy("lang").orderBy("h", "doc_id")
     return (
-        candidates.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= STRATUM_K)
+        api.stratified_sample(d, "lang", "doc_id", STRATUM_K, n_salts=_X05_SALTS)
         .select("lang", "rank", "doc_id")
         .orderBy("lang", "rank")
     )
@@ -472,31 +424,15 @@ def x06_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     join deliberately carries NO broadcast hint: AQE broadcasts it when
     it measures small and falls back to a shuffled hash join on 16-byte
     doc_id keys when it doesn't, instead of OOMing on a mandatory hint.
+    A binding of :func:`api.leakage_safe_split`, so the oracle checks
+    the function users call.
     """
-    from big_data_analytics_cse545_spark.operators.dedup import (
-        connected_components,
-        simhash_near_dup_pairs,
-    )
+    from big_data_analytics_cse545_spark import api
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = simhash_near_dup_pairs(d)
-    cc = connected_components(pairs, "d1", "d2").select(
-        F.col("id").alias("doc_id"), F.col("label")
-    )
-    key = F.coalesce("label", "doc_id")
-    bucket = hash_bucket(key, "split|", mod=100)
-    split = (
-        F.when(bucket < TRAIN_PCT, F.lit("train"))
-        .when(bucket < TRAIN_PCT + VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        d.join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            key.alias("split_key"),
-            split.alias("split"),
-        )
+        api.leakage_safe_split(d, "text", "doc_id")
+        .select("doc_id", "split_key", "split")
         .orderBy("doc_id")
     )
 
@@ -661,7 +597,7 @@ def x07_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X07_SQL = f"""
 WITH tok AS (
   SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS ts
+         {SQL_TOKENS} AS ts
   FROM documents
 ),
 bg AS (
@@ -825,12 +761,11 @@ def _x08_sql() -> str:
         PPL_HEAD_MICRO,
         PPL_MIDDLE_MICRO,
         TOP_BIGRAM_MAX,
-        _SQL_TOKENS,
     )
 
     return f"""
 WITH base AS (
-  SELECT doc_id, lang, md5(text) AS h, {_SQL_TOKENS} AS ts
+  SELECT doc_id, lang, md5(text) AS h, {SQL_TOKENS} AS ts
   FROM documents
 ),
 b2 AS (SELECT *, len(ts) AS n_tok FROM base),
@@ -1072,11 +1007,9 @@ def x09_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x09_sql() -> str:
-    from big_data_analytics_cse545_spark.operators.text import _SQL_TOKENS
-
     return f"""
 WITH base AS (
-  SELECT doc_id, lang, {_SQL_TOKENS} AS ts,
+  SELECT doc_id, lang, {SQL_TOKENS} AS ts,
          {_sql_hash('doc_id', 'split|')} % 100 < {TRAIN_PCT} AS is_train
   FROM documents
 ),

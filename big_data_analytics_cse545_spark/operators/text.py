@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark.functions.text import (
+    SQL_TOKENS,
     STOPWORDS,
     TOKEN_SPLIT_RE,
     bigrams,
@@ -31,11 +32,6 @@ from big_data_analytics_cse545_spark.functions.text import (
     tokens,
 )
 from big_data_analytics_cse545_spark.sources import load_table, spread_scan
-
-# DuckDB twin of functions.text.tokens()
-_SQL_TOKENS = (
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')"
-)
 
 # Small term dictionary for the a1p2b-style mention queries — plays the
 # role of the broadcast industry dict (``a1p2b_ahuja.py:95-100``).
@@ -65,7 +61,7 @@ def t01_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _T01_SQL = f"""
 SELECT word, COUNT(*) AS n
-FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents)
+FROM (SELECT unnest({SQL_TOKENS}) AS word FROM documents)
 GROUP BY word
 ORDER BY n DESC, word
 LIMIT 200
@@ -101,7 +97,7 @@ WITH grams AS (
   SELECT lang,
          unnest(list_transform(range(1, len(ts)),
                                i -> ts[i] || '_' || ts[i + 1])) AS bigram
-  FROM (SELECT lang, {_SQL_TOKENS} AS ts FROM documents)
+  FROM (SELECT lang, {SQL_TOKENS} AS ts FROM documents)
 ),
 r AS (SELECT DISTINCT bigram FROM grams WHERE lang = 'en'),
 s AS (SELECT DISTINCT bigram FROM grams WHERE lang = 'de')
@@ -140,7 +136,7 @@ def t03_term_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _T03_SQL = f"""
 SELECT word, lang, COUNT(*) AS n_mentions
-FROM (SELECT lang, unnest({_SQL_TOKENS}) AS word FROM documents)
+FROM (SELECT lang, unnest({SQL_TOKENS}) AS word FROM documents)
 WHERE word IN {TERM_DICT!r}
 GROUP BY word, lang
 ORDER BY word, lang
@@ -183,7 +179,7 @@ def t04_term_mentions_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T04_SQL = f"""
 WITH per_lang AS (
   SELECT word, lang, COUNT(*) AS n_mentions
-  FROM (SELECT lang, unnest({_SQL_TOKENS}) AS word FROM documents)
+  FROM (SELECT lang, unnest({SQL_TOKENS}) AS word FROM documents)
   WHERE word IN {TERM_DICT!r}
   GROUP BY word, lang
 )
@@ -223,7 +219,7 @@ def t05_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _T05_SQL = f"""
-WITH toks AS (SELECT lang, {_SQL_TOKENS} AS ts FROM documents),
+WITH toks AS (SELECT lang, {SQL_TOKENS} AS ts FROM documents),
 scored AS (
   SELECT lang,
          CASE WHEN len(list_filter(ts, t -> t IN {STOPWORDS!r}))
@@ -262,7 +258,7 @@ def t06_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _T06_SQL = f"""
-WITH toks AS (SELECT {_SQL_TOKENS} AS ts FROM documents),
+WITH toks AS (SELECT {SQL_TOKENS} AS ts FROM documents),
 m AS (
   SELECT
     len(ts) AS n_tok,
@@ -311,7 +307,7 @@ def t07_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _T07_SQL = f"""
-WITH toks AS (SELECT source, {_SQL_TOKENS} AS ts FROM documents)
+WITH toks AS (SELECT source, {SQL_TOKENS} AS ts FROM documents)
 SELECT source,
        CAST(SUM(len(ts)) AS BIGINT) AS ws_tokens,
        CAST(SUM(list_sum(list_transform(ts, t -> (length(t) + 3) // 4))) AS BIGINT) AS bpe_tokens,
@@ -346,7 +342,7 @@ def t08_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _T08_SQL = f"""
-WITH toks AS (SELECT doc_id, text, {_SQL_TOKENS} AS ts FROM documents)
+WITH toks AS (SELECT doc_id, text, {SQL_TOKENS} AS ts FROM documents)
 SELECT doc_id,
        md5(lower(text)) AS full_md5,
        md5(CASE WHEN text IS NULL THEN NULL
@@ -662,7 +658,7 @@ def t12_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _T12_SQL = f"""
 WITH per AS (
-  SELECT source, doc_id, CAST(len({_SQL_TOKENS}) AS BIGINT) AS n_tok
+  SELECT source, doc_id, CAST(len({SQL_TOKENS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 packed AS (
@@ -724,7 +720,7 @@ _T13_SQL = f"""
 WITH base AS (
   SELECT doc_id, ts, len(ts) AS n_tok, len(list_distinct(ts)) AS n_distinct,
          list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i + 1]) AS bigrams
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS ts FROM documents)
+  FROM (SELECT doc_id, {SQL_TOKENS} AS ts FROM documents)
 ),
 top AS (
   SELECT doc_id, MAX(c) AS top_n
@@ -794,7 +790,7 @@ def t14_corpus_freq_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _T14_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents
 ),
 vocab AS (
   SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word
@@ -935,8 +931,8 @@ def winnow_bucket_pairs(fps: DataFrame) -> DataFrame:
 
 _T15_SQL = f"""
 WITH big AS (
-  SELECT doc_id, {_SQL_TOKENS} AS ts FROM documents
-  WHERE len({_SQL_TOKENS}) >= {WINNOW_K + WINNOW_W - 1}
+  SELECT doc_id, {SQL_TOKENS} AS ts FROM documents
+  WHERE len({SQL_TOKENS}) >= {WINNOW_K + WINNOW_W - 1}
 ),
 kg AS (
   SELECT doc_id,
@@ -1084,31 +1080,11 @@ CHUNK_STRIDE = 24  # stride S (overlap = W - S = 8 tokens)
 
 
 def t17_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_analytics_cse545_spark.functions.text import tokens
+    from big_data_analytics_cse545_spark import api
 
     d = load_table(spark, sf_dir, "documents")
-    # a NULL-text doc has no chunks (explicit on both sides: without
-    # this, size(NULL) = -1 routes one junk NULL-chunk row per null doc
-    # through the sequence/slice chain)
-    toked = d.filter(F.col("text").isNotNull()).select(
-        "doc_id", tokens(F.col("text")).alias("toks")
-    )
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(F.size("toks") - 1, F.lit(0)),
-        F.lit(CHUNK_STRIDE),
-    )
-    chunks = toked.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(starts, lambda s: F.slice("toks", s + 1, CHUNK_TOKENS))
-        ).alias("chunk_idx", "chunk"),
-    )
-    return chunks.select(
-        "doc_id",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.size("chunk").cast("long").alias("n_chunk_tok"),
-        F.array_join("chunk", " ").alias("chunk_text"),
+    return api.chunk_documents(
+        d, "text", "doc_id", chunk_tokens=CHUNK_TOKENS, stride=CHUNK_STRIDE
     ).orderBy("doc_id", "chunk_idx")
 
 
@@ -1125,14 +1101,16 @@ t17_chunk_overlap.__doc__ = """Split every document into overlapping
     reference's per-file record extraction ``a1p2b_ahuja.py:30-41``).
     At 100 TB: chunking shuffles nothing; output partitioning inherits
     the scan, and downstream dedup/embedding stages key on chunk ids.
+
+    A binding of :func:`api.chunk_documents`, so the oracle checks the
+    function users call.
     """.format(W=CHUNK_TOKENS, S=CHUNK_STRIDE)
 
 
 _T17_SQL = f"""
 WITH base AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                     t -> t <> '') AS toks
+         {SQL_TOKENS} AS toks
   FROM documents
   WHERE text IS NOT NULL
 ),
@@ -1369,8 +1347,7 @@ _T20_SQL = f"""
 WITH words AS (
   SELECT w, COUNT(*) AS wf
   FROM (
-    SELECT unnest(list_filter(
-        string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS w
+    SELECT unnest({SQL_TOKENS}) AS w
     FROM documents
   )
   GROUP BY w
@@ -1427,57 +1404,22 @@ def t21_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     The text column never shuffles. Two partial+final aggs + one
     broadcast join — the retrieval score over 100 TB costs one corpus
     scan.
+
+    A binding of :func:`api.bm25_score`, so the oracle checks the
+    function users call.
     """
+    from big_data_analytics_cse545_spark import api
+
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
-    doclen = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = doclen.agg(
-        F.count(F.lit(1)).alias("n_docs_total"),
-        F.sum("dl").alias("total_len"),
-    )
-    hits = (
-        tok.filter(F.col("word").isin(*TERM_DICT))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_t = hits.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs_total").cast("double")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs_total") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    tfd = F.col("tf").cast("double")
-    contrib = idf * (
-        tfd
-        * (BM25_K1 + 1.0)
-        / (
-            tfd
-            + BM25_K1
-            * (1.0 - BM25_B + BM25_B * F.col("dl").cast("double") / avgdl)
-        )
-    )
-    return (
-        hits.join(F.broadcast(df_t), "word")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.round(contrib * 1e6).cast("long").alias("c_micro"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms_hit"),
-            F.sum("c_micro").alias("bm25_micro"),
-        )
-        .orderBy("doc_id")
-    )
+    return api.bm25_score(
+        d, "text", "doc_id", TERM_DICT, k1=BM25_K1, b=BM25_B
+    ).orderBy("doc_id")
 
 
 _T21_TERMS_SQL = ", ".join(f"'{t}'" for t in TERM_DICT)
 _T21_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents
 ),
 doclen AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
 stats AS (
@@ -1538,72 +1480,21 @@ def t22_unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     which t14's linear-frequency mass under-penalizes because one
     stopword can mask twenty hapaxes; the log domain can't be masked).
 
-    nll(w) = −ln((count(w) + 1) / (T + V)) with T = corpus token count,
-    V = vocabulary size. Each token's NLL is rounded to integer
-    micro-nats and summed as BIGINT (x07 discipline) — the per-doc sum
-    is exact under any partitioning, so mean_nll (one final division of
-    exact integers) hash-matches the oracle.
-
-    Plan at scale: pass 1 is WordCount (vocab-keyed partial+final agg);
-    pass 2 joins the LM back against the PRE-AGGREGATED (doc_id, word,
-    tf) relation — not the raw token explosion — which is bit-identical
-    (n_tok = Σ tf, sum_nll = Σ tf·nll_micro are the same exact integer
-    sums) and cuts the Zipf-hot shuffle on `word` by the average term
-    frequency (round-6 review; the t14/t21 pattern) — then reduces to
-    (doc_id, BIGINT). Text never shuffles; the LM itself is the
-    vocab-sized relation, which Catalyst broadcasts when stats allow.
+    A binding of :func:`api.perplexity_gate` over the spread documents
+    scan, so the oracle checks the function users call (the LM, the
+    exact micro-nat sums and the plan are documented there).
     """
+    from big_data_analytics_cse545_spark import api
+
     d = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("word"))
-    doc_tf = tok.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    vocab = doc_tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
-    tot = vocab.agg(
-        F.sum("cnt").alias("big_t"), F.count(F.lit(1)).alias("big_v")
-    )
-    nll = (
-        F.round(
-            -F.log(
-                (F.col("cnt") + 1.0)
-                / (F.col("big_t") + F.col("big_v")).cast("double")
-            )
-            * 1e6
-        )
-        .cast("long")
-        .alias("nll_micro")
-    )
-    lm = vocab.crossJoin(F.broadcast(tot)).select("word", nll)
-    scored = (
-        doc_tf.join(lm, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_tok"),
-            F.sum(F.col("tf") * F.col("nll_micro")).alias("sum_nll_micro"),
-        )
-    )
-    # float-parity policy: never ROUND a raw double ratio (a .5-micro
-    # boundary rounds differently per engine) — floor-divide in exact
-    # integers, then ONE exact scale by 1e-6
-    mean_nll = F.expr("CAST(sum_nll_micro DIV n_tok AS DOUBLE)") / F.lit(1e6)
-    return scored.select(
-        "doc_id",
-        "n_tok",
-        "sum_nll_micro",
-        F.when(
-            F.col("sum_nll_micro") < PPL_HEAD_MICRO * F.col("n_tok"), "head"
-        )
-        .when(
-            F.col("sum_nll_micro") < PPL_MIDDLE_MICRO * F.col("n_tok"),
-            "middle",
-        )
-        .otherwise("tail")
-        .alias("ppl_bucket"),
-        mean_nll.alias("mean_nll"),
+    return api.perplexity_gate(
+        d, "text", "doc_id", PPL_HEAD_MICRO, PPL_MIDDLE_MICRO
     ).orderBy("doc_id")
 
 
 _T22_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents
+  SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents
 ),
 vocab AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
 tot AS (

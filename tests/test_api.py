@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark import api
-from big_data_analytics_cse545_spark.operators import dedup, similarity
+from big_data_analytics_cse545_spark.operators import dedup, sampling, similarity
 from big_data_analytics_cse545_spark.operators import text as text_ops
 from big_data_analytics_cse545_spark.sources import load_table
 
@@ -476,8 +476,9 @@ def test_grouped_zscore_matches_window_expr(spark, sf_correctness):
 
 
 def test_dup_clusters_matches_operator_and_keeps_one_rep(spark, sf_correctness):
-    """api.dup_clusters over renamed columns must equal d08 exactly, and
-    the documented keep-rule must retain exactly one doc per cluster."""
+    """d08's oracle checks api.dup_clusters on (doc_id, text); over
+    renamed columns it must equal d08 exactly, and the documented
+    keep-rule must retain exactly one doc per cluster."""
     docs = load_table(spark, sf_correctness, "documents").select(
         F.col("doc_id").alias("id"), F.col("text").alias("body"), "source"
     )
@@ -499,7 +500,9 @@ def test_dup_clusters_matches_operator_and_keeps_one_rep(spark, sf_correctness):
     assert keep.count() == docs.count() - (n_clustered - n_groups)
 
 
-def test_chunk_documents_matches_t17(spark, sf_correctness):
+def test_chunk_documents_on_renamed_id_column(spark, sf_correctness):
+    """t17's oracle checks api.chunk_documents on ``doc_id``; the same
+    call on a renamed id column must give the same chunks."""
     d = load_table(spark, sf_correctness, "documents").withColumnRenamed(
         "doc_id", "my_id"
     )
@@ -514,51 +517,7 @@ def test_chunk_documents_matches_t17(spark, sf_correctness):
         (r["doc_id"], r["chunk_idx"]): (r["n_chunk_tok"], r["chunk_text"])
         for r in text_ops.t17_chunk_overlap(spark, sf_correctness).collect()
     }
-    assert got == exp
-
-
-def test_token_budget_select_matches_x04(spark, sf_correctness):
-    from big_data_analytics_cse545_spark.functions.text import tokens
-    from big_data_analytics_cse545_spark.operators import sampling
-
-    d = load_table(spark, sf_correctness, "documents")
-    base = d.select(
-        "doc_id",
-        F.size(tokens(F.col("text"))).cast("long").alias("n_tok"),
-        F.floor(
-            F.lit(1000.0)
-            * F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""))
-            / F.col("n_chars")
-        ).cast("long").alias("score"),
-    )
-    got = {
-        r["doc_id"]
-        for r in api.token_budget_select(
-            base, "score", "n_tok", "doc_id", sampling.TOKEN_BUDGET
-        ).collect()
-    }
-    exp = {
-        r["doc_id"]
-        for r in sampling.x04_token_budget_select(spark, sf_correctness).collect()
-    }
-    assert got == exp
-
-
-def test_stratified_sample_matches_x05(spark, sf_correctness):
-    from big_data_analytics_cse545_spark.operators import sampling
-
-    d = load_table(spark, sf_correctness, "documents")
-    got = {
-        (r["lang"], r["rank"]): r["doc_id"]
-        for r in api.stratified_sample(
-            d, "lang", "doc_id", sampling.STRATUM_K
-        ).select("lang", "rank", "doc_id").collect()
-    }
-    exp = {
-        (r["lang"], r["rank"]): r["doc_id"]
-        for r in sampling.x05_stratified_sample(spark, sf_correctness).collect()
-    }
-    assert got == exp
+    assert got == exp and got
 
 
 def test_html_strip_on_literal(spark):
@@ -602,25 +561,6 @@ def test_url_dedup_collapses_canonical_variants(spark):
     )
     out = api.url_dedup(df, "url", "id").collect()
     assert {r["id"] for r in out} == {1, 3}
-
-
-def test_leakage_safe_split_matches_x06(spark, sf_correctness):
-    """api.leakage_safe_split on the documents table must reproduce the
-    x06 operator's (split_key, split) per doc."""
-    from big_data_analytics_cse545_spark.operators import sampling
-
-    d = load_table(spark, sf_correctness, "documents")
-    got = {
-        r["doc_id"]: (r["split_key"], r["split"])
-        for r in api.leakage_safe_split(d, "text", "doc_id")
-        .select("doc_id", "split_key", "split")
-        .collect()
-    }
-    exp = {
-        r["doc_id"]: (r["split_key"], r["split"])
-        for r in sampling.x06_leakage_safe_split(spark, sf_correctness).collect()
-    }
-    assert got == exp
 
 
 def test_nfc_normalize_composes_decomposed_text(spark):
@@ -688,64 +628,6 @@ def test_incremental_dedup_index_path_equals_direct(spark, sf_correctness):
             d.filter(d["doc_id"] % 4 == 1),
             text_col="text", id_col="doc_id", index=stale,
         )
-
-
-def test_bm25_score_matches_t21(spark, sf_correctness):
-    """api.bm25_score on the documents table with the same dictionary
-    must reproduce t21 exactly (same micro-rounding discipline)."""
-    from big_data_analytics_cse545_spark.operators import text as text_ops
-    from big_data_analytics_cse545_spark.sources import load_table
-
-    d = load_table(spark, sf_correctness, "documents")
-    got = {
-        r["doc_id"]: (r["n_terms_hit"], r["bm25_micro"])
-        for r in api.bm25_score(
-            d, "text", "doc_id", text_ops.TERM_DICT
-        ).collect()
-    }
-    exp = {
-        r["doc_id"]: (r["n_terms_hit"], r["bm25_micro"])
-        for r in text_ops.t21_bm25_score(spark, sf_correctness).collect()
-    }
-    assert got == exp
-
-
-def test_perplexity_gate_matches_t22(spark, sf_correctness):
-    from big_data_analytics_cse545_spark.operators import text as text_ops
-    from big_data_analytics_cse545_spark.sources import load_table
-
-    d = load_table(spark, sf_correctness, "documents")
-    got = {
-        r["doc_id"]: (r["n_tok"], r["sum_nll_micro"], r["ppl_bucket"])
-        for r in api.perplexity_gate(
-            d,
-            "text",
-            "doc_id",
-            text_ops.PPL_HEAD_MICRO,
-            text_ops.PPL_MIDDLE_MICRO,
-        ).collect()
-    }
-    exp = {
-        r["doc_id"]: (r["n_tok"], r["sum_nll_micro"], r["ppl_bucket"])
-        for r in text_ops.t22_unigram_nll(spark, sf_correctness).collect()
-    }
-    assert got == exp
-
-
-def test_cdc_dedup_matches_d12(spark, sf_correctness):
-    from big_data_analytics_cse545_spark.operators import dedup as dedup_ops
-    from big_data_analytics_cse545_spark.sources import load_table
-
-    d = load_table(spark, sf_correctness, "documents")
-    got = {
-        r["chunk_hash"]: (r["n_copies"], r["n_docs"], r["chunk_len"], r["first_doc"])
-        for r in api.cdc_dedup(d, "text", "doc_id", hash="md5").collect()
-    }
-    exp = {
-        r["chunk_hash"]: (r["n_copies"], r["n_docs"], r["chunk_len"], r["first_doc"])
-        for r in dedup_ops.d12_cdc_chunk_dedup(spark, sf_correctness).collect()
-    }
-    assert got == exp
 
 
 def test_dedup_index_save_load_roundtrip(spark, sf_correctness, tmp_path):
@@ -1476,6 +1358,25 @@ def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
     kept = api.decontaminate(df, bench, "text", "doc_id").collect()
     assert sorted(r["doc_id"] for r in kept) == [2, 3, 4]
 
+    # a NULL text has no chunks; an empty one is one empty chunk (t17)
+    chunks = {
+        (r["doc_id"], r["chunk_idx"]): r["chunk_text"]
+        for r in api.chunk_documents(df, "text", "doc_id").collect()
+    }
+    assert chunks == {(1, 0): "the cat and the dog", (2, 0): "", (4, 0): ""}
+
+    # a NULL junk flag counts as not junk, so an all-NULL host has 0
+    # junk docs, not NULL (t23)
+    flags = spark.createDataFrame(
+        [("a", None), ("a", None), ("b", True), ("b", None)],
+        "host string, is_junk boolean",
+    )
+    rep = {
+        r["host"]: (r["junk_docs"], r["verdict"])
+        for r in api.host_reputation(flags, "host", "is_junk", min_support=2).collect()
+    }
+    assert rep == {"a": (0, "keep"), "b": (1, "junky")}
+
 
 @pytest.mark.parametrize(
     "module, query, function",
@@ -1483,8 +1384,16 @@ def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
         (text_ops, "t06_quality_score", "quality_score"),
         (text_ops, "t12_pack_sequences", "pack_sequences"),
         (text_ops, "t13_repetition_filter", "repetition_signals"),
+        (text_ops, "t17_chunk_overlap", "chunk_documents"),
+        (text_ops, "t21_bm25_score", "bm25_score"),
+        (text_ops, "t22_unigram_nll", "perplexity_gate"),
+        (sampling, "x04_token_budget_select", "token_budget_select"),
+        (sampling, "x05_stratified_sample", "stratified_sample"),
+        (sampling, "x06_leakage_safe_split", "leakage_safe_split"),
         (dedup, "d03_minhash_lsh_dedup", "minhash_dedup_pairs"),
+        (dedup, "d08_dup_clusters", "dup_clusters"),
         (dedup, "d10_incremental_dedup", "incremental_dedup"),
+        (dedup, "d12_cdc_chunk_dedup", "cdc_dedup"),
     ],
 )
 def test_registry_query_is_a_binding_of_the_api_function(
@@ -1506,8 +1415,11 @@ def test_registry_query_is_a_binding_of_the_api_function(
 
 
 def test_tokenizer_expression_has_one_copy():
-    """The tokenizer lives in functions.text.tokens only; an inlined
-    copy in api.py or operators/ is where the copies drifted apart."""
+    """The tokenizer lives in functions.text.tokens and its DuckDB twin
+    in functions.text.SQL_TOKENS only; an inlined copy in api.py or
+    operators/ is where the copies drifted apart."""
     pkg = Path(api.__file__).parent
     for path in [pkg / "api.py", *sorted((pkg / "operators").glob("*.py"))]:
-        assert "F.split(F.lower(" not in path.read_text(), path
+        src = path.read_text()
+        assert "F.split(F.lower(" not in src, path
+        assert "string_split_regex(lower(" not in src, path

@@ -64,16 +64,21 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
     through q13's try_cast as NULL instead of killing the scan.
 
     The twin corpus also holds documents without tokens (NULL text on
-    one doc_id residue, '' on another; no fixture has one): the text
-    and MinHash-dedup queries bound to the public api (t06, t12, t13,
-    d03, d10) and d07 must match their oracles on them."""
+    one doc_id residue, '' on another; no fixture has one): every query
+    bound to a public api function (t06 t12 t13 t17 t21 t22, x04 x05
+    x06, d03 d08 d10 d12) and d07 must match its oracle on them."""
     import os
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from big_data_analytics_cse545_spark.operators import dedup, relational, text
+    from big_data_analytics_cse545_spark.operators import (
+        dedup,
+        relational,
+        sampling,
+        text,
+    )
     from big_data_analytics_cse545_spark.streaming import ops as st
     from tests.oracle_utils import assert_parity
 
@@ -120,9 +125,17 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
         ("t06", text),
         ("t12", text),
         ("t13", text),
+        ("t17", text),
+        ("t21", text),
+        ("t22", text),
+        ("x04", sampling),
+        ("x05", sampling),
+        ("x06", sampling),
         ("d03", dedup),
         ("d07", dedup),
+        ("d08", dedup),
         ("d10", dedup),
+        ("d12", dedup),
     ):
         qname = next(q for q in mod.ORACLE if q.startswith(name + "_"))
         assert_parity(mod.QUERIES[qname](spark, d), mod.ORACLE[qname], d, name)
