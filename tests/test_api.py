@@ -500,7 +500,7 @@ def test_dup_clusters_matches_operator_and_keeps_one_rep(spark, sf_correctness):
     assert keep.count() == docs.count() - (n_clustered - n_groups)
 
 
-def test_chunk_documents_on_renamed_id_column(spark, sf_correctness):
+def test_chunk_documents_matches_t17(spark, sf_correctness):
     """t17's oracle checks api.chunk_documents on ``doc_id``; the same
     call on a renamed id column must give the same chunks."""
     d = load_table(spark, sf_correctness, "documents").withColumnRenamed(
@@ -516,6 +516,69 @@ def test_chunk_documents_on_renamed_id_column(spark, sf_correctness):
     exp = {
         (r["doc_id"], r["chunk_idx"]): (r["n_chunk_tok"], r["chunk_text"])
         for r in text_ops.t17_chunk_overlap(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
+
+
+def _renamed_documents(spark, sf_dir):
+    """The documents table under column names no registry query uses,
+    so a function that reads ``doc_id``/``text``/``lang`` by name
+    instead of through its column arguments fails to match."""
+    return load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id"),
+        F.col("text").alias("body"),
+        F.col("lang").alias("stratum"),
+        "n_chars",
+    )
+
+
+def test_token_budget_select_matches_x04(spark, sf_correctness):
+    """x04's oracle checks api.token_budget_select on (score, n_tok,
+    doc_id); over renamed score/weight/id columns it must keep the
+    same documents."""
+    from big_data_analytics_cse545_spark.functions.text import tokens
+
+    d = _renamed_documents(spark, sf_correctness)
+    base = d.select(
+        "id",
+        F.size(tokens(F.col("body"))).cast("long").alias("w"),
+        F.floor(
+            F.coalesce(
+                F.try_divide(
+                    F.lit(1000.0)
+                    * F.length(F.regexp_replace(F.lower(F.col("body")), "[^a-z]", "")),
+                    F.col("n_chars").cast("double"),
+                ),
+                F.lit(0.0),
+            )
+        ).cast("long").alias("q"),
+    )
+    got = {
+        r["id"]
+        for r in api.token_budget_select(
+            base, "q", "w", "id", sampling.TOKEN_BUDGET
+        ).collect()
+    }
+    exp = {
+        r["doc_id"]
+        for r in sampling.x04_token_budget_select(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
+
+
+def test_stratified_sample_matches_x05(spark, sf_correctness):
+    """x05's oracle checks api.stratified_sample on (lang, doc_id); over
+    renamed stratum/id columns it must draw the same ranked sample."""
+    d = _renamed_documents(spark, sf_correctness)
+    got = {
+        (r["stratum"], r["rank"]): r["id"]
+        for r in api.stratified_sample(
+            d, "stratum", "id", sampling.STRATUM_K
+        ).collect()
+    }
+    exp = {
+        (r["lang"], r["rank"]): r["doc_id"]
+        for r in sampling.x05_stratified_sample(spark, sf_correctness).collect()
     }
     assert got == exp and got
 
@@ -561,6 +624,22 @@ def test_url_dedup_collapses_canonical_variants(spark):
     )
     out = api.url_dedup(df, "url", "id").collect()
     assert {r["id"] for r in out} == {1, 3}
+
+
+def test_leakage_safe_split_matches_x06(spark, sf_correctness):
+    """x06's oracle checks api.leakage_safe_split on (text, doc_id);
+    over renamed text/id columns it must give each doc the same
+    (split_key, split)."""
+    d = _renamed_documents(spark, sf_correctness)
+    got = {
+        r["id"]: (r["split_key"], r["split"])
+        for r in api.leakage_safe_split(d, "body", "id").collect()
+    }
+    exp = {
+        r["doc_id"]: (r["split_key"], r["split"])
+        for r in sampling.x06_leakage_safe_split(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
 
 
 def test_nfc_normalize_composes_decomposed_text(spark):
@@ -628,6 +707,54 @@ def test_incremental_dedup_index_path_equals_direct(spark, sf_correctness):
             d.filter(d["doc_id"] % 4 == 1),
             text_col="text", id_col="doc_id", index=stale,
         )
+
+
+def test_bm25_score_matches_t21(spark, sf_correctness):
+    """t21's oracle checks api.bm25_score on (text, doc_id); over
+    renamed text/id columns it must give the same per-doc scores."""
+    d = _renamed_documents(spark, sf_correctness)
+    got = {
+        r["id"]: (r["n_terms_hit"], r["bm25_micro"])
+        for r in api.bm25_score(d, "body", "id", text_ops.TERM_DICT).collect()
+    }
+    exp = {
+        r["doc_id"]: (r["n_terms_hit"], r["bm25_micro"])
+        for r in text_ops.t21_bm25_score(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
+
+
+def test_perplexity_gate_matches_t22(spark, sf_correctness):
+    """t22's oracle checks api.perplexity_gate on (text, doc_id); over
+    renamed text/id columns it must give the same NLL sums and
+    buckets."""
+    d = _renamed_documents(spark, sf_correctness)
+    got = {
+        r["id"]: (r["n_tok"], r["sum_nll_micro"], r["ppl_bucket"])
+        for r in api.perplexity_gate(
+            d, "body", "id", text_ops.PPL_HEAD_MICRO, text_ops.PPL_MIDDLE_MICRO
+        ).collect()
+    }
+    exp = {
+        r["doc_id"]: (r["n_tok"], r["sum_nll_micro"], r["ppl_bucket"])
+        for r in text_ops.t22_unigram_nll(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
+
+
+def test_cdc_dedup_matches_d12(spark, sf_correctness):
+    """d12's oracle checks api.cdc_dedup(hash='md5') on (text, doc_id);
+    over renamed text/id columns it must report the same chunks."""
+    d = _renamed_documents(spark, sf_correctness)
+    got = {
+        r["chunk_hash"]: (r["n_copies"], r["n_docs"], r["chunk_len"], r["first_doc"])
+        for r in api.cdc_dedup(d, "body", "id", hash="md5").collect()
+    }
+    exp = {
+        r["chunk_hash"]: (r["n_copies"], r["n_docs"], r["chunk_len"], r["first_doc"])
+        for r in dedup.d12_cdc_chunk_dedup(spark, sf_correctness).collect()
+    }
+    assert got == exp and got
 
 
 def test_dedup_index_save_load_roundtrip(spark, sf_correctness, tmp_path):
