@@ -17,6 +17,9 @@ check the functions users call:
   x05 → :func:`stratified_sample`, x06 → :func:`leakage_safe_split`;
 * dedup: d03 → :func:`minhash_dedup_pairs`, d08 → :func:`dup_clusters`,
   d10 → :func:`incremental_dedup`, d12 → :func:`cdc_dedup`;
+* graph, similarity: g01 → :func:`host_pagerank`,
+  g02 → :func:`host_trustrank`, g03 → :func:`host_pagerank_weighted`,
+  s01 → :func:`ann_join` (brute force), s06 → :func:`ann_join` (LSH);
 * relational: q36 → :func:`merge_upsert`.
 
 All functions return DataFrames (lazy, composable) and never collect
@@ -439,14 +442,29 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
 def _plane_sign_expr(p: int, col: str) -> str:
     """±1 hyperplane sign vector for plane ``p``, sized to each row's
     vector via size() — sign(p, d) = parity of the first md5 nibble of
-    'p_d', identical to operators.similarity.s02's driver-side
-    ``plane_sign`` but computed entirely JVM-side so no driver action
-    (and no ``dim`` probe) is needed at plan-construction time."""
+    'p_d', identical to operators.similarity's ``_plane_sign`` but
+    computed entirely JVM-side so no driver action (and no ``dim``
+    probe) is needed at plan-construction time."""
     return (
         f"transform(sequence(0, size({col}) - 1), "
         f"d -> CASE WHEN (locate(substr(md5(concat('{p}', '_', cast(d AS STRING))), 1, 1), "
         f"'0123456789abcdef') - 1) % 2 = 0 THEN 1.0D ELSE -1.0D END)"
     )
+
+
+def _sized_bucket_expr(col: str, n_planes: int, plane_offset: int):
+    """:func:`operators.similarity.hyperplane_bucket_expr` for an unknown
+    dimension: the same bucket, with each plane's signs built per row
+    by :func:`_plane_sign_expr`."""
+    b = F.lit(0)
+    for p in range(n_planes):
+        signs_sql = _plane_sign_expr(plane_offset + p, col)
+        dotv = F.expr(
+            f"aggregate(zip_with(cast({col} AS array<double>), "
+            f"{signs_sql}, (x, s) -> x * s), 0.0D, (acc, v) -> acc + v)"
+        )
+        b = b + F.when(dotv > 0, F.lit(2 ** p)).otherwise(F.lit(0))
+    return b
 
 
 def ann_join(
@@ -480,8 +498,10 @@ def ann_join(
     1-(1-p^n_planes)^n_tables while each query still scores only
     ~n_tables/2^n_planes of the corpus. Table t uses plane indices
     t*n_planes..t*n_planes+n_planes-1 of the same md5 sign family, so
-    n_tables=1 is exactly the round-2 behavior (and s02's); the
-    driver-checked operator form is s06 (operators/similarity.py).
+    n_tables=1 is exactly the round-2 behavior (and s02's table). s01
+    binds the brute-force form (``k=5, dim=64``) and s06 the LSH form
+    (``k=3, n_planes=6, n_tables=3, dim=64``), so their DuckDB oracles
+    check this function.
 
     Picking ``n_tables`` from a recall target — measured operating
     points (SCALE.md ANN table, 10× clustered corpus, within-cluster
@@ -498,22 +518,25 @@ def ann_join(
     shuffle payload is independent of the embedding width.
 
     ``dim``: optional embedding dimensionality. When given, plane signs
-    are embedded as literal arrays (cheapest codegen); when None they
-    are computed per-row from size() — still JVM-only, no driver
-    round-trip in either case.
+    are embedded as literal arrays (cheapest codegen —
+    ``operators.similarity.hyperplane_bucket_expr``, s02's bucket);
+    when None they are computed per-row from size() — still JVM-only,
+    no driver round-trip in either case. NULL vectors are neither
+    queries nor neighbors.
 
     ``exclude_self``: drop neighbor_id == q_id matches. Set False when
     ``queries`` and ``corpus`` are unrelated tables whose ids may
     coincide — otherwise a corpus row with a query's id is silently
     excluded from that query's top-k.
     """
-    import hashlib
-
     from big_data_analytics_cse545_spark.functions.vectors import (
         cosine,
         cosine_pre,
         dot,
         norm,
+    )
+    from big_data_analytics_cse545_spark.operators.similarity import (
+        hyperplane_bucket_expr,
     )
 
     # engine-wide policy: null vectors are excluded from similarity math
@@ -537,39 +560,28 @@ def ann_join(
         (F.col("q_id") != F.col("neighbor_id")) if exclude_self else F.lit(True)
     )
     if method == "lsh":
-
-        def plane_sign(p: int, d: int) -> float:
-            nib = int(hashlib.md5(f"{p}_{d}".encode()).hexdigest()[0], 16)
-            return 1.0 if nib % 2 == 0 else -1.0
-
-        def bucket(col_name: str, table: int):
-            b = F.lit(0)
-            for p in range(n_planes):
-                gp = table * n_planes + p  # independent planes per table
-                if dim is not None:
-                    signs = F.array(*[F.lit(plane_sign(gp, d)) for d in range(dim)])
-                    dotv = dot(signs, F.col(col_name))
-                else:
-                    signs_sql = _plane_sign_expr(gp, col_name)
-                    dotv = F.expr(
-                        f"aggregate(zip_with(cast({col_name} AS array<double>), "
-                        f"{signs_sql}, (x, s) -> x * s), 0.0D, (acc, v) -> acc + v)"
+        # one NARROW row per (id, table): ids and buckets only — the
+        # ×n_tables blow-up must never ship the embeddings; join key is
+        # (table, bucket) so tables never cross-match, and table t uses
+        # the independent planes t*n_planes... The expression is built
+        # once over "_emb" and shared by both sides: each build is
+        # thousands of driver calls and its own analysis
+        sig = F.posexplode(
+            F.array(
+                *[
+                    hyperplane_bucket_expr(
+                        "_emb", n_planes, dim, plane_offset=t * n_planes
                     )
-                b = b + F.when(dotv > 0, F.lit(2 ** p)).otherwise(F.lit(0))
-            return b
-
-        def signatures(df: DataFrame, emb: str, id_alias: str) -> DataFrame:
-            # one NARROW row per (id, table): ids and buckets only — the
-            # ×n_tables blow-up must never ship the embeddings (the s06
-            # operator's measured shape, operators/similarity.py); join
-            # key is (table, bucket) so tables never cross-match
-            buckets = F.array(*[bucket(emb, t) for t in range(n_tables)])
-            return df.select(
-                F.col(id_alias), F.posexplode(buckets).alias("_t", "_b")
+                    if dim is not None
+                    else _sized_bucket_expr("_emb", n_planes, t * n_planes)
+                    for t in range(n_tables)
+                ]
             )
-
-        q_sig = signatures(q, "_q_emb", "q_id")
-        c_sig = signatures(c, "_c_emb", "neighbor_id")
+        ).alias("_t", "_b")
+        q_sig = q.select("q_id", F.col("_q_emb").alias("_emb")).select("q_id", sig)
+        c_sig = c.select("neighbor_id", F.col("_c_emb").alias("_emb")).select(
+            "neighbor_id", sig
+        )
         # a pair colliding in several tables must be scored exactly once:
         # dedup the id-PAIR relation, then rejoin the wide embedding rows
         cand = (
@@ -2000,10 +2012,9 @@ def _clean_host_edges(edges, src_col, dst_col, *extra):
 def _host_node_universe(e, extra_nodes):
     """Both edge endpoints plus any caller-supplied isolated nodes, one
     distinct ``host`` column — the node relation every rank loop runs
-    over."""
-    nodes = e.select(F.col("src_host").alias("host")).union(
-        e.select(F.col("dst_host").alias("host"))
-    )
+    over. Built from the cleaned edges before their distinct/count (the
+    same set), both endpoints from one pass over them."""
+    nodes = e.select(F.explode(F.array("src_host", "dst_host")).alias("host"))
     if extra_nodes is not None:
         nodes = nodes.union(extra_nodes.select(F.col("host")))
     return nodes.distinct()
@@ -2018,8 +2029,9 @@ def host_pagerank(
     extra_nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an arbitrary edge DataFrame (g01
-    semantics, operators/graph.py): returns one row per node — (host,
-    rank_micro, out_deg) — after ``iters`` exact-integer rank updates.
+    binds it, over the derived host link graph of operators/graph.py):
+    returns one row per node — (host, rank_micro, out_deg) — after
+    ``iters`` exact-integer rank updates.
     Join it back onto a corpus scan as the domain-priority column crawl
     pipelines apply before per-document gates.
 
@@ -2056,8 +2068,9 @@ def host_pagerank(
         pagerank_micro,
     )
 
-    e = _clean_host_edges(edges, src_col, dst_col).distinct()
+    e = _clean_host_edges(edges, src_col, dst_col)
     nodes = swap_cached("api_pagerank_nodes", _host_node_universe(e, extra_nodes))
+    e = e.distinct()
     outdeg = e.groupBy("src_host").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
@@ -2074,8 +2087,8 @@ def host_trustrank(
     iters: int = 6,
     extra_nodes: DataFrame | None = None,
 ) -> DataFrame:
-    """Seeded trust propagation (TrustRank — g02 semantics,
-    operators/graph.py) over an arbitrary edge DataFrame: rank mass
+    """Seeded trust propagation (TrustRank; g02 binds it, with the
+    slot-0 hosts as seeds) over an arbitrary edge DataFrame: rank mass
     enters ONLY at the hosts in ``seeds`` (one ``host`` column — a
     vetted whitelist) and decays through links, so a host no trusted
     page reaches scores exactly 0 instead of :func:`host_pagerank`'s
@@ -2091,7 +2104,7 @@ def host_trustrank(
         trustrank_micro,
     )
 
-    e = _clean_host_edges(edges, src_col, dst_col).distinct()
+    e = _clean_host_edges(edges, src_col, dst_col)
     seed_flags = F.broadcast(
         seeds.select(F.col("host")).distinct().withColumn(
             "is_seed", F.lit(True)
@@ -2105,6 +2118,7 @@ def host_trustrank(
             "host", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
         ),
     )
+    e = e.distinct()
     outdeg = e.groupBy("src_host").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
@@ -2123,7 +2137,7 @@ def host_pagerank_weighted(
     extra_nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Link-multiplicity-weighted PageRank over an arbitrary edge
-    DataFrame (g03 semantics, operators/graph.py): each link's
+    DataFrame (g03 binds it with ``weight_col=None``): each link's
     contribution is proportional to its weight — ``(r·w·85) div
     (outw·100)`` with outw the source's total out-weight — the form
     crawl-frontier prioritization uses (rank flows per MENTION, where
@@ -2175,10 +2189,10 @@ def host_pagerank_weighted(
     e = _clean_host_edges(edges, src_col, dst_col, w.alias("w_in")).filter(
         F.col("w_in").isNotNull() & (F.col("w_in") > 0)
     )
-    e = e.groupBy("src_host", "dst_host").agg(F.sum("w_in").alias("w"))
     nodes = swap_cached(
         "api_pagerank_weighted_nodes", _host_node_universe(e, extra_nodes)
     )
+    e = e.groupBy("src_host", "dst_host").agg(F.sum("w_in").alias("w"))
     outw = e.groupBy("src_host").agg(F.sum("w").alias("outw"))
     e = swap_cached("api_pagerank_weighted_edges", e.join(outw, "src_host"))
     ranks = trustrank_micro(nodes, e, F.lit(True), iters=iters, weighted=True)

@@ -14,6 +14,10 @@ division, and every update is an integer sum — so partitioning, task
 order, and retries cannot change a single bit, and DuckDB can replay the
 exact arithmetic in a bounded-depth recursive CTE (the d08/q35 oracle
 pattern).
+
+g01/g02/g03 are bindings of ``api.host_pagerank``, ``host_trustrank``
+and ``host_pagerank_weighted``: this module derives their input link
+graph, holds the rank kernel the api functions run, and the oracles.
 """
 
 from __future__ import annotations
@@ -24,7 +28,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from big_data_analytics_cse545_spark.cache import swap_cached
 from big_data_analytics_cse545_spark.operators.sampling import (
     _sql_hash,
     hash_bucket,
@@ -63,54 +66,21 @@ def _host(source: Column, slot: Column) -> Column:
     )
 
 
-def host_link_graph(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Derive the deterministic host→host link graph from ``documents``.
-
-    Every document emits one link: FROM its own host (t23's derivation)
-    TO the host addressed by two md5 draws over its doc_id — dst source
-    picked by rank among the distinct sources (``g01s|`` draw mod
-    n_sources), dst slot by the ``g01h|`` draw mod SLOTS. Like t23/t18,
-    the derivation is reproducible INPUT; the iterative ranking is the
-    operator under test.
-
-    Returns ``(nodes, edges)`` where nodes is one ``host`` column (all
-    link endpoints plus every host that has documents) and edges is
-    ``(src_host, dst_host, outdeg)`` — distinct, self-loops dropped,
-    out-degree pre-joined so the rank loop never recomputes it.
-
-    Scale: sources are a small dimension (the one global ``row_number``
-    runs over that dimension, not the corpus), so the sid lookup is a
-    broadcast join; edges/nodes are host-level relations (millions of
-    rows at 100 TB, not billions) — exactly the shape that persists
-    cheaply and broadcast-joins back onto corpus-sized scans.
-    """
-    hosted, links = _host_links(d)
-    edges = links.distinct()
-    outdeg = edges.groupBy("src_host").agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg")
-    )
-    return _node_universe(hosted, links), edges.join(outdeg, "src_host")
-
-
-def _node_universe(hosted: DataFrame, links: DataFrame) -> DataFrame:
-    """Every host with documents plus every link destination, one
-    distinct ``host`` column — shared by the unweighted and weighted
-    graph derivations (round-10 self-review: was copy-pasted in both).
-    Built from the pre-collapse link multiset; the distinct makes it
-    identical to building from either collapsed edge relation."""
-    return (
-        hosted.select(F.col("src_host").alias("host"))
-        .union(links.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-
-
 def _host_links(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The shared per-document link derivation under g01/g02/g03:
-    returns ``(hosted, links)`` where hosted is (doc_id, src_host) and
-    links is the per-document MULTISET of (src_host, dst_host) with
-    self-loops dropped — g01/g02 collapse it with distinct (rank flows
-    per link), g03 counts it (rank flows per mention)."""
+    """The per-document link derivation g01/g02/g03 rank: returns
+    ``(hosts, links)`` where hosts is every document's own host (one
+    ``host`` column, the ``extra_nodes`` of the api rank functions) and
+    links is the per-document MULTISET of (src_host, dst_host). Every
+    document emits one link: FROM its own host (t23's derivation) TO the
+    host addressed by two md5 draws over its doc_id — dst source picked
+    by rank among the distinct sources (``g01s|`` draw mod n_sources),
+    dst slot by the ``g01h|`` draw mod SLOTS. Like t23/t18, the
+    derivation is reproducible INPUT; the api functions own the edge
+    hygiene (NULL endpoints and self-loops dropped), the distinct
+    (g01/g02: rank flows per link) or count (g03: per mention), and the
+    out-degree. Sources are a small dimension, so the one global
+    ``row_number`` runs over that dimension and the sid lookup is a
+    broadcast join."""
     hosted = d.select(
         "doc_id",
         _host(F.col("source"), F.col("doc_id") % G01_SLOTS).alias("src_host"),
@@ -135,23 +105,8 @@ def _host_links(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     links = linked.select(
         "src_host",
         _host(F.col("dst_source"), F.col("dst_slot")).alias("dst_host"),
-    ).filter(F.col("src_host") != F.col("dst_host"))
-    return hosted, links
-
-
-def host_link_graph_weighted(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """g03's weighted twin of :func:`host_link_graph`: parallel links
-    are COUNTED, not collapsed — edges is (src_host, dst_host, w, outw)
-    where w is the link multiplicity (how many documents mention the
-    link) and outw = Σw over the source's out-links. Same node
-    universe, same NULL/self-loop hygiene (shared ``_host_links``
-    derivation), same host-sized relation shapes at 100 TB."""
-    hosted, links = _host_links(d)
-    edges = links.groupBy("src_host", "dst_host").agg(
-        F.count(F.lit(1)).cast("long").alias("w")
     )
-    outw = edges.groupBy("src_host").agg(F.sum("w").alias("outw"))
-    return _node_universe(hosted, links), edges.join(outw, "src_host")
+    return hosted.select(F.col("src_host").alias("host")), links
 
 
 def _broadcast_max_nodes() -> int:
@@ -223,7 +178,7 @@ def trustrank_micro(
     deterministic either way.
 
     ``weighted=True`` is the g03 generalization: edges carry (w, outw)
-    instead of outdeg (``host_link_graph_weighted``) and each link
+    instead of outdeg (``api.host_pagerank_weighted``) and each link
     contributes ``(rₖ(u)·w·85) div (outw(u)·100)`` — weights-all-1 with
     outw = outdeg reproduces the unweighted arithmetic EXACTLY (r·1 = r
     and Σ1 = outdeg), so the unweighted entry points remain special
@@ -325,10 +280,9 @@ def pagerank_micro(
 
 
 def attach_out_degree(ranks: DataFrame, edges: DataFrame) -> DataFrame:
-    """The shared output tail of g01 and ``api.host_pagerank``: join the
-    final ranks with each host's out-degree (0 for sinks/isolated
-    nodes) → (host, rank_micro, out_deg). One place, so the two entry
-    points cannot drift on out_deg semantics (r8 review)."""
+    """The output tail of ``api.host_pagerank``/``host_trustrank``: join
+    the final ranks with each host's out-degree (0 for sinks/isolated
+    nodes) → (host, rank_micro, out_deg)."""
     deg = edges.select(F.col("src_host").alias("host"), "outdeg").distinct()
     return ranks.join(deg, "host", "left").select(
         "host",
@@ -337,9 +291,23 @@ def attach_out_degree(ranks: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+def attach_out_weight(ranks: DataFrame, edges: DataFrame) -> DataFrame:
+    """:func:`attach_out_degree` over the weighted edge relation, the
+    tail of ``api.host_pagerank_weighted``: (host, rank_micro,
+    out_weight), out_weight = Σw of the host's out-links (0 for
+    sinks/isolated nodes)."""
+    deg = edges.select(F.col("src_host").alias("host"), "outw").distinct()
+    return ranks.join(deg, "host", "left").select(
+        "host",
+        F.col("r").alias("rank_micro"),
+        F.coalesce(F.col("outw"), F.lit(0)).cast("long").alias("out_weight"),
+    )
+
+
 def g01_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host centrality: {K} fixed PageRank iterations over the derived
-    host link graph, in exact integer micro-rank units.
+    """Host centrality: ``api.host_pagerank`` over the derived host link
+    graph (``_host_links``), every document's host an extra node —
+    {K} fixed PageRank iterations in exact integer micro-rank units.
 
     The curation stage t23 stops short of: per-host quality verdicts
     treat every domain alike, but crawl pipelines (Common Crawl ranking,
@@ -349,17 +317,13 @@ def g01_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     final micro-rank and out-degree, the relation a pipeline
     broadcast-joins onto the doc scan as a priority column (d07's
     small-verdict-relation shape).
-
-    The graph is host-level, so every relation in the loop is millions
-    of rows at 100 TB (never corpus-sized); the edge relation persists
-    across the {K} iterations (one live cache entry, swap-on-reentry).
     """
-    d = load_table(spark, sf_dir, "documents")
-    nodes, edges = host_link_graph(d)
-    nodes = swap_cached("g01_nodes", nodes)
-    edges = swap_cached("g01_edges", edges)
-    ranks = pagerank_micro(nodes, edges)
-    return attach_out_degree(ranks, edges).orderBy("host")
+    from big_data_analytics_cse545_spark import api
+
+    hosts, links = _host_links(load_table(spark, sf_dir, "documents"))
+    return api.host_pagerank(
+        links, "src_host", "dst_host", extra_nodes=hosts
+    ).orderBy("host")
 
 
 g01_host_pagerank.__doc__ = g01_host_pagerank.__doc__.format(K=G01_ITERS)
@@ -376,29 +340,29 @@ G02_SEED_SUFFIX = "-h0.example.com"
 
 
 def g02_host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded host trust propagation: {K} fixed TrustRank iterations
-    (Gyöngyi et al., VLDB'04) over g01's derived host link graph, in
-    the same exact BIGINT fixed-point units — trust mass enters ONLY at
-    seed hosts (the deterministic slot-0 whitelist) and decays through
-    links, so an unlinked spam farm scores 0 instead of g01's uniform
-    floor. This is the second half of the crawl-curation ranking story:
-    g01 answers "how central is this host", g02 answers "how reachable
-    is it from hosts we already trust" — pipelines threshold on both.
+    """Seeded host trust propagation: ``api.host_trustrank`` over g01's
+    graph — {K} fixed TrustRank iterations (Gyöngyi et al., VLDB'04) in
+    the same exact BIGINT fixed-point units. Trust mass enters ONLY at
+    seed hosts and decays through links, so an unlinked spam farm scores
+    0 instead of g01's uniform floor. g01 answers "how central is this
+    host", g02 "how reachable is it from hosts we already trust" —
+    pipelines threshold on both.
 
-    Same kernel as g01 (:func:`trustrank_micro`; g01 is its all-seeds
-    special case), same scale shape (host-sized relations, one shuffle
-    per iteration, edges persisted across the loop), same oracle
-    pattern (bounded-depth recursive CTE, seed condition templated into
-    the shared SQL builder).
+    Seeds are every source's slot-0 host, ``{{source}}-h0.example.com``:
+    a node ends in ``G02_SEED_SUFFIX`` only as one of these (slots are
+    one digit), and the api ignores seeds outside the node universe, so
+    the seed set is exactly the oracle's suffix predicate over the
+    nodes. Taking them from the sources costs one scan, not a second
+    link derivation.
     """
+    from big_data_analytics_cse545_spark import api
+
     d = load_table(spark, sf_dir, "documents")
-    nodes, edges = host_link_graph(d)
-    nodes = swap_cached("g02_nodes", nodes)
-    edges = swap_cached("g02_edges", edges)
-    ranks = trustrank_micro(
-        nodes, edges, F.col("host").endswith(G02_SEED_SUFFIX)
-    )
-    return attach_out_degree(ranks, edges).orderBy("host")
+    hosts, links = _host_links(d)
+    seeds = d.select(F.concat("source", F.lit(G02_SEED_SUFFIX)).alias("host"))
+    return api.host_trustrank(
+        links, "src_host", "dst_host", seeds, extra_nodes=hosts
+    ).orderBy("host")
 
 
 g02_host_trustrank.__doc__ = g02_host_trustrank.__doc__.format(K=G01_ITERS)
@@ -409,44 +373,25 @@ g02_host_trustrank.__doc__ = g02_host_trustrank.__doc__.format(K=G01_ITERS)
 # ---------------------------------------------------------------------------
 
 
-def attach_out_weight(ranks: DataFrame, edges: DataFrame) -> DataFrame:
-    """g03's output tail — :func:`attach_out_degree` over the weighted
-    edge relation: (host, rank_micro, out_weight), out_weight = Σw of
-    the host's out-links (0 for sinks/isolated nodes)."""
-    deg = edges.select(F.col("src_host").alias("host"), "outw").distinct()
-    return ranks.join(deg, "host", "left").select(
-        "host",
-        F.col("r").alias("rank_micro"),
-        F.coalesce(F.col("outw"), F.lit(0)).cast("long").alias("out_weight"),
-    )
-
-
 def g03_host_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-multiplicity-weighted host PageRank: {K} fixed iterations
-    where each link's contribution is proportional to HOW MANY
-    documents assert it — ``(r·w·85) div (outw·100)`` with w the
+    """Link-multiplicity-weighted host PageRank: ``api.host_pagerank_
+    weighted`` over g01's link multiset with ``weight_col=None`` — {K}
+    fixed iterations where each link's contribution is proportional to
+    HOW MANY documents assert it, ``(r·w·85) div (outw·100)`` with w the
     per-(src,dst) document count and outw the source's total out-weight
     — the form crawl-frontier prioritization actually uses (a host
     linked once per page across a domain outranks one linked once
     total, which g01's per-LINK flow cannot express). Weights-all-1 is
     exactly g01: one kernel (:func:`trustrank_micro` with
-    ``weighted=True``), one shared link derivation (``_host_links``),
-    one templated oracle (``_rank_sql(weighted=True)``). Same exact
-    BIGINT fixed-point discipline — partitioning, task order, and
-    retries cannot change a bit (exactness bound for r·w·85 documented
-    on the kernel).
-
-    Scale shape is g01's: host-sized relations, one shuffle per
-    iteration, weighted edges persisted across the loop — the groupBy
-    that COUNTS parallel links replaces the DISTINCT that collapsed
-    them, same single shuffle either way.
+    ``weighted=True``), one templated oracle
+    (``_rank_sql(weighted=True)``).
     """
-    d = load_table(spark, sf_dir, "documents")
-    nodes, edges = host_link_graph_weighted(d)
-    nodes = swap_cached("g03_nodes", nodes)
-    edges = swap_cached("g03_edges", edges)
-    ranks = trustrank_micro(nodes, edges, F.lit(True), weighted=True)
-    return attach_out_weight(ranks, edges).orderBy("host")
+    from big_data_analytics_cse545_spark import api
+
+    hosts, links = _host_links(load_table(spark, sf_dir, "documents"))
+    return api.host_pagerank_weighted(
+        links, "src_host", "dst_host", extra_nodes=hosts
+    ).orderBy("host")
 
 
 g03_host_pagerank_weighted.__doc__ = g03_host_pagerank_weighted.__doc__.format(

@@ -10,7 +10,9 @@ at 100 TB the cross join in s01 must never run, which is exactly the
 reference's reason for LSH (A2 PDF p.3).
 
 Hashing for LSH planes is md5-parity based, so the DuckDB oracle can
-regenerate identical planes with SQL md5().
+regenerate identical planes with SQL md5(). s01 and s06 are bindings of
+``api.ann_join`` (brute force; multi-table LSH), whose literal-sign
+buckets are :func:`hyperplane_bucket_expr`.
 """
 
 from __future__ import annotations
@@ -72,27 +74,22 @@ def _with_norm(e: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def s01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 cosine neighbors for each query vector.
+    """Exact top-5 cosine neighbors for each query vector:
+    ``api.ann_join(queries, embeddings, k=TOP_K, dim=DIM)``, brute force.
 
     Query×corpus theta-join + per-query window top-k — the distributed
     form of the reference's driver-side candidate ranking
     (``a2_ahuja.py:296-319``). Ranking key is the *rounded* cosine with
-    vec_id tiebreak, so the ordering is engine-independent.
+    neighbor-id tiebreak, so the ordering is engine-independent; NULL
+    vectors are neither queries nor neighbors.
     """
-    e = _with_norm(load_table(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    from big_data_analytics_cse545_spark import api
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
     return (
-        q.join(e, F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
+        api.ann_join(q, e, "embedding", "vec_id", k=TOP_K, dim=DIM)
+        .select("q_id", "neighbor_id", "rk", "cos_sim")
         .orderBy("q_id", "rk")
     )
 
@@ -107,11 +104,12 @@ ROUND(
 
 _S01_SQL = f"""
 WITH q AS (
-  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id % {QUERY_MOD} = 0
+  SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
+  WHERE vec_id % {QUERY_MOD} = 0 AND embedding IS NOT NULL
 ),
 scored AS (
   SELECT q.q_id, e.vec_id, {_COS_SQL} AS cos_sim
-  FROM q JOIN embeddings e ON e.vec_id <> q.q_id
+  FROM q JOIN embeddings e ON e.vec_id <> q.q_id AND e.embedding IS NOT NULL
 ),
 ranked AS (
   SELECT q_id, vec_id, cos_sim,
@@ -166,9 +164,6 @@ def hyperplane_bucket_expr(
     return bucket
 
 
-_bucket_expr = hyperplane_bucket_expr
-
-
 def s02_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: same-bucket candidates, then exact
     cosine top-3 within the bucket.
@@ -179,7 +174,9 @@ def s02_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches ~1/64 of the corpus per query.
     """
     e = _with_norm(
-        load_table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_expr())
+        load_table(spark, sf_dir, "embeddings").withColumn(
+            "bucket", hyperplane_bucket_expr()
+        )
     )
     q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -224,12 +221,9 @@ def hyperplane_bucket_sql(
     return " + ".join(terms)
 
 
-_bucket_sql = hyperplane_bucket_sql
-
-
 def _s02_sql() -> str:
     return f"""
-WITH b AS (SELECT vec_id, embedding, {_bucket_sql()} AS bucket FROM embeddings),
+WITH b AS (SELECT vec_id, embedding, {hyperplane_bucket_sql()} AS bucket FROM embeddings),
 q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket AS q_bucket
   FROM b WHERE vec_id % {QUERY_MOD} = 0
@@ -417,7 +411,9 @@ def s05_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     free, because it rides the same join.
     """
     e = _with_norm(
-        load_table(spark, sf_dir, "embeddings").withColumn("bucket", _bucket_expr())
+        load_table(spark, sf_dir, "embeddings").withColumn(
+            "bucket", hyperplane_bucket_expr()
+        )
     )
     q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -451,7 +447,7 @@ def s05_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _s05_sql() -> str:
     return f"""
-WITH b AS (SELECT vec_id, embedding, label, {_bucket_sql()} AS bucket FROM embeddings),
+WITH b AS (SELECT vec_id, embedding, label, {hyperplane_bucket_sql()} AS bucket FROM embeddings),
 q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket AS q_bucket, label AS q_label
   FROM b WHERE vec_id % {QUERY_MOD} = 0
@@ -481,8 +477,10 @@ N_TABLES = 3  # OR-construction width: recall → 1 − (1 − r₁)^L per table
 
 def s06_ann_multitable_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN over an OR-construction of ``N_TABLES`` independent
-    hyperplane-LSH tables: a pair is a candidate if it collides in ANY
-    table; exact cosine top-3 over the deduped candidate set.
+    hyperplane-LSH tables — ``api.ann_join(..., method="lsh",
+    n_planes=N_PLANES, n_tables=N_TABLES, dim=DIM)``: a pair is a
+    candidate if it collides in ANY table; exact cosine top-3 over the
+    deduped candidate set.
 
     This is the operator form of the recall knob SCALE.md names for the
     single-table funnel (s02/s05): one 6-plane table collides true
@@ -491,70 +489,42 @@ def s06_ann_multitable_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate volume grows only ~linearly in L. Table t draws planes
     from the disjoint family ``plane_offset = t·N_PLANES``, so table 0
     is EXACTLY s02's table — s06's candidate set is a superset of
-    s02's by construction (pinned in tests).
-
-    Scale shape (the part that must survive 100 TB): the per-table
-    signatures are computed in ONE projection as literal expression
-    trees (no UDF, no shuffle), then exploded to a NARROW
-    (vec_id, t, bucket) relation — ids and 13 bytes per row, never the
-    embeddings, so the ×L blow-up ships ~nothing. ONE equi-join on the
-    composite (t, bucket) key serves all L tables in a single shuffle
-    (vs L joins + union), duplicates collapse on (q_id, vec_id) BEFORE
-    any exact math so a pair colliding in all L tables is scored once,
-    and only the surviving candidate pairs rejoin the wide embedding
-    table for scoring.
+    s02's by construction (pinned in tests). The candidate stage is
+    narrow: only (id, table, bucket) rows ride the ×L explode and the
+    pair dedup, and embeddings rejoin by id afterwards (the scale shape
+    is documented on ``api.ann_join``).
 
     Reference anchor: the multi-band OR over minhash signatures in
     ``Assignment 2/a2_ahuja.py:140-170`` (computeBuckets2's 39 bands
     ARE an OR-construction); here the bands are whole hyperplane
-    tables over an embedding column. Production API form:
-    ``api.ann_join(..., method='lsh', n_tables=L)`` — same plane
-    families, same narrow candidate stage, arbitrary tables.
+    tables over an embedding column.
     """
+    from big_data_analytics_cse545_spark import api
+
     e = load_table(spark, sf_dir, "embeddings")
-    sig = e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    _bucket_expr(plane_offset=t * N_PLANES)
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("t", "bucket"),
-    )
-    q_sig = sig.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"), "t", "bucket"
-    )
-    cand = (
-        q_sig.join(sig, ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-        .distinct()
-    )
-    en = _with_norm(e)
-    q = en.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
     return (
-        cand.join(q, "q_id")
-        .join(en, "vec_id")
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
+        api.ann_join(
+            q,
+            e,
+            "embedding",
+            "vec_id",
+            k=3,
+            method="lsh",
+            n_planes=N_PLANES,
+            n_tables=N_TABLES,
+            dim=DIM,
+        )
+        .select("q_id", "neighbor_id", "rk", "cos_sim")
         .orderBy("q_id", "rk")
     )
 
 
 def _s06_sql() -> str:
     per_table = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {t} AS t, {_bucket_sql(plane_offset=t * N_PLANES)} AS bucket "
-        "FROM embeddings"
+        f"SELECT vec_id, {t} AS t, "
+        f"{hyperplane_bucket_sql(plane_offset=t * N_PLANES)} AS bucket "
+        "FROM embeddings WHERE embedding IS NOT NULL"
         for t in range(N_TABLES)
     )
     return f"""

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark import api
-from big_data_analytics_cse545_spark.operators import dedup, sampling, similarity
+from big_data_analytics_cse545_spark.operators import dedup, graph, sampling, similarity
 from big_data_analytics_cse545_spark.operators import text as text_ops
 from big_data_analytics_cse545_spark.sources import load_table
 
@@ -61,6 +61,8 @@ def test_simhash64_deterministic_and_discriminative(spark):
 
 
 def test_ann_join_matches_operator(spark, sf_correctness):
+    """ann_join's per-row (dim=None) sign and norm path must rank the
+    same neighbors as s01, which binds the literal dim=64 path."""
     e = load_table(spark, sf_correctness, "embeddings")
     q = e.filter(F.col("vec_id") % similarity.QUERY_MOD == 0)
     got = {
@@ -1086,18 +1088,25 @@ def test_ivf_pq_join_hot_cell_sharding_is_exact(spark, sf_correctness, monkeypat
     assert base == sharded and len(base) > 0
 
 
-def test_host_pagerank_matches_g01(spark, sf_smoke):
-    """api.host_pagerank fed g01's own derived edges + node universe
-    must reproduce g01's exact rank table (same integer arithmetic)."""
-    from big_data_analytics_cse545_spark.operators import graph
+def _raw_host_links(spark, sf_dir):
+    """g01-g03's per-document link multiset under renamed endpoint
+    columns (u, v), with self-loops and repeated links still in it, plus
+    the documents' own hosts — the api's distinct/count and hygiene,
+    not the query's input, must produce the bound query's graph."""
+    hosts, links = graph._host_links(load_table(spark, sf_dir, "documents"))
+    links = links.select(F.col("src_host").alias("u"), F.col("dst_host").alias("v"))
+    assert links.filter(F.col("u") == F.col("v")).count() > 0, "no self-loop"
+    assert links.count() > links.distinct().count(), "no repeated link"
+    return hosts, links
 
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
+
+def test_host_pagerank_matches_g01(spark, sf_smoke):
+    """api.host_pagerank fed the raw link multiset + the document hosts
+    must reproduce g01's exact rank table (same integer arithmetic)."""
+    hosts, links = _raw_host_links(spark, sf_smoke)
     got = {
         (r["host"], r["rank_micro"], r["out_deg"])
-        for r in api.host_pagerank(
-            edges, "src_host", "dst_host", extra_nodes=nodes
-        ).collect()
+        for r in api.host_pagerank(links, "u", "v", extra_nodes=hosts).collect()
     }
     exp = {
         (r["host"], r["rank_micro"], r["out_deg"])
@@ -1107,19 +1116,17 @@ def test_host_pagerank_matches_g01(spark, sf_smoke):
 
 
 def test_host_trustrank_matches_g02_and_all_seeds_degenerates(spark, sf_smoke):
-    """api.host_trustrank fed g02's own graph + the slot-0 seed list
-    must reproduce g02's exact rank table; fed EVERY node as a seed it
-    must reproduce host_pagerank exactly (the all-seeds degeneracy that
-    justifies the g01 ↔ g02 twin demotion)."""
-    from big_data_analytics_cse545_spark.operators import graph
-
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
+    """api.host_trustrank fed the raw link multiset + the slot-0 seed
+    list must reproduce g02's exact rank table; fed EVERY node as a seed
+    it must reproduce host_pagerank exactly (the all-seeds degeneracy
+    that justifies the g01 ↔ g02 twin demotion)."""
+    hosts, links = _raw_host_links(spark, sf_smoke)
+    nodes = hosts.union(links.select(F.col("v").alias("host")))
     seeds = nodes.filter(F.col("host").endswith(graph.G02_SEED_SUFFIX))
     got = {
         (r["host"], r["rank_micro"], r["out_deg"])
         for r in api.host_trustrank(
-            edges, "src_host", "dst_host", seeds, extra_nodes=nodes
+            links, "u", "v", seeds, extra_nodes=hosts
         ).collect()
     }
     exp = {
@@ -1130,30 +1137,24 @@ def test_host_trustrank_matches_g02_and_all_seeds_degenerates(spark, sf_smoke):
     all_seeded = {
         (r["host"], r["rank_micro"], r["out_deg"])
         for r in api.host_trustrank(
-            edges, "src_host", "dst_host", nodes, extra_nodes=nodes
+            links, "u", "v", nodes, extra_nodes=hosts
         ).collect()
     }
     uniform = {
         (r["host"], r["rank_micro"], r["out_deg"])
-        for r in api.host_pagerank(
-            edges, "src_host", "dst_host", extra_nodes=nodes
-        ).collect()
+        for r in api.host_pagerank(links, "u", "v", extra_nodes=hosts).collect()
     }
     assert all_seeded == uniform
 
 
 def test_host_pagerank_weighted_matches_g03_both_weight_forms(spark, sf_smoke):
-    """api.host_pagerank_weighted fed g03's own graph must reproduce
-    g03's exact rank table through BOTH weight forms: the per-mention
-    multiset with weight_col=None (multiplicity counted inside the
-    api), and the pre-counted (src, dst, w) relation with
-    weight_col='w' (weights summed per pair — already unique here, so
-    the sum is the identity). One kernel, two ingestion spellings."""
-    from big_data_analytics_cse545_spark.operators import graph
-
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, _ = graph.host_link_graph_weighted(d)
-    _, links = graph._host_links(d)
+    """api.host_pagerank_weighted must reproduce g03's exact rank table
+    through BOTH weight forms: the raw per-mention multiset with
+    weight_col=None (multiplicity counted inside the api), and the
+    pre-counted (u, v, w) relation with weight_col='w' (weights summed
+    per pair — already unique here, so the sum is the identity). One
+    kernel, two ingestion spellings."""
+    hosts, links = _raw_host_links(spark, sf_smoke)
     exp = {
         (r["host"], r["rank_micro"], r["out_weight"])
         for r in graph.g03_host_pagerank_weighted(spark, sf_smoke).collect()
@@ -1161,17 +1162,15 @@ def test_host_pagerank_weighted_matches_g03_both_weight_forms(spark, sf_smoke):
     counted = {
         (r["host"], r["rank_micro"], r["out_weight"])
         for r in api.host_pagerank_weighted(
-            links, "src_host", "dst_host", extra_nodes=nodes
+            links, "u", "v", extra_nodes=hosts
         ).collect()
     }
     assert counted == exp
-    pre = links.groupBy("src_host", "dst_host").agg(
-        F.count(F.lit(1)).cast("long").alias("w")
-    )
+    pre = links.groupBy("u", "v").agg(F.count(F.lit(1)).cast("long").alias("w"))
     explicit = {
         (r["host"], r["rank_micro"], r["out_weight"])
         for r in api.host_pagerank_weighted(
-            pre, "src_host", "dst_host", weight_col="w", extra_nodes=nodes
+            pre, "u", "v", weight_col="w", extra_nodes=hosts
         ).collect()
     }
     assert explicit == exp
@@ -1521,6 +1520,11 @@ def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
         (dedup, "d08_dup_clusters", "dup_clusters"),
         (dedup, "d10_incremental_dedup", "incremental_dedup"),
         (dedup, "d12_cdc_chunk_dedup", "cdc_dedup"),
+        (graph, "g01_host_pagerank", "host_pagerank"),
+        (graph, "g02_host_trustrank", "host_trustrank"),
+        (graph, "g03_host_pagerank_weighted", "host_pagerank_weighted"),
+        (similarity, "s01_knn_bruteforce", "ann_join"),
+        (similarity, "s06_ann_multitable_lsh", "ann_join"),
     ],
 )
 def test_registry_query_is_a_binding_of_the_api_function(
@@ -1550,3 +1554,14 @@ def test_tokenizer_expression_has_one_copy():
         src = path.read_text()
         assert "F.split(F.lower(" not in src, path
         assert "string_split_regex(lower(" not in src, path
+
+
+def test_plane_sign_has_one_copy():
+    """The md5-parity hyperplane sign lives in operators.similarity
+    (``_plane_sign``, behind hyperplane_bucket_expr/_sql) only; a second
+    Python copy in api.py or operators/ is free to drift from the planes
+    the s02/s05/s06/d11 oracles regenerate."""
+    pkg = Path(api.__file__).parent
+    paths = [pkg / "api.py", *sorted((pkg / "operators").glob("*.py"))]
+    copies = sum(p.read_text().count('md5(f"{p}_{d}"') for p in paths)
+    assert copies == 1, copies

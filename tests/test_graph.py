@@ -7,12 +7,51 @@ case bit-for-bit."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_analytics_cse545_spark import api
 from big_data_analytics_cse545_spark.operators import graph
 from big_data_analytics_cse545_spark.sources import load_table
 from tests.oracle_utils import assert_parity
+
+
+def _links(spark, sf_dir):
+    """(document hosts, per-document link multiset) — g01-g03's input."""
+    return graph._host_links(load_table(spark, sf_dir, "documents"))
+
+
+def _with_in_edges(links):
+    """Hosts with at least one in-link once self-loops are dropped."""
+    return {
+        r["dst_host"]
+        for r in links.filter(F.col("src_host") != F.col("dst_host"))
+        .select("dst_host")
+        .distinct()
+        .collect()
+    }
+
+
+def _ranks(df):
+    return {r["host"]: r["rank_micro"] for r in df.collect()}
+
+
+@contextmanager
+def _uncoalesced_shuffles(spark, n):
+    """Spread every shuffle over ``n`` partitions (AQE coalescing off),
+    so the rank loop's inputs are laid out differently."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    old = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], str(n))
+    spark.conf.set(keys[1], "false")
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("sf", ["sf_smoke", "sf_correctness"])
@@ -38,25 +77,21 @@ def test_g03_oracle_parity(spark, sf, request):
 
 def test_g03_weights_all_one_is_exactly_g01(spark, sf_smoke):
     """The kernel-sharing claim made executable: feeding the weighted
-    kernel the DISTINCT edge relation with w=1 and outw=outdeg must
-    reproduce pagerank_micro's ranks BIT-FOR-BIT (r·1 = r and Σ1 =
+    kernel the DISTINCT edge relation (so w=1 and outw=outdeg) must
+    reproduce the unweighted ranks BIT-FOR-BIT (r·1 = r and Σ1 =
     outdeg — the weighted arithmetic degenerates exactly, not
     approximately)."""
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
+    hosts, links = _links(spark, sf_smoke)
     unweighted = {
-        r["host"]: r["r"] for r in graph.pagerank_micro(nodes, edges).collect()
+        (r["host"], r["rank_micro"], r["out_deg"])
+        for r in api.host_pagerank(
+            links, "src_host", "dst_host", extra_nodes=hosts
+        ).collect()
     }
-    all_one = edges.select(
-        "src_host",
-        "dst_host",
-        F.lit(1).cast("long").alias("w"),
-        F.col("outdeg").cast("long").alias("outw"),
-    )
     weighted = {
-        r["host"]: r["r"]
-        for r in graph.trustrank_micro(
-            nodes, all_one, F.lit(True), weighted=True
+        (r["host"], r["rank_micro"], r["out_weight"])
+        for r in api.host_pagerank_weighted(
+            links.distinct(), "src_host", "dst_host", extra_nodes=hosts
         ).collect()
     }
     assert unweighted == weighted
@@ -70,22 +105,23 @@ def test_g03_multiplicity_semantics(spark, sf_smoke):
     out_weight ≥ out_deg with equality iff all that source's links are
     single-mention; (4) total-mass bound carries over (floor + dangling
     only lose mass)."""
-    d = load_table(spark, sf_smoke, "documents")
-    _, wedges = graph.host_link_graph_weighted(d)
-    assert wedges.agg(F.max("w")).collect()[0][0] > 1, (
-        "degenerate fixture: no parallel links — g03 would equal g01"
+    _, links = _links(spark, sf_smoke)
+    max_w = (
+        links.filter(F.col("src_host") != F.col("dst_host"))
+        .groupBy("src_host", "dst_host")
+        .count()
+        .agg(F.max("count"))
+        .collect()[0][0]
     )
-    g01 = {r["host"]: r["rank_micro"]
-           for r in graph.g01_host_pagerank(spark, sf_smoke).collect()}
+    assert max_w > 1, "degenerate fixture: no parallel links — g03 would equal g01"
+    g01_rows = graph.g01_host_pagerank(spark, sf_smoke).collect()
+    g01 = {r["host"]: r["rank_micro"] for r in g01_rows}
     g03_rows = graph.g03_host_pagerank_weighted(spark, sf_smoke).collect()
     g03 = {r["host"]: r["rank_micro"] for r in g03_rows}
     assert set(g01) == set(g03)
     assert any(g01[h] != g03[h] for h in g01), "weighting changed nothing"
-    _, edges = graph.host_link_graph(d)
-    outdeg = {r["src_host"]: r["outdeg"]
-              for r in edges.select("src_host", "outdeg").distinct().collect()}
-    outw = {r["src_host"]: r["outw"]
-            for r in wedges.select("src_host", "outw").distinct().collect()}
+    outdeg = {r["host"]: r["out_deg"] for r in g01_rows if r["out_deg"] > 0}
+    outw = {r["host"]: r["out_weight"] for r in g03_rows if r["out_weight"] > 0}
     assert set(outdeg) == set(outw)
     assert all(outw[h] >= outdeg[h] for h in outdeg)
     assert any(outw[h] > outdeg[h] for h in outdeg)
@@ -97,23 +133,19 @@ def test_g03_partitioning_cannot_change_a_bit(spark, sf_smoke):
     """g01's repartition-invariance gate on the weighted path: BIGINT
     floor divisions and sums are exact, so adversarial repartitioning
     must reproduce the identical rank table."""
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph_weighted(d)
-    base = {
-        r["host"]: r["r"]
-        for r in graph.trustrank_micro(
-            nodes, edges, F.lit(True), weighted=True
-        ).collect()
-    }
-    shuffled = {
-        r["host"]: r["r"]
-        for r in graph.trustrank_micro(
-            nodes.repartition(13),
-            edges.repartition(7, "dst_host"),
-            F.lit(True),
-            weighted=True,
-        ).collect()
-    }
+    hosts, links = _links(spark, sf_smoke)
+    base = _ranks(
+        api.host_pagerank_weighted(links, "src_host", "dst_host", extra_nodes=hosts)
+    )
+    with _uncoalesced_shuffles(spark, 13):
+        shuffled = _ranks(
+            api.host_pagerank_weighted(
+                links.repartition(7, "dst_host"),
+                "src_host",
+                "dst_host",
+                extra_nodes=hosts.repartition(13),
+            )
+        )
     assert base == shuffled
 
 
@@ -132,9 +164,7 @@ def test_g02_trust_semantics(spark, sf_smoke):
            for r in graph.g02_host_trustrank(spark, sf_smoke).collect()}
     assert set(g01) == set(g02)
     assert all(g02[h] <= g01[h] for h in g01)
-    d = load_table(spark, sf_smoke, "documents")
-    _, edges = graph.host_link_graph(d)
-    with_in = {r["dst_host"] for r in edges.select("dst_host").distinct().collect()}
+    with_in = _with_in_edges(_links(spark, sf_smoke)[1])
     seeds = {h for h in g02 if h.endswith(graph.G02_SEED_SUFFIX)}
     for h, r in g02.items():
         if h in seeds:
@@ -151,18 +181,17 @@ def test_g01_partitioning_cannot_change_a_bit(spark, sf_smoke):
     """The integer micro-rank contract: floor divisions + BIGINT sums
     are exact, so adversarial repartitioning of nodes AND edges must
     reproduce the identical rank table."""
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
-    base = {
-        r["host"]: r["r"]
-        for r in graph.pagerank_micro(nodes, edges).collect()
-    }
-    shuffled = {
-        r["host"]: r["r"]
-        for r in graph.pagerank_micro(
-            nodes.repartition(13), edges.repartition(7, "dst_host")
-        ).collect()
-    }
+    hosts, links = _links(spark, sf_smoke)
+    base = _ranks(api.host_pagerank(links, "src_host", "dst_host", extra_nodes=hosts))
+    with _uncoalesced_shuffles(spark, 13):
+        shuffled = _ranks(
+            api.host_pagerank(
+                links.repartition(7, "dst_host"),
+                "src_host",
+                "dst_host",
+                extra_nodes=hosts.repartition(13),
+            )
+        )
     assert base == shuffled
 
 
@@ -173,9 +202,7 @@ def test_g01_rank_invariants(spark, sf_smoke):
     mass); and the fixture graph actually exercises rank spread."""
     rows = graph.g01_host_pagerank(spark, sf_smoke).collect()
     assert rows
-    d = load_table(spark, sf_smoke, "documents")
-    _, edges = graph.host_link_graph(d)
-    with_in = {r["dst_host"] for r in edges.select("dst_host").distinct().collect()}
+    with_in = _with_in_edges(_links(spark, sf_smoke)[1])
     for r in rows:
         assert r["rank_micro"] >= graph.G01_BASE, r
         if r["host"] not in with_in:
@@ -224,14 +251,14 @@ def test_g01_iterations_move_mass(spark, sf_smoke):
     """Convergence sanity: iteration K's ranks differ from iteration 0's
     uniform vector, and successive iterations shrink the total update
     magnitude (damped fixed-point behavior) — computed at two depths."""
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
+    hosts, links = _links(spark, sf_smoke)
 
     def ranks_at(k):
-        return {
-            r["host"]: r["r"]
-            for r in graph.pagerank_micro(nodes, edges, iters=k).collect()
-        }
+        return _ranks(
+            api.host_pagerank(
+                links, "src_host", "dst_host", iters=k, extra_nodes=hosts
+            )
+        )
 
     r1, r5, r6 = ranks_at(1), ranks_at(5), ranks_at(6)
     assert any(v != graph.G01_RANK_ONE for v in r1.values())
@@ -304,18 +331,17 @@ def test_rank_broadcast_fallback_bit_identical(spark, sf_smoke, monkeypatch):
     Both branches must produce bit-identical ranks — join strategy can
     never change the joined rows; the guard only picks the physical
     plan."""
-    d = load_table(spark, sf_smoke, "documents")
-    nodes, edges = graph.host_link_graph(d)
+    hosts, links = _links(spark, sf_smoke)
+
+    def ranks():
+        return _ranks(
+            api.host_pagerank(links, "src_host", "dst_host", extra_nodes=hosts)
+        )
+
     assert graph._broadcast_max_nodes() == 20_000_000  # default ceiling
-    via_broadcast = {
-        r["host"]: r["r"]
-        for r in graph.pagerank_micro(nodes, edges).collect()
-    }
+    via_broadcast = ranks()
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_BCAST_MAX_NODES", "0")
     assert graph._broadcast_max_nodes() == 0  # read at call time
-    via_shuffle = {
-        r["host"]: r["r"]
-        for r in graph.pagerank_micro(nodes, edges).collect()
-    }
+    via_shuffle = ranks()
     assert via_shuffle == via_broadcast
     assert len(via_shuffle) > 1

@@ -302,9 +302,10 @@ def test_x06_cluster_relation_carries_no_broadcast_hint(spark, sf_correctness):
 
 def test_s06_explode_is_narrow_and_dedup_precedes_scoring(spark, sf_correctness):
     """s06's 100 TB contract: the xL table blow-up ships ONLY
-    (vec_id, t, bucket) — never the embeddings — and candidate pairs
-    collapse on (q_id, vec_id) BEFORE any exact cosine, so a pair
-    colliding in all L tables is scored once."""
+    (id, t, bucket) — never the embeddings — and candidate pairs
+    collapse on (q_id, neighbor_id) BEFORE any exact cosine, so a pair
+    colliding in all L tables is scored once. The column names are
+    api.ann_join's, which s06 binds."""
     import re
 
     from big_data_analytics_cse545_spark.operators import similarity
@@ -312,23 +313,23 @@ def test_s06_explode_is_narrow_and_dedup_precedes_scoring(spark, sf_correctness)
 
     df = similarity.s06_ann_multitable_lsh(spark, sf_correctness)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # both Generate(posexplode) nodes output exactly [t, bucket] over a
-    # lone vec_id child column — the embedding never leaves the scan stage
+    # both Generate(posexplode) nodes output exactly [_t, _b] over a
+    # lone id child column — the embedding never leaves the scan stage
     gens = [ln for ln in plan.splitlines() if "Generate posexplode" in ln]
     assert len(gens) == 2, f"expected 2 exploded signature relations: {len(gens)}"
     for ln in gens:
-        assert re.search(r"\[vec_id#\d+L\], false, \[t#\d+, bucket#\d+\]$", ln), (
-            f"exploded relation is not narrow: ...{ln[-120:]}"
-        )
-    # the pair-dedup shuffle keyed on (q_id, vec_id) exists, and it is the
-    # ONLY hash shuffle besides the final window's q_id partition — the
-    # candidate join itself rides a broadcast of the tiny query-side
-    # signatures at this sf (AQE may pick shuffle at scale; the gate pins
-    # the dedup stage, not the join strategy)
+        assert re.search(
+            r"\[(q_id|neighbor_id)#\d+L\], false, \[_t#\d+, _b#\d+\]$", ln
+        ), f"exploded relation is not narrow: ...{ln[-120:]}"
+    # the pair-dedup shuffle keyed on (q_id, neighbor_id) exists, and it
+    # is the ONLY hash shuffle besides the final window's q_id partition
+    # — the candidate join itself rides a broadcast of the tiny
+    # query-side signatures at this sf (AQE may pick shuffle at scale;
+    # the gate pins the dedup stage, not the join strategy)
     shuffles = shuffle_exchanges(df)
     assert any(
-        "q_id" in s and "vec_id" in s for s in shuffles
-    ), f"no (q_id, vec_id) dedup shuffle: {shuffles}"
+        "q_id" in s and "neighbor_id" in s for s in shuffles
+    ), f"no (q_id, neighbor_id) dedup shuffle: {shuffles}"
 
 
 def test_runtime_shuffle_exchanges_counts_cached_builds_once(spark, sf_correctness):

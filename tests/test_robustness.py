@@ -64,9 +64,11 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
     through q13's try_cast as NULL instead of killing the scan.
 
     The twin corpus also holds documents without tokens (NULL text on
-    one doc_id residue, '' on another; no fixture has one): every query
+    one doc_id residue, '' on another; no fixture has one) and NULL
+    embeddings (vec_id % 3 == 1, query rows among them): every query
     bound to a public api function (t06 t12 t13 t17 t21 t22, x04 x05
-    x06, d03 d08 d10 d12) and d07 must match its oracle on them."""
+    x06, d03 d08 d10 d12, s01 s06) and d07 must match its oracle on
+    them — a NULL vector is neither a query nor a neighbor."""
     import os
 
     import pyarrow as pa
@@ -77,6 +79,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
         dedup,
         relational,
         sampling,
+        similarity,
         text,
     )
     from big_data_analytics_cse545_spark.streaming import ops as st
@@ -90,6 +93,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
             [("n_chars", 3, 2, None), ("text", 11, 3, None), ("text", 11, 7, "")],
         ),
         "part.parquet": ("p_partkey", [("p_brand", 3, 0, None)]),
+        "embeddings.parquet": ("vec_id", [("embedding", 3, 1, None)]),
     }
     d = str(tmp_path / "null_keys_sf")
     os.makedirs(d)
@@ -136,6 +140,8 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
         ("d08", dedup),
         ("d10", dedup),
         ("d12", dedup),
+        ("s01", similarity),
+        ("s06", similarity),
     ):
         qname = next(q for q in mod.ORACLE if q.startswith(name + "_"))
         assert_parity(mod.QUERIES[qname](spark, d), mod.ORACLE[qname], d, name)
