@@ -20,6 +20,8 @@ check the functions users call:
 * graph, similarity: g01 → :func:`host_pagerank`,
   g02 → :func:`host_trustrank`, g03 → :func:`host_pagerank_weighted`,
   s01 → :func:`ann_join` (brute force), s06 → :func:`ann_join` (LSH);
+* projection, tokenizers: p08 → :func:`kmeans_trace`,
+  t24 → :func:`bpe_train`;
 * relational: q36 → :func:`merge_upsert`.
 
 All functions return DataFrames (lazy, composable) and never collect
@@ -486,9 +488,8 @@ def ann_join(
     method='bruteforce' scores everything — EXACT but O(|Q|·|C|); right
     for small corpora (≲10⁵ rows) or pre-pruned candidate sets, never
     for a full production corpus. method='lsh' prunes to a shared
-    random-hyperplane bucket first (operators.similarity.s02 machinery)
-    — ~1/2^n_planes of the corpus per query, approximate recall; the
-    scale path.
+    random-hyperplane bucket first — ~1/2^n_planes of the corpus per
+    query, approximate recall; the scale path.
 
     ``n_tables``: number of INDEPENDENT hyperplane tables (multi-probe,
     OR-semantics — a pair is a candidate if it collides in ANY table;
@@ -501,7 +502,10 @@ def ann_join(
     n_tables=1 is exactly the round-2 behavior (and s02's table). s01
     binds the brute-force form (``k=5, dim=64``) and s06 the LSH form
     (``k=3, n_planes=6, n_tables=3, dim=64``), so their DuckDB oracles
-    check this function.
+    check this function. s02 computes the ``n_tables=1`` rows with its
+    own direct bucket join: through this function (explode, id-pair
+    dedup, embedding rejoin) its per-step task CPU read higher than
+    its own spread.
 
     Picking ``n_tables`` from a recall target — measured operating
     points (SCALE.md ANN table, 10× clustered corpus, within-cluster
@@ -614,6 +618,55 @@ def ann_join(
     )
 
 
+def _ivf_cells(
+    corpus: DataFrame,
+    queries: DataFrame,
+    vec,
+    *,
+    n_cells: int,
+    n_probe: int,
+    seed: int,
+    max_iter: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF coarse quantizer shared by :func:`ivf_join` and
+    :func:`ivf_pq_join`. ``corpus`` and ``queries`` each carry an id and
+    one embedding column (their second column); ``vec`` maps an
+    embedding column to the array<double> that is clustered and probed
+    (L2-normalized for ivf_join, the raw vector for ivf_pq_join).
+    pyspark.ml KMeans learns ``n_cells`` centroids from the corpus (the
+    driver holds only k×d floats) and assigns every corpus row its
+    ``_cell``; each query row ranks the centroid literals in-plan and
+    explodes to its ``n_probe`` nearest cells (array_sort over (d, cell)
+    structs). Returns (corpus + ``_cell``, queries × probed ``_cell``)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    c_vec = corpus.withColumn("_v", array_to_vector(vec(F.col(corpus.columns[1]))))
+    km = KMeans(
+        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="_v", predictionCol="_cell"
+    ).fit(c_vec)
+    q_vec = vec(F.col(queries.columns[1]))
+
+    def d2(center):
+        arr = F.array(*[F.lit(float(x)) for x in center])
+        return F.aggregate(
+            F.zip_with(q_vec, arr, lambda x, ctr: (x - ctr) * (x - ctr)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    cells = F.array(
+        *[
+            F.struct(d2(center).alias("d"), F.lit(i).alias("cell"))
+            for i, center in enumerate(km.clusterCenters())
+        ]
+    )
+    probed = queries.withColumn(
+        "_probe", F.slice(F.array_sort(cells), 1, n_probe)
+    ).select(*queries.columns, F.explode("_probe.cell").alias("_cell"))
+    return km.transform(c_vec).drop("_v"), probed
+
+
 def ivf_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -642,9 +695,6 @@ def ivf_join(
     centroid array (n_cells × d literals) stays a broadcast-scale
     constant in the plan.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     from big_data_analytics_cse545_spark.functions.vectors import cosine
 
     # Spherical IVF: cluster and probe on L2-NORMALIZED vectors so
@@ -662,39 +712,18 @@ def ivf_join(
     # engine-wide policy: null vectors are excluded from similarity math
     # (KMeans.fit NPEs on null features; a null cosine would pollute
     # sparse top-k tails)
-    corpus = corpus.filter(F.col(emb_col).isNotNull())
-    queries = queries.filter(F.col(emb_col).isNotNull())
-    c_vec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).alias("_c_emb"),
-        array_to_vector(l2norm(F.col(emb_col))).alias("_v"),
-    )
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="_v", predictionCol="_cell"
-    ).fit(c_vec)
-    centers = [list(map(float, ctr)) for ctr in km.clusterCenters()]
-    c = km.transform(c_vec).select("neighbor_id", "_c_emb", "_cell")
-
-    # per-query distances to the k learned centroids as literal-array
-    # expressions; keep the n_probe nearest cells (array_sort on struct)
-    def d2(center: list[float]):
-        arr = F.array(*[F.lit(x) for x in center])
-        return F.aggregate(
-            F.zip_with(l2norm(F.col("_q_emb")), arr, lambda x, ctr: (x - ctr) * (x - ctr)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cells = F.array(
-        *[
-            F.struct(d2(center).alias("d"), F.lit(i).alias("cell"))
-            for i, center in enumerate(centers)
-        ]
-    )
-    q = (
-        queries.select(F.col(id_col).alias("q_id"), F.col(emb_col).alias("_q_emb"))
-        .withColumn("_probe", F.slice(F.array_sort(cells), 1, n_probe))
-        .select("q_id", "_q_emb", F.explode("_probe.cell").alias("_cell"))
+    c, q = _ivf_cells(
+        corpus.filter(F.col(emb_col).isNotNull()).select(
+            F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("_c_emb")
+        ),
+        queries.filter(F.col(emb_col).isNotNull()).select(
+            F.col(id_col).alias("q_id"), F.col(emb_col).alias("_q_emb")
+        ),
+        l2norm,
+        n_cells=n_cells,
+        n_probe=n_probe,
+        seed=seed,
+        max_iter=max_iter,
     )
     not_self = (
         (F.col("q_id") != F.col("neighbor_id")) if exclude_self else F.lit(True)
@@ -812,9 +841,6 @@ def ivf_pq_join(
     import numpy as np
     import pandas as pd
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     from big_data_analytics_cse545_spark.operators.projection import (
         _pq_adc_topk_kernel,
         _pq_cell_fn,
@@ -852,37 +878,14 @@ def ivf_pq_join(
         n_cells = min(n_cells, corpus.count()) if (
             n_train == train_cap
         ) else n_train
-    c_vec = corpus.withColumn(
-        "_v", array_to_vector(F.col("n_emb").cast("array<double>"))
-    )
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter,
-        featuresCol="_v", predictionCol="_cell",
-    ).fit(c_vec)
-    centers = [list(map(float, ctr)) for ctr in km.clusterCenters()]
-    c_side = km.transform(c_vec).select("_cell", "n_id", "n_emb")
-
-    def d2_to(center: list[float]):
-        arr = F.array(*[F.lit(x) for x in center])
-        return F.aggregate(
-            F.zip_with(
-                F.col("q_emb").cast("array<double>"),
-                arr,
-                lambda x, ctr: (x - ctr) * (x - ctr),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cells = F.array(
-        *[
-            F.struct(d2_to(center).alias("d"), F.lit(i).alias("cell"))
-            for i, center in enumerate(centers)
-        ]
-    )
-    q_side = (
-        queries.withColumn("_probe", F.slice(F.array_sort(cells), 1, n_probe))
-        .select("q_id", "q_emb", F.explode("_probe.cell").alias("_cell"))
+    c_side, q_side = _ivf_cells(
+        corpus,
+        queries,
+        lambda col: col.cast("array<double>"),
+        n_cells=n_cells,
+        n_probe=n_probe,
+        seed=seed,
+        max_iter=max_iter,
     )
 
     # Hot-cell bound (round-6 review): applyInPandas materializes a
@@ -1824,13 +1827,12 @@ def merge_upsert(
     assume_disjoint_inserts: bool = False,
     with_action: bool = False,
 ) -> DataFrame:
-    """Generic MERGE INTO over arbitrary DataFrames (q34 semantics,
-    operators/relational.py): ``changes`` carries the merge key, an
-    ``op`` column ('update' | 'delete' | 'insert'), and the FULL
-    non-key payload (same column names as ``snapshot``). Matched
-    updates replace the row, matched deletes drop it, inserts append
-    WHEN NOT MATCHED (keys already in the snapshot are ignored, ANSI
-    MERGE's not-matched contract).
+    """Generic MERGE INTO over arbitrary DataFrames: ``changes``
+    carries the merge key, an ``op`` column ('update' | 'delete' |
+    'insert'), and the FULL non-key payload (same column names as
+    ``snapshot``). Matched updates replace the row, matched deletes
+    drop it, inserts append WHEN NOT MATCHED (keys already in the
+    snapshot are ignored, ANSI MERGE's not-matched contract).
 
     Scale shape: matched ops go through a LEFT join the planner can
     broadcast (ingest-sized batch vs corpus-sized snapshot — Spark can
@@ -1840,6 +1842,11 @@ def merge_upsert(
     protocol guarantees insert keys are new (staging IDs, monotonic
     keys), pass ``assume_disjoint_inserts=True`` to skip that anti
     join entirely — then the snapshot side never shuffles at all.
+    q36 binds the general form (operators/relational.py), so its DuckDB
+    oracle checks this function. q34 computes the disjoint-inserts
+    form's rows with its own LEFT-join lowering, without this
+    function's multiple-matched-ops window, which shuffles the change
+    batch; tests/test_api.py checks both paths against q34.
     """
     payload = [c for c in snapshot.columns if c != key_col]
     missing = [c for c in [key_col, op_col, *payload] if c not in changes.columns]
@@ -2207,7 +2214,7 @@ def bpe_train(
     batch_m: int = 1,
 ) -> DataFrame:
     """Learn a BPE merge table from any DataFrame's text column (t24
-    semantics, operators/text.py — loop shape and the per-round
+    binds it, operators/text.py — loop shape and the per-round
     checkpoint state discipline documented on ``text.train_bpe``): returns
     (step, left, right, merged, pair_count) for up to ``n_merges``
     merges, the artifact every BPE tokenizer build produces. Corpus
@@ -2389,8 +2396,8 @@ def kmeans_trace(
     clamp: int = 4000,
     dim: int | None = None,
 ) -> DataFrame:
-    """Bit-deterministic k-means over any embedding column (p08
-    semantics, operators/projection.py): quantize each vector to
+    """Bit-deterministic k-means over any embedding column (p08 binds
+    it, operators/projection.py, with ``k=8, iters=4, dim=64``): quantize each vector to
     non-negative BIGINT fixed-point ONCE (``floor((x + shift)·scale)``
     clamped to [0, clamp] — pick ``shift`` so in-range values land
     positive), then run ``iters`` Lloyd iterations entirely in integer

@@ -449,8 +449,6 @@ def f06_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_analytics_cse545_spark.sources import pysource
 
     pysource.register(spark)
-    # runtime-settable; required for the source's pushFilters to plan
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     d = spark.read.format("graftcrawl").load()
     return (
         d.filter(

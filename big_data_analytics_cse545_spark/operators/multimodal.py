@@ -535,27 +535,6 @@ def _bands_col():
     )
 
 
-def lsh_candidates(sigs: DataFrame) -> DataFrame:
-    """I10+I11: band per signature position, candidates share any
-    (position, hex char) — the same-band-position equality of
-    ``computeSimilarCandidates`` (``a2_ahuja.py:164-170``) as a
-    posexplode + self-equi-join, deduped."""
-    bands = sigs.select(
-        "tile_id", F.posexplode(_bands_col()).alias("band", "bucket")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.tile_id") < F.col("b.tile_id")),
-        )
-        .select(F.col("a.tile_id").alias("t1"), F.col("b.tile_id").alias("t2"))
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # reference-exact bit-level banding (I10, ``computeBuckets2``)
 # ---------------------------------------------------------------------------

@@ -526,33 +526,26 @@ def quantize_fixed_point(
     )
 
 
-def _p08_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings-table instance of :func:`quantize_fixed_point`
-    with the p08 contract constants — the relation the DuckDB oracle
-    mirrors token-for-token."""
-    return quantize_fixed_point(
-        load_table(spark, sf_dir, "embeddings"), "embedding", "vec_id", DIM
-    )
-
-
 def p08_kmeans_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p05's iterative-k-means shape with every bit of per-iteration
     state made EXACTLY replayable by a SQL engine (round-8 VERDICT task:
-    give the rows-only iterative queries a hash-checkable companion).
-    The trick is g01's fixed-point discipline: embeddings are quantized
-    to BIGINT fixed-point once (``_p08_quantized``); distances are
-    integer squared euclidean; the centroid update is an element-wise
-    integer division of non-negative sums — so partitioning, task order
-    and retries cannot change a single bit, and the DuckDB oracle
-    unrolls the same {I} iterations as plain bounded CTE algebra.
+    give the rows-only iterative queries a hash-checkable companion):
+    ``api.kmeans_trace(embeddings, "embedding", "vec_id", k=P08_K,
+    iters=P08_ITERS, dim=DIM)``, whose default quantization constants
+    are P08_SHIFT/P08_SCALE/P08_CLAMP. The trick is g01's fixed-point
+    discipline: embeddings are quantized to BIGINT fixed-point once
+    (:func:`quantize_fixed_point`); distances are integer squared
+    euclidean; the centroid update is an element-wise integer division
+    of non-negative sums — so partitioning, task order and retries
+    cannot change a single bit, and the DuckDB oracle unrolls the same
+    {I} iterations as plain bounded CTE algebra.
 
     Per iteration t (init = the first k quantized vectors by vec_id):
     assign each vector to argmin (d2, cluster); emit (step=t, cluster,
     n_members, ssd=Σd2); update each non-empty cluster's centroid to
     (Σq) div n (empty clusters keep their previous centroid). Output:
     the full {I}-step trace, k·{I} rows max. The loop itself is
-    :func:`kmeans_trace_int` (shared with ``api.kmeans_trace``, the
-    host_pagerank↔g01 one-kernel pattern).
+    :func:`kmeans_trace_int`.
 
     Scale shape (p05's, proven): assignment + per-cluster partials are
     ONE fused mapInPandas pass emitting ≤ k rows per partition — the
@@ -562,8 +555,15 @@ def p08_kmeans_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     gymnastics are needed at combine time (the float version needs a
     deterministic accumulation order; the integer one provably doesn't).
     """
-    return kmeans_trace_int(
-        spark, _p08_quantized(spark, sf_dir), k=P08_K, iters=P08_ITERS
+    from big_data_analytics_cse545_spark import api
+
+    return api.kmeans_trace(
+        load_table(spark, sf_dir, "embeddings"),
+        "embedding",
+        "vec_id",
+        k=P08_K,
+        iters=P08_ITERS,
+        dim=DIM,
     )
 
 
@@ -581,7 +581,7 @@ def kmeans_trace_int(
     non-negative sums), so the returned (step, cluster, n_members,
     ssd) trace is bit-deterministic under any partitioning. The input
     MUST be non-negative BIGINT arrays of one fixed dimension with
-    non-null unique vec_ids (``_p08_quantized``'s postconditions)."""
+    non-null unique vec_ids (:func:`quantize_fixed_point`'s postconditions)."""
     import numpy as np
     import pandas as pd
 

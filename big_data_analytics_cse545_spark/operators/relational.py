@@ -1686,64 +1686,75 @@ ORDER BY c.c_custkey
 # q34 — MERGE / upsert semantics (snapshot ⊕ change batch)
 # ---------------------------------------------------------------------------
 
+def _merge_changes(o: DataFrame) -> DataFrame:
+    """q34's change batch over the (o_orderkey, o_totalprice) snapshot,
+    in ``api.merge_upsert``'s shape (key, payload, op): keys ≡1 (mod 10)
+    get a price update (+1000, exact in binary), keys ≡2 (mod 10) a
+    delete, and keys ≡3 (mod 10) spawn an insert under the NEGATED key
+    at half price (exact /2). Negation makes insert keys disjoint from
+    the snapshot STRUCTURALLY — orderkeys are positive at every scale
+    factor — so q34's disjoint-inserts precondition cannot silently
+    break as the fixture grows (a key+10^8 offset would collide with
+    real orderkeys past SF≈60). One scan, one projection; a delete's
+    payload is never read."""
+    mod = F.col("o_orderkey") % 10
+    key, price = F.col("o_orderkey"), F.col("o_totalprice")
+    return o.where(mod.isin(1, 2, 3)).select(
+        F.when(mod == 3, -key).otherwise(key).alias("o_orderkey"),
+        F.when(mod == 1, price + 1000.0)
+        .when(mod == 3, price / 2.0)
+        .otherwise(price)
+        .alias("o_totalprice"),
+        F.when(mod == 1, F.lit("update"))
+        .when(mod == 2, F.lit("delete"))
+        .otherwise(F.lit("insert"))
+        .alias("op"),
+    )
+
+
 def q34_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO semantics over a snapshot + change batch — the
-    Delta/Iceberg upsert every incrementally-maintained table needs.
-    The GENERAL merge is one full-outer join on the key (the oracle
-    keeps that spelling, so the hash-compare doubles as a
-    cross-formulation equivalence proof); this implementation lowers to
-    the scalable special case every upsert-by-key protocol permits:
-    matched ops (update/delete) via LEFT JOIN, not-matched inserts via
-    UNION ALL — valid because insert keys are disjoint from the
-    snapshot by construction. The distinction matters at scale: Spark
-    cannot broadcast EITHER side of a full-outer join (both sides
-    would shuffle the snapshot), but the LEFT-join form lets AQE
-    broadcast the ingest-sized change batch so the snapshot NEVER
-    shuffles — the d10 batch-vs-corpus asymmetry. No forced hint.
+    Delta/Iceberg upsert every incrementally-maintained table needs,
+    over the :func:`_merge_changes` batch. The GENERAL merge is one
+    full-outer join on the key (the oracle keeps that spelling, so the
+    hash-compare doubles as a cross-formulation equivalence proof);
+    this implementation lowers to the scalable special case every
+    upsert-by-key protocol permits: matched ops (update/delete) via
+    LEFT JOIN, not-matched inserts via UNION ALL — valid because the
+    batch's insert keys are negated, hence disjoint from the snapshot
+    by construction. Spark cannot broadcast EITHER side of a
+    full-outer join, but the LEFT-join form lets AQE broadcast the
+    ingest-sized change batch so nothing but the result sort shuffles
+    (tests/test_plans.py). No forced hint.
 
-    The change batch is derived deterministically from the snapshot
-    itself (reproducible input): keys ≡1 (mod 10) get a price update
-    (+1000, exact in binary), keys ≡2 (mod 10) a delete, and keys
-    ≡3 (mod 10) spawn an insert under the NEGATED key at half price
-    (exact /2). Negation makes insert keys disjoint from the snapshot
-    STRUCTURALLY — orderkeys are positive at every scale factor — so
-    the fast path's precondition cannot silently break as the fixture
-    grows (the previous key+10^8 offset collided with real orderkeys
-    past SF≈60; round-6 review). The general not-matched case is
-    ``api.merge_upsert``, which anti-joins inserts against the
-    snapshot instead of assuming disjointness. Deletes vanish from
-    the output; every surviving row carries its ``action`` as the
-    merge audit.
+    Why this is not a binding of ``api.merge_upsert(...,
+    assume_disjoint_inserts=True)``, which computes the same rows: the
+    api guards against two matched ops for one key with a window
+    partitioned by the key, which shuffles the change batch. q34's
+    batch has one op per key by construction. The general not-matched
+    case (inserts anti-joined against the snapshot) is q36, which does
+    bind the api. Deletes vanish from the output; every surviving row
+    carries its ``action`` as the merge audit.
     """
-    o = load_table(spark, sf_dir, "orders")
-    mod = F.col("o_orderkey") % 10
-    matched = (
-        o.where(mod.isin(1, 2))
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.when(mod == 1, F.col("o_totalprice") + 1000.0).alias(
-                "new_price"
-            ),
-            F.when(mod == 1, F.lit("update"))
-            .otherwise(F.lit("delete"))
-            .alias("op"),
-        )
-    )
-    inserts = o.where(mod == 3).select(
-        (-F.col("o_orderkey")).alias("o_orderkey"),
-        (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
-        F.lit("insert").alias("action"),
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    changes = _merge_changes(o)
+    op = F.col("op")
+    matched = changes.where(op != "insert").select(
+        F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("new_price"), op
     )
     upserted = (
         o.join(matched, o.o_orderkey == matched.k, "left")
-        .where((F.col("op").isNull()) | (F.col("op") != "delete"))
+        .where(op.isNull() | (op != "delete"))
         .select(
             "o_orderkey",
-            F.when(F.col("op") == "update", F.col("new_price"))
+            F.when(op == "update", F.col("new_price"))
             .otherwise(F.col("o_totalprice"))
             .alias("o_totalprice"),
-            F.coalesce(F.col("op"), F.lit("unchanged")).alias("action"),
+            F.coalesce(op, F.lit("unchanged")).alias("action"),
         )
+    )
+    inserts = changes.where(op == "insert").select(
+        "o_orderkey", "o_totalprice", F.lit("insert").alias("action")
     )
     return upserted.unionByName(inserts).orderBy("o_orderkey")
 
@@ -1784,12 +1795,12 @@ def q36_merge_upsert_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be enforced by a real anti-join — this query routes through
     ``api.merge_upsert`` with ``assume_disjoint_inserts=False`` so the
     api's anti-join lowering itself gets the hash-checked row
-    (VERDICT r4 task #8). Change derivation: keys ≡1 (mod 10) update
-    (+1000, exact), ≡2 delete, and ≡3 spawn TWO inserts — one at
-    key+1 (which ALWAYS exists in the dense order fixture → dropped by
-    the anti-join) and one at the NEGATED key (genuinely new at every
-    SF, since orderkeys are positive → appended), both at half price. The oracle spells the same semantics as FULL OUTER
-    JOIN + NOT EXISTS, so the hash-compare doubles as a
+    (VERDICT r4 task #8). Change batch: q34's (:func:`_merge_changes`)
+    plus a second half-price insert for every key ≡3 (mod 10), at
+    key+1 — which ALWAYS exists in the dense order fixture, so the
+    anti-join drops it, while the NEGATED-key insert is genuinely new
+    at every SF and is appended. The oracle spells the same semantics
+    as FULL OUTER JOIN + NOT EXISTS, so the hash-compare doubles as a
     cross-formulation equivalence proof.
 
     Scale shape: matched ops broadcast-join the ingest-sized batch
@@ -1801,30 +1812,19 @@ def q36_merge_upsert_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_analytics_cse545_spark import api
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    mod = F.col("o_orderkey") % 10
-    matched = o.where(mod.isin(1, 2)).select(
-        "o_orderkey",
-        F.when(mod == 1, F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
-        F.when(mod == 1, F.lit("update")).otherwise(F.lit("delete")).alias("op"),
+    colliding = o.where(F.col("o_orderkey") % 10 == 3).select(
+        (F.col("o_orderkey") + 1).alias("o_orderkey"),
+        (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
+        F.lit("insert").alias("op"),
     )
-    base3 = o.where(mod == 3)
-    inserts = (
-        base3.select(
-            (F.col("o_orderkey") + 1).alias("o_orderkey"),
-            (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
-            F.lit("insert").alias("op"),
+    return (
+        api.merge_upsert(
+            o, _merge_changes(o).unionByName(colliding), "o_orderkey",
+            with_action=True,
         )
-    ).unionByName(
-        base3.select(
-            (-F.col("o_orderkey")).alias("o_orderkey"),
-            (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
-            F.lit("insert").alias("op"),
-        )
+        .select("o_orderkey", "o_totalprice", "action")
+        .orderBy("o_orderkey")
     )
-    merged = api.merge_upsert(
-        o, matched.unionByName(inserts), "o_orderkey", with_action=True
-    )
-    return merged.orderBy("o_orderkey")
 
 
 _Q36_SQL = """

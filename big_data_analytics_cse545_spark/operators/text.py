@@ -1703,7 +1703,7 @@ def train_bpe(
     batch_m: int = 1,
 ) -> DataFrame:
     """BPE merge-table training over any DataFrame's text column — the
-    reusable core of t24 (and ``api.bpe_train``). Returns (step, left,
+    kernel of ``api.bpe_train``, which t24 binds. Returns (step, left,
     right, merged, pair_count) for up to ``n_merges`` merges.
 
     ``batch_m`` — merges selected per Spark round. At 1 (the default,
@@ -1870,8 +1870,9 @@ def t24_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes one step of (Sennrich et al. 2016, arXiv:1508.07909).
     Output: the learned merge table — (step, left, right, merged,
     pair_count) for {K} merges, the artifact every BPE tokenizer build
-    produces. Thin registry wrapper over :func:`train_bpe` (loop shape
-    and persistence discipline documented there).
+    produces: ``api.bpe_train(documents, n_merges=BPE_TRAIN_MERGES)``
+    (loop shape and persistence discipline documented on
+    :func:`train_bpe`).
 
     At 100 TB: corpus text is touched exactly once; all {K} iterations
     shuffle only (symbol-pair, count) rows bounded by the vocabulary,
@@ -1880,7 +1881,11 @@ def t24_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax-dependent rewrites) → rows-only registry entry; the hard
     gate is the pure-Python BPE golden in tests/test_text.py.
     """
-    return train_bpe(load_table(spark, sf_dir, "documents"))
+    from big_data_analytics_cse545_spark import api
+
+    return api.bpe_train(
+        load_table(spark, sf_dir, "documents"), n_merges=BPE_TRAIN_MERGES
+    )
 
 
 t24_bpe_train.__doc__ = t24_bpe_train.__doc__.format(K=BPE_TRAIN_MERGES)

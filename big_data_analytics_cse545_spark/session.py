@@ -37,48 +37,45 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Deterministic timestamp semantics regardless of host timezone —
-        # required for DuckDB-oracle parity on date/window queries.
-        .config("spark.sql.session.timeZone", "UTC")
-        # AQE: runtime re-plan (skew join splitting, partition coalescing,
-        # sort-merge -> broadcast conversion). Essential at 100 TB.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for every JVM<->Python boundary (pandas UDFs, toPandas).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Custom Python data sources with pushFilters refuse to plan
-        # unless this is on (sources/pysource.py)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Local-mode memory headroom; on a real cluster the submitter sets this.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return spark
+    return configure_runtime(builder.getOrCreate())
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally created session.
-
-    The correctness driver hands us its own SparkSession; only
-    runtime-mutable confs may be touched here (session timezone, AQE,
-    Arrow) — never JVM-startup ones.
+    """Apply the engine's runtime SQL confs to a session — the one place
+    they are set. ``get_spark`` applies it to the sessions it builds, and
+    every registry entry point (``__spark_entry__._wrap``) applies it to
+    the session it is handed, so operators never write a conf
+    themselves. Only runtime-mutable confs may be touched here — never
+    JVM-startup ones.
     """
+    # Deterministic timestamp semantics regardless of host timezone —
+    # required for DuckDB-oracle parity on date/window queries.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # AQE: runtime re-plan (skew join splitting, partition coalescing,
+    # sort-merge -> broadcast conversion). Essential at 100 TB.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    # Arrow for every JVM<->Python boundary (pandas UDFs, toPandas).
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
     # Custom Python data sources (sources/pysource.py) implement
     # pushFilters; Spark refuses to plan them unless pushdown is
     # explicitly enabled (off by default in 4.x).
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # events.ts has shipped as TIMESTAMP(NANOS), which Spark 4 rejects
+    # by default: read it as a bigint of nanoseconds, which
+    # sources.tables.normalize_events_ts floor-truncates to
+    # microseconds like DuckDB (batch and streaming scans alike).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # A vanilla session defaults to 200 shuffle partitions — at test SF
     # that is pure scheduling overhead (and for stateful streaming, 200
     # state-store instances). BUT only the vanilla default may be

@@ -50,14 +50,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # events.ts has shipped as either TIMESTAMP(NANOS) (which Spark 4
-        # rejects by default) or plain TIMESTAMP(MICROS), depending on the
-        # generator version. Handle both: read nanos as long and
-        # floor-truncate to microseconds (the same ns→µs truncation DuckDB
-        # applies), or take micros as-is. Either way normalize to
-        # session-timezone TIMESTAMP (session tz is pinned UTC) so every
-        # downstream window/watermark sees one type.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # events.ts has shipped as either TIMESTAMP(NANOS) or plain
+        # TIMESTAMP(MICROS), depending on the generator version. The
+        # session reads nanos as long (``configure_runtime``), which is
+        # floor-truncated to microseconds (the same ns→µs truncation
+        # DuckDB applies); micros are taken as-is. Either way normalize
+        # to session-timezone TIMESTAMP (session tz is pinned UTC) so
+        # every downstream window/watermark sees one type.
         df = normalize_events_ts(spark.read.parquet(path))
         return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
     return spark.read.parquet(path)

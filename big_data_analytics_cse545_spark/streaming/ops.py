@@ -72,7 +72,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_events_ts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_events_ts(_stream_scan(spark, sf_dir, "events.parquet"))
 
 

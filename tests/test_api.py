@@ -9,7 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_cse545_spark import api
-from big_data_analytics_cse545_spark.operators import dedup, graph, sampling, similarity
+from big_data_analytics_cse545_spark.operators import (
+    dedup,
+    graph,
+    projection,
+    relational,
+    sampling,
+    similarity,
+)
 from big_data_analytics_cse545_spark.operators import text as text_ops
 from big_data_analytics_cse545_spark.sources import load_table
 
@@ -77,11 +84,20 @@ def test_ann_join_matches_operator(spark, sf_correctness):
 
 
 def test_ann_join_lsh_mode_runs(spark, sf_correctness):
-    e = load_table(spark, sf_correctness, "embeddings")
-    q = e.filter(F.col("vec_id") % similarity.QUERY_MOD == 0)
-    rows = api.ann_join(q, e, "embedding", "vec_id", k=3, method="lsh").collect()
+    """One LSH table of 6 planes is s02's funnel: s02 keeps its own
+    bucket join, so ann_join over renamed columns must return s02's
+    rows."""
+    e = load_table(spark, sf_correctness, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v")
+    )
+    q = e.filter(F.col("id") % similarity.QUERY_MOD == 0)
+    rows = api.ann_join(q, e, "v", "id", k=3, method="lsh").collect()
     assert rows
     assert all(r["rk"] <= 3 for r in rows)
+    exp = similarity.s02_ann_hyperplane_lsh(spark, sf_correctness).collect()
+    assert sorted(map(tuple, rows)) == sorted(
+        (r["q_id"], r["neighbor_id"], r["cos_sim"], r["rk"]) for r in exp
+    )
 
 
 def test_ann_join_lsh_dynamic_signs_match_literal_dim(spark, sf_correctness):
@@ -789,48 +805,29 @@ def test_dedup_index_save_load_roundtrip(spark, sf_correctness, tmp_path):
 
 
 def test_merge_upsert_matches_q34(spark, sf_correctness):
-    """api.merge_upsert with q34's change batch must reproduce q34's
-    merged snapshot exactly, via BOTH the anti-join general path and
-    the disjoint-inserts fast path."""
-    from big_data_analytics_cse545_spark.operators import relational
-
+    """q34 keeps its own LEFT-join lowering of the disjoint-inserts
+    merge; api.merge_upsert over q34's batch, under renamed key,
+    payload and op columns, must reproduce q34's merged snapshot via
+    BOTH the anti-join general path and the disjoint-inserts fast
+    path."""
     o = load_table(spark, sf_correctness, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    mod = F.col("o_orderkey") % 10
-    changes = (
-        o.where(mod == 1)
-        .select(
-            "o_orderkey",
-            (F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
-            F.lit("update").alias("op"),
-        )
-        .unionByName(
-            o.where(mod == 2).select(
-                "o_orderkey", "o_totalprice", F.lit("delete").alias("op")
-            )
-        )
-        .unionByName(
-            o.where(mod == 3).select(
-                # q34's insert keys: NEGATED source key (structurally
-                # disjoint from the positive snapshot at every SF)
-                (-F.col("o_orderkey")).alias("o_orderkey"),
-                (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
-                F.lit("insert").alias("op"),
-            )
-        )
-    )
+    renamed = ("k", "price")
+    snap = o.toDF(*renamed)
+    changes = relational._merge_changes(o).toDF(*renamed, "kind")
     exp = sorted(
         (r["o_orderkey"], r["o_totalprice"], r["action"])
         for r in relational.q34_merge_upsert(spark, sf_correctness).collect()
     )
     for disjoint in (False, True):
         got = sorted(
-            (r["o_orderkey"], r["o_totalprice"], r["action"])
+            (r["k"], r["price"], r["action"])
             for r in api.merge_upsert(
-                o,
+                snap,
                 changes,
-                "o_orderkey",
+                "k",
+                op_col="kind",
                 assume_disjoint_inserts=disjoint,
                 with_action=True,
             ).collect()
@@ -1177,18 +1174,23 @@ def test_host_pagerank_weighted_matches_g03_both_weight_forms(spark, sf_smoke):
 
 
 def test_kmeans_trace_matches_p08_and_is_bit_deterministic(spark, sf_smoke):
-    """api.kmeans_trace fed the embeddings table with p08's contract
-    constants must reproduce p08's exact trace (one kernel —
-    kmeans_trace_int); with a custom k and adversarial repartitioning
-    it must still return a bit-identical trace (the integer-arithmetic
-    guarantee the API docstring sells)."""
+    """p08's oracle checks api.kmeans_trace on (vec_id, embedding) with
+    dim given; over renamed columns, with dim inferred, it must
+    reproduce p08's exact trace. With a custom k and adversarial
+    repartitioning it must still return a bit-identical trace (the
+    integer-arithmetic guarantee the API docstring sells)."""
     from big_data_analytics_cse545_spark.operators import projection
     from big_data_analytics_cse545_spark.sources import load_table
 
     e = load_table(spark, sf_smoke, "embeddings")
     got = [
         tuple(r)
-        for r in api.kmeans_trace(e, "embedding", "vec_id").collect()
+        for r in api.kmeans_trace(
+            e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
+            "v",
+            "id",
+            k=projection.P08_K, iters=projection.P08_ITERS,
+        ).collect()
     ]
     exp = [
         tuple(r)
@@ -1303,12 +1305,13 @@ def test_host_pagerank_hand_graph_and_edge_hygiene(spark):
 
 
 def test_bpe_train_matches_t24(spark, sf_smoke):
-    """api.bpe_train on the documents table must reproduce t24's merge
-    table exactly (same loop, arbitrary-DataFrame entry point)."""
-    d = load_table(spark, sf_smoke, "documents")
+    """t24's oracle-free golden checks api.bpe_train on ``text``; over a
+    renamed text column it must reproduce t24's merge table exactly."""
     got = [
         tuple(r)
-        for r in api.bpe_train(d, "text").orderBy("step").collect()
+        for r in api.bpe_train(_renamed_documents(spark, sf_smoke), "body")
+        .orderBy("step")
+        .collect()
     ]
     exp = [
         tuple(r)
@@ -1525,6 +1528,9 @@ def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
         (graph, "g03_host_pagerank_weighted", "host_pagerank_weighted"),
         (similarity, "s01_knn_bruteforce", "ann_join"),
         (similarity, "s06_ann_multitable_lsh", "ann_join"),
+        (relational, "q36_merge_upsert_general", "merge_upsert"),
+        (projection, "p08_kmeans_trace", "kmeans_trace"),
+        (text_ops, "t24_bpe_train", "bpe_train"),
     ],
 )
 def test_registry_query_is_a_binding_of_the_api_function(

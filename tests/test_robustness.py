@@ -67,8 +67,9 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
     one doc_id residue, '' on another; no fixture has one) and NULL
     embeddings (vec_id % 3 == 1, query rows among them): every query
     bound to a public api function (t06 t12 t13 t17 t21 t22, x04 x05
-    x06, d03 d08 d10 d12, s01 s06) and d07 must match its oracle on
-    them — a NULL vector is neither a query nor a neighbor."""
+    x06, d03 d08 d10 d12, s01 s06, p08) and d07 must match its oracle
+    on them — a NULL vector is neither a query nor a neighbor, nor a
+    k-means member."""
     import os
 
     import pyarrow as pa
@@ -77,6 +78,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
 
     from big_data_analytics_cse545_spark.operators import (
         dedup,
+        projection,
         relational,
         sampling,
         similarity,
@@ -142,6 +144,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
         ("d12", dedup),
         ("s01", similarity),
         ("s06", similarity),
+        ("p08", projection),
     ):
         qname = next(q for q in mod.ORACLE if q.startswith(name + "_"))
         assert_parity(mod.QUERIES[qname](spark, d), mod.ORACLE[qname], d, name)

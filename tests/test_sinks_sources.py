@@ -213,3 +213,55 @@ def test_spread_scan_requires_a_key(spark, sf_smoke):
 
     with _pytest.raises(ValueError, match="hash key"):
         spread_scan(load_table(spark, sf_smoke, "documents"))
+
+
+def test_events_load_and_f06_leave_session_confs_unchanged(spark, sf_smoke):
+    """Runtime confs are set by ``configure_runtime`` alone: loading the
+    events table and running f06 on a configured session write no conf,
+    so two clients sharing a session never see each other's settings.
+    The nanos conf is cleared first, so the session's value is the one
+    ``configure_runtime`` sets, not one an earlier test left behind."""
+    from big_data_analytics_cse545_spark.operators import ingest
+    from big_data_analytics_cse545_spark.session import configure_runtime
+
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    configure_runtime(spark)
+    before = dict(spark.conf.getAll)
+    load_table(spark, sf_smoke, "events").count()
+    ingest.f06_python_datasource_scan(spark, sf_smoke).collect()
+    assert dict(spark.conf.getAll) == before
+
+
+def test_events_timestamp_nanos_floor_to_micros(spark, tmp_path):
+    """An events file whose ts is TIMESTAMP(NANOS) (the fixtures are
+    micros) loads, and each ts is floor-truncated to the microsecond,
+    as DuckDB reads it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_000_000_999, 1_700_000_001_000_000_000]
+    n = len(ns)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns", tz="UTC")),
+                "user_id": pa.array([7] * n, pa.int64()),
+                "event_type": pa.array(["view"] * n),
+                "value": pa.array([1.0] * n),
+                "props": pa.array(["{}"] * n),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    assert str(pq.read_schema(tmp_path / "events.parquet").field("ts").type) == (
+        "timestamp[ns, tz=UTC]"
+    )
+    got = [
+        r[0]
+        for r in load_table(spark, str(tmp_path), "events")
+        .orderBy("event_id")
+        .select(F.unix_micros("ts"))
+        .collect()
+    ]
+    assert got == [t // 1000 for t in ns]

@@ -71,6 +71,11 @@ def main() -> None:
                 f"| {name} | (eager driver loop — {eager_loops[name]}) | | | | |"
             )
             continue
+        # each query is audited from an empty cache: the api's cached
+        # relations have fixed keys, so a relation cached by the previous
+        # query (g01's node universe for g02) would otherwise count in
+        # this query's digest
+        spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
             plan = explain_str(df, "simple")
