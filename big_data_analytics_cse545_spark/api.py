@@ -621,6 +621,8 @@ def ann_join(
 def _ivf_cells(
     corpus: DataFrame,
     queries: DataFrame,
+    c_emb: str,
+    q_emb: str,
     vec,
     *,
     n_cells: int,
@@ -629,9 +631,9 @@ def _ivf_cells(
     max_iter: int,
 ) -> tuple[DataFrame, DataFrame]:
     """The IVF coarse quantizer shared by :func:`ivf_join` and
-    :func:`ivf_pq_join`. ``corpus`` and ``queries`` each carry an id and
-    one embedding column (their second column); ``vec`` maps an
-    embedding column to the array<double> that is clustered and probed
+    :func:`ivf_pq_join`. ``c_emb`` and ``q_emb`` name the embedding
+    columns of ``corpus`` and ``queries``; ``vec`` maps an embedding
+    column to the array<double> that is clustered and probed
     (L2-normalized for ivf_join, the raw vector for ivf_pq_join).
     pyspark.ml KMeans learns ``n_cells`` centroids from the corpus (the
     driver holds only k×d floats) and assigns every corpus row its
@@ -641,11 +643,11 @@ def _ivf_cells(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    c_vec = corpus.withColumn("_v", array_to_vector(vec(F.col(corpus.columns[1]))))
+    c_vec = corpus.withColumn("_v", array_to_vector(vec(F.col(c_emb))))
     km = KMeans(
         k=n_cells, seed=seed, maxIter=max_iter, featuresCol="_v", predictionCol="_cell"
     ).fit(c_vec)
-    q_vec = vec(F.col(queries.columns[1]))
+    q_vec = vec(F.col(q_emb))
 
     def d2(center):
         arr = F.array(*[F.lit(float(x)) for x in center])
@@ -719,6 +721,7 @@ def ivf_join(
         queries.filter(F.col(emb_col).isNotNull()).select(
             F.col(id_col).alias("q_id"), F.col(emb_col).alias("_q_emb")
         ),
+        "_c_emb", "_q_emb",
         l2norm,
         n_cells=n_cells,
         n_probe=n_probe,
@@ -881,6 +884,7 @@ def ivf_pq_join(
     c_side, q_side = _ivf_cells(
         corpus,
         queries,
+        "n_emb", "q_emb",
         lambda col: col.cast("array<double>"),
         n_cells=n_cells,
         n_probe=n_probe,

@@ -1686,30 +1686,31 @@ ORDER BY c.c_custkey
 # q34 — MERGE / upsert semantics (snapshot ⊕ change batch)
 # ---------------------------------------------------------------------------
 
-def _merge_changes(o: DataFrame) -> DataFrame:
+def _merge_changes(o: DataFrame) -> tuple[DataFrame, DataFrame]:
     """q34's change batch over the (o_orderkey, o_totalprice) snapshot,
-    in ``api.merge_upsert``'s shape (key, payload, op): keys ≡1 (mod 10)
-    get a price update (+1000, exact in binary), keys ≡2 (mod 10) a
-    delete, and keys ≡3 (mod 10) spawn an insert under the NEGATED key
-    at half price (exact /2). Negation makes insert keys disjoint from
-    the snapshot STRUCTURALLY — orderkeys are positive at every scale
-    factor — so q34's disjoint-inserts precondition cannot silently
-    break as the fixture grows (a key+10^8 offset would collide with
-    real orderkeys past SF≈60). One scan, one projection; a delete's
-    payload is never read."""
+    as (matched, inserts) in ``api.merge_upsert``'s (key, payload, op)
+    shape: keys ≡1 (mod 10) get a price update (+1000, exact in
+    binary), keys ≡2 (mod 10) a delete (its payload is never read), and
+    keys ≡3 (mod 10) spawn an insert under the NEGATED key at half price
+    (exact /2). Negation makes insert keys disjoint from the snapshot
+    STRUCTURALLY — orderkeys are positive at every scale factor — so
+    q34's disjoint-inserts precondition cannot silently break as the
+    fixture grows (a key+10^8 offset would collide with real orderkeys
+    past SF≈60). The two halves stay apart so the matched side keeps
+    the plain key column, from which Spark infers the scan's
+    ``IsNotNull(o_orderkey)``."""
     mod = F.col("o_orderkey") % 10
-    key, price = F.col("o_orderkey"), F.col("o_totalprice")
-    return o.where(mod.isin(1, 2, 3)).select(
-        F.when(mod == 3, -key).otherwise(key).alias("o_orderkey"),
-        F.when(mod == 1, price + 1000.0)
-        .when(mod == 3, price / 2.0)
-        .otherwise(price)
-        .alias("o_totalprice"),
-        F.when(mod == 1, F.lit("update"))
-        .when(mod == 2, F.lit("delete"))
-        .otherwise(F.lit("insert"))
-        .alias("op"),
+    matched = o.where(mod.isin(1, 2)).select(
+        "o_orderkey",
+        F.when(mod == 1, F.col("o_totalprice") + 1000.0).alias("o_totalprice"),
+        F.when(mod == 1, F.lit("update")).otherwise(F.lit("delete")).alias("op"),
     )
+    inserts = o.where(mod == 3).select(
+        (-F.col("o_orderkey")).alias("o_orderkey"),
+        (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
+        F.lit("insert").alias("op"),
+    )
+    return matched, inserts
 
 
 def q34_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1737,9 +1738,9 @@ def q34_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries its ``action`` as the merge audit.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    changes = _merge_changes(o)
+    matched, inserts = _merge_changes(o)
     op = F.col("op")
-    matched = changes.where(op != "insert").select(
+    matched = matched.select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("new_price"), op
     )
     upserted = (
@@ -1753,9 +1754,7 @@ def q34_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(op, F.lit("unchanged")).alias("action"),
         )
     )
-    inserts = changes.where(op == "insert").select(
-        "o_orderkey", "o_totalprice", F.lit("insert").alias("action")
-    )
+    inserts = inserts.select("o_orderkey", "o_totalprice", op.alias("action"))
     return upserted.unionByName(inserts).orderBy("o_orderkey")
 
 
@@ -1812,16 +1811,15 @@ def q36_merge_upsert_general(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_analytics_cse545_spark import api
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    matched, inserts = _merge_changes(o)
     colliding = o.where(F.col("o_orderkey") % 10 == 3).select(
         (F.col("o_orderkey") + 1).alias("o_orderkey"),
         (F.col("o_totalprice") / 2.0).alias("o_totalprice"),
         F.lit("insert").alias("op"),
     )
+    changes = matched.unionByName(colliding).unionByName(inserts)
     return (
-        api.merge_upsert(
-            o, _merge_changes(o).unionByName(colliding), "o_orderkey",
-            with_action=True,
-        )
+        api.merge_upsert(o, changes, "o_orderkey", with_action=True)
         .select("o_orderkey", "o_totalprice", "action")
         .orderBy("o_orderkey")
     )

@@ -40,6 +40,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Local-mode memory headroom; on a real cluster the submitter sets this.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Creator-owned like the shuffle partitions: configure_runtime
+        # never writes these, so a harness's own Arrow batch size (the
+        # chaos sweep's pathological 7) or codec survives every query.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -53,7 +58,9 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     every registry entry point (``__spark_entry__._wrap``) applies it to
     the session it is handed, so operators never write a conf
     themselves. Only runtime-mutable confs may be touched here — never
-    JVM-startup ones.
+    JVM-startup ones — and never one the session's creator owns: the
+    Arrow batch size and parquet codec are left as the session has them,
+    and the shuffle partition count is replaced only at Spark's default.
     """
     # Deterministic timestamp semantics regardless of host timezone —
     # required for DuckDB-oracle parity on date/window queries.
@@ -65,8 +72,6 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     # Arrow for every JVM<->Python boundary (pandas UDFs, toPandas).
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
     # Custom Python data sources (sources/pysource.py) implement
     # pushFilters; Spark refuses to plan them unless pushdown is
     # explicitly enabled (off by default in 4.x).
@@ -74,7 +79,12 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # events.ts has shipped as TIMESTAMP(NANOS), which Spark 4 rejects
     # by default: read it as a bigint of nanoseconds, which
     # sources.tables.normalize_events_ts floor-truncates to
-    # microseconds like DuckDB (batch and streaming scans alike).
+    # microseconds like DuckDB (batch and streaming scans alike). The
+    # conf is session-wide: ANY TIMESTAMP(NANOS) column read on a
+    # configured session arrives as a bigint of nanoseconds, where Spark
+    # would otherwise raise PARQUET_TYPE_ILLEGAL; only events.ts is
+    # converted back, so callers reading other such files must convert
+    # them (e.g. ``timestamp_micros(col div 1000)``).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # A vanilla session defaults to 200 shuffle partitions — at test SF
     # that is pure scheduling overhead (and for stateful streaming, 200

@@ -815,7 +815,8 @@ def test_merge_upsert_matches_q34(spark, sf_correctness):
     )
     renamed = ("k", "price")
     snap = o.toDF(*renamed)
-    changes = relational._merge_changes(o).toDF(*renamed, "kind")
+    matched, inserts = relational._merge_changes(o)
+    changes = matched.unionByName(inserts).toDF(*renamed, "kind")
     exp = sorted(
         (r["o_orderkey"], r["o_totalprice"], r["action"])
         for r in relational.q34_merge_upsert(spark, sf_correctness).collect()

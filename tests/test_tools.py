@@ -69,3 +69,18 @@ def test_configure_runtime_respects_creator_shuffle_setting(spark, monkeypatch):
         assert spark.conf.get(key) == "7", "env override must not clobber a deliberate conf"
     finally:
         spark.conf.set(key, prev)
+    # the Arrow batch size and codec are the creator's too: chaos_partitions
+    # builds its session with a pathological maxRecordsPerBatch of 7
+    creator = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+        "spark.sql.parquet.compression.codec": "zstd",
+    }
+    prev = {k: spark.conf.get(k) for k in creator}
+    try:
+        for k, v in creator.items():
+            spark.conf.set(k, v)
+        configure_runtime(spark)
+        assert {k: spark.conf.get(k) for k in creator} == creator
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
