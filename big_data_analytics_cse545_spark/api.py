@@ -19,7 +19,8 @@ check the functions users call:
   d10 → :func:`incremental_dedup`, d12 → :func:`cdc_dedup`;
 * graph, similarity: g01 → :func:`host_pagerank`,
   g02 → :func:`host_trustrank`, g03 → :func:`host_pagerank_weighted`,
-  s01 → :func:`ann_join` (brute force), s06 → :func:`ann_join` (LSH);
+  s01 → :func:`ann_join` (brute force), s02 → :func:`ann_join` (one
+  LSH table), s06 → :func:`ann_join` (three LSH tables);
 * projection, tokenizers: p08 → :func:`kmeans_trace`,
   t24 → :func:`bpe_train`;
 * relational: q36 → :func:`merge_upsert`.
@@ -500,12 +501,10 @@ def ann_join(
     ~n_tables/2^n_planes of the corpus. Table t uses plane indices
     t*n_planes..t*n_planes+n_planes-1 of the same md5 sign family, so
     n_tables=1 is exactly the round-2 behavior (and s02's table). s01
-    binds the brute-force form (``k=5, dim=64``) and s06 the LSH form
-    (``k=3, n_planes=6, n_tables=3, dim=64``), so their DuckDB oracles
-    check this function. s02 computes the ``n_tables=1`` rows with its
-    own direct bucket join: through this function (explode, id-pair
-    dedup, embedding rejoin) its per-step task CPU read higher than
-    its own spread.
+    binds the brute-force form (``k=5, dim=64``), s02 the one-table LSH
+    form (``k=3, n_planes=6, n_tables=1, dim=64``) and s06 the
+    several-table form (``k=3, n_planes=6, n_tables=3, dim=64``), so
+    their DuckDB oracles check this function.
 
     Picking ``n_tables`` from a recall target — measured operating
     points (SCALE.md ANN table, 10× clustered corpus, within-cluster
@@ -516,17 +515,22 @@ def ann_join(
     relation is ids only). On structureless data recall ≈ the candidate
     fraction regardless of L (rotated rows: 0.09 → 0.22 at L=3) — no
     table count fixes data with no neighborhoods; use bruteforce (s01)
-    or the IVF path there. The candidate stage is NARROW:
-    only (id, table, bucket) rows ride the ×n_tables explode and the
-    pair-dedup shuffle — embeddings rejoin by id afterwards, so the
-    shuffle payload is independent of the embedding width.
+    or the IVF path there.
+
+    The table count picks the candidate join. With ONE table no pair
+    can collide twice, so the (id, embedding, norm, bucket) rows join
+    on the bucket directly. With SEVERAL tables the candidate stage is
+    NARROW: only (id, table, bucket) rows ride the ×n_tables explode
+    and the pair-dedup shuffle — embeddings rejoin by id afterwards, so
+    the shuffle payload is independent of the embedding width.
 
     ``dim``: optional embedding dimensionality. When given, plane signs
     are embedded as literal arrays (cheapest codegen —
-    ``operators.similarity.hyperplane_bucket_expr``, s02's bucket);
-    when None they are computed per-row from size() — still JVM-only,
-    no driver round-trip in either case. NULL vectors are neither
-    queries nor neighbors.
+    ``operators.similarity.hyperplane_bucket_expr``); when None they
+    are computed per-row from size() — still JVM-only, no driver
+    round-trip in either case. Scoring is the same for both: per-row
+    hoisted norms and ``cosine_pre``. NULL vectors are neither queries
+    nor neighbors.
 
     ``exclude_self``: drop neighbor_id == q_id matches. Set False when
     ``queries`` and ``corpus`` are unrelated tables whose ids may
@@ -534,7 +538,6 @@ def ann_join(
     excluded from that query's top-k.
     """
     from big_data_analytics_cse545_spark.functions.vectors import (
-        cosine,
         cosine_pre,
         dot,
         norm,
@@ -543,44 +546,48 @@ def ann_join(
         hyperplane_bucket_expr,
     )
 
-    # engine-wide policy: null vectors are excluded from similarity math
-    # (a null cosine would otherwise fill sparse top-k tails with null
-    # rows under NULLS LAST ranking)
-    q = queries.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("q_id"), F.col(emb_col).alias("_q_emb")
-    )
-    c = corpus.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("neighbor_id"), F.col(emb_col).alias("_c_emb")
-    )
-    if dim is not None:
-        # hoist each side's norm out of the pair loop: folded once per
-        # ROW here (before any candidate join), not once per pair —
-        # bit-identical scoring either way (tests/test_functions.py);
-        # the candidate stage prunes these columns, so the ×n_tables
-        # explode still ships ids+buckets only
-        q = q.withColumn("_q_nrm", norm(F.col("_q_emb")))
-        c = c.withColumn("_c_nrm", norm(F.col("_c_emb")))
+    def bucket(col: str, t: int):
+        if dim is not None:
+            return hyperplane_bucket_expr(col, n_planes, dim, plane_offset=t * n_planes)
+        return _sized_bucket_expr(col, n_planes, t * n_planes)
+
+    # one table's bucket is built once, over the caller's column, and
+    # shared by both sides: each build is hundreds of driver calls
+    one_table = method == "lsh" and n_tables == 1
+    table0 = [bucket(emb_col, 0)] if one_table else []
+
+    def side(df: DataFrame, id_name: str, p: str) -> DataFrame:
+        # engine-wide policy: null vectors are excluded from similarity
+        # math (a null cosine would otherwise fill sparse top-k tails
+        # with null rows under NULLS LAST ranking). The norm is hoisted
+        # out of the pair loop: folded once per ROW here, not once per
+        # pair — bit-identical to cosine(q, c) (tests/test_functions.py)
+        return (
+            df.filter(F.col(emb_col).isNotNull())
+            .select(
+                F.col(id_col).alias(id_name),
+                F.col(emb_col).alias(f"_{p}_emb"),
+                *[b.alias(f"_{p}_b") for b in table0],
+            )
+            .withColumn(f"_{p}_nrm", norm(F.col(f"_{p}_emb")))
+        )
+
+    q, c = side(queries, "q_id", "q"), side(corpus, "neighbor_id", "c")
     not_self = (
         (F.col("q_id") != F.col("neighbor_id")) if exclude_self else F.lit(True)
     )
-    if method == "lsh":
+    if one_table:
+        # no pair can collide twice, so the wide rows join on the bucket
+        # directly — no explode, no pair dedup, no rejoin
+        joined = q.join(c, (F.col("_q_b") == F.col("_c_b")) & not_self)
+    elif method == "lsh":
         # one NARROW row per (id, table): ids and buckets only — the
         # ×n_tables blow-up must never ship the embeddings; join key is
         # (table, bucket) so tables never cross-match, and table t uses
         # the independent planes t*n_planes... The expression is built
-        # once over "_emb" and shared by both sides: each build is
-        # thousands of driver calls and its own analysis
+        # once over "_emb" and shared by both sides
         sig = F.posexplode(
-            F.array(
-                *[
-                    hyperplane_bucket_expr(
-                        "_emb", n_planes, dim, plane_offset=t * n_planes
-                    )
-                    if dim is not None
-                    else _sized_bucket_expr("_emb", n_planes, t * n_planes)
-                    for t in range(n_tables)
-                ]
-            )
+            F.array(*[bucket("_emb", t) for t in range(n_tables)])
         ).alias("_t", "_b")
         q_sig = q.select("q_id", F.col("_q_emb").alias("_emb")).select("q_id", sig)
         c_sig = c.select("neighbor_id", F.col("_c_emb").alias("_emb")).select(
@@ -597,19 +604,12 @@ def ann_join(
         joined = cand.join(q, "q_id").join(c, "neighbor_id")
     else:
         joined = q.join(c, not_self)
-    if dim is not None:
-        # hoisted per-row norms (bit-identical to cosine(q, c);
-        # tests/test_functions.py) — the norm fold leaves the pair loop
-        cos = F.round(
-            cosine_pre(
-                dot(F.col("_q_emb"), F.col("_c_emb")),
-                F.col("_q_nrm"),
-                F.col("_c_nrm"),
-            ),
-            6,
-        )
-    else:
-        cos = F.round(cosine(F.col("_q_emb"), F.col("_c_emb")), 6)
+    cos = F.round(
+        cosine_pre(
+            dot(F.col("_q_emb"), F.col("_c_emb")), F.col("_q_nrm"), F.col("_c_nrm")
+        ),
+        6,
+    )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
         joined.select("q_id", "neighbor_id", cos.alias("cos_sim"))

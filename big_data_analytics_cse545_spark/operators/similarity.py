@@ -10,15 +10,16 @@ at 100 TB the cross join in s01 must never run, which is exactly the
 reference's reason for LSH (A2 PDF p.3).
 
 Hashing for LSH planes is md5-parity based, so the DuckDB oracle can
-regenerate identical planes with SQL md5(). s01 and s06 are bindings of
-``api.ann_join`` (brute force; multi-table LSH), whose literal-sign
-buckets are :func:`hyperplane_bucket_expr`.
+regenerate identical planes with SQL md5(). s01, s02 and s06 are
+bindings of ``api.ann_join`` (brute force; one-table LSH; multi-table
+LSH), whose literal-sign buckets are :func:`hyperplane_bucket_expr`.
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -69,6 +70,21 @@ def _with_norm(e: DataFrame) -> DataFrame:
     return e.withColumn("nrm", norm(F.col("embedding")))
 
 
+def _ann_join_queries(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
+    """The query set against the whole embeddings table through
+    ``api.ann_join(..., dim=DIM, **kwargs)``, as (q_id, neighbor_id, rk,
+    cos_sim) ordered by query and rank — the body of s01, s02 and s06."""
+    from big_data_analytics_cse545_spark import api
+
+    e = load_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
+    return (
+        api.ann_join(q, e, "embedding", "vec_id", dim=DIM, **kwargs)
+        .select("q_id", "neighbor_id", "rk", "cos_sim")
+        .orderBy("q_id", "rk")
+    )
+
+
 # ---------------------------------------------------------------------------
 # s01 — brute-force cosine top-k (correctness baseline)
 # ---------------------------------------------------------------------------
@@ -83,15 +99,7 @@ def s01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor-id tiebreak, so the ordering is engine-independent; NULL
     vectors are neither queries nor neighbors.
     """
-    from big_data_analytics_cse545_spark import api
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return (
-        api.ann_join(q, e, "embedding", "vec_id", k=TOP_K, dim=DIM)
-        .select("q_id", "neighbor_id", "rk", "cos_sim")
-        .orderBy("q_id", "rk")
-    )
+    return _ann_join_queries(spark, sf_dir, k=TOP_K)
 
 
 _COS_SQL = """
@@ -153,49 +161,34 @@ def hyperplane_bucket_expr(
     cost more in analysis/codegen per query than the interpreted HOF
     fold costs at bench scale (s06 carries 18 planes × 2 join sides;
     OPTIMIZATION_r12.md has the A/B). The HOF form stays: one compact
-    node per plane."""
+    node per plane, whose signs are ONE array literal built from a numpy
+    vector: ``F.array`` over ``dim`` scalar ``F.lit`` gives the same
+    optimized plan, but ``dim`` literal nodes per plane for Spark to
+    analyse at every DataFrame step."""
     bucket = F.lit(0)
     for p in range(n_planes):
-        signs = F.array(
-            *[F.lit(float(_plane_sign(plane_offset + p, d))) for d in range(dim)]
+        signs = np.array(
+            [_plane_sign(plane_offset + p, d) for d in range(dim)], dtype=np.float64
         )
-        proj = dot(signs, F.col(emb_col))
+        proj = dot(F.lit(signs), F.col(emb_col))
         bucket = bucket + F.when(proj > 0, F.lit(2 ** p)).otherwise(F.lit(0))
     return bucket
 
 
 def s02_ann_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: same-bucket candidates, then exact
-    cosine top-3 within the bucket.
+    cosine top-3 within the bucket — ``api.ann_join(..., method="lsh",
+    n_planes=N_PLANES, n_tables=1, dim=DIM)``, whose one-table form
+    joins the rows on the bucket directly.
 
     The reference's banding funnel (``a2_ahuja.py:140-170``) with
     hyperplane signatures instead of minhash bands: candidates share all
     6 signature bits (one 64-bucket partition), so the exact scoring
-    touches ~1/64 of the corpus per query.
+    touches ~1/64 of the corpus per query. NULL vectors are neither
+    queries nor neighbors.
     """
-    e = _with_norm(
-        load_table(spark, sf_dir, "embeddings").withColumn(
-            "bucket", hyperplane_bucket_expr()
-        )
-    )
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = _pair_cosine()
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        q.join(
-            e,
-            (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select("q_id", "vec_id", cos.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "rk", "cos_sim")
-        .orderBy("q_id", "rk")
+    return _ann_join_queries(
+        spark, sf_dir, k=3, method="lsh", n_planes=N_PLANES, n_tables=1
     )
 
 
@@ -223,7 +216,7 @@ def hyperplane_bucket_sql(
 
 def _s02_sql() -> str:
     return f"""
-WITH b AS (SELECT vec_id, embedding, {hyperplane_bucket_sql()} AS bucket FROM embeddings),
+WITH b AS (SELECT vec_id, embedding, {hyperplane_bucket_sql()} AS bucket FROM embeddings WHERE embedding IS NOT NULL),
 q AS (
   SELECT vec_id AS q_id, embedding AS q_emb, bucket AS q_bucket
   FROM b WHERE vec_id % {QUERY_MOD} = 0
@@ -499,24 +492,8 @@ def s06_ann_multitable_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARE an OR-construction); here the bands are whole hyperplane
     tables over an embedding column.
     """
-    from big_data_analytics_cse545_spark import api
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % QUERY_MOD == 0)
-    return (
-        api.ann_join(
-            q,
-            e,
-            "embedding",
-            "vec_id",
-            k=3,
-            method="lsh",
-            n_planes=N_PLANES,
-            n_tables=N_TABLES,
-            dim=DIM,
-        )
-        .select("q_id", "neighbor_id", "rk", "cos_sim")
-        .orderBy("q_id", "rk")
+    return _ann_join_queries(
+        spark, sf_dir, k=3, method="lsh", n_planes=N_PLANES, n_tables=N_TABLES
     )
 
 

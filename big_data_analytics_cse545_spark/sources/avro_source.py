@@ -39,6 +39,7 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from big_data_analytics_cse545_spark.sources import register_data_source
 from big_data_analytics_cse545_spark.sources.avro_io import (
     _field_types,
     avro_schema_to_ddl,
@@ -183,4 +184,4 @@ class AvroDataSource(DataSource):
 
 def register(spark) -> None:
     """Idempotent registration (re-registering overwrites; stateless)."""
-    spark.dataSource.register(AvroDataSource)
+    register_data_source(spark, AvroDataSource)

@@ -48,6 +48,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from big_data_analytics_cse545_spark.sources import register_data_source
+
 CRAWL_N_ROWS = 4000
 CRAWL_N_PARTS = 8
 CRAWL_EPOCH0 = 1_700_000_000
@@ -173,7 +175,7 @@ class CrawlLogDataSource(DataSource):
 def register(spark) -> None:
     """Idempotent registration (re-registering overwrites, which is
     fine — the class is stateless between reads)."""
-    spark.dataSource.register(CrawlLogDataSource)
+    register_data_source(spark, CrawlLogDataSource)
 
 
 # ---------------------------------------------------------------------------
@@ -339,4 +341,4 @@ class JsonlSinkDataSource(DataSource):
 
 
 def register_sink(spark) -> None:
-    spark.dataSource.register(JsonlSinkDataSource)
+    register_data_source(spark, JsonlSinkDataSource)

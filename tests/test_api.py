@@ -84,9 +84,9 @@ def test_ann_join_matches_operator(spark, sf_correctness):
 
 
 def test_ann_join_lsh_mode_runs(spark, sf_correctness):
-    """One LSH table of 6 planes is s02's funnel: s02 keeps its own
-    bucket join, so ann_join over renamed columns must return s02's
-    rows."""
+    """One LSH table of 6 planes is s02's funnel: s02 binds the literal
+    dim=64 form, so ann_join over renamed columns, with per-row signs
+    (dim=None), must return s02's rows."""
     e = load_table(spark, sf_correctness, "embeddings").select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v")
     )
@@ -1066,6 +1066,23 @@ def test_ann_join_lsh_candidate_stage_is_narrow(spark, sf_smoke):
         )
 
 
+def test_ann_join_single_table_joins_on_the_bucket(spark, sf_smoke):
+    """With one LSH table no pair can collide twice, so the rows join on
+    the bucket directly: no posexplode of signatures and no
+    (q_id, neighbor_id) pair-dedup shuffle."""
+    from big_data_analytics_cse545_spark.plans import shuffle_exchanges
+
+    e = load_table(spark, sf_smoke, "embeddings")
+    q = e.filter(F.col("vec_id") % 10 == 0)
+    df = api.ann_join(
+        q, e, "embedding", "vec_id", k=3, method="lsh", n_tables=1, dim=64
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate posexplode" not in plan
+    shuffles = shuffle_exchanges(df)
+    assert not any("q_id" in s and "neighbor_id" in s for s in shuffles), shuffles
+
+
 def test_ivf_pq_join_hot_cell_sharding_is_exact(spark, sf_correctness, monkeypatch):
     """Forcing the hot-cell sub-shard path (cell row budget shrunk below
     the fixture's cell sizes) must return exactly the unsharded result:
@@ -1528,6 +1545,7 @@ def test_text_and_dedup_functions_handle_documents_without_tokens(spark):
         (graph, "g02_host_trustrank", "host_trustrank"),
         (graph, "g03_host_pagerank_weighted", "host_pagerank_weighted"),
         (similarity, "s01_knn_bruteforce", "ann_join"),
+        (similarity, "s02_ann_hyperplane_lsh", "ann_join"),
         (similarity, "s06_ann_multitable_lsh", "ann_join"),
         (relational, "q36_merge_upsert_general", "merge_upsert"),
         (projection, "p08_kmeans_trace", "kmeans_trace"),

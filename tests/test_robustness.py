@@ -67,7 +67,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
     one doc_id residue, '' on another; no fixture has one) and NULL
     embeddings (vec_id % 3 == 1, query rows among them): every query
     bound to a public api function (t06 t12 t13 t17 t21 t22, x04 x05
-    x06, d03 d08 d10 d12, s01 s06, p08) and d07 must match its oracle
+    x06, d03 d08 d10 d12, s01 s02 s06, p08) and d07 must match its oracle
     on them — a NULL vector is neither a query nor a neighbor, nor a
     k-means member."""
     import os
@@ -143,6 +143,7 @@ def test_null_key_semantics_match_sql(spark, sf_correctness, tmp_path):
         ("d10", dedup),
         ("d12", dedup),
         ("s01", similarity),
+        ("s02", similarity),
         ("s06", similarity),
         ("p08", projection),
     ):

@@ -17,6 +17,23 @@ def test_similarity_oracle_parity(spark, sf_correctness, name):
     assert_parity(df, similarity.ORACLE[name], sf_correctness, name)
 
 
+def test_hyperplane_bucket_builds_one_literal_per_plane(monkeypatch):
+    """Each plane's signs are one array literal: mapping ``F.lit`` over
+    the ``dim`` entries of a plane gives the same optimized plan, but
+    ``dim`` literal nodes per plane to analyse at every DataFrame step."""
+    from pyspark.sql import functions as F
+
+    real, calls = F.lit, []
+
+    def spy(x):
+        calls.append(x)
+        return real(x)
+
+    monkeypatch.setattr(F, "lit", spy)
+    similarity.hyperplane_bucket_expr(n_planes=6, dim=64)
+    assert len(calls) < 64, f"{len(calls)} F.lit calls for 6 planes"
+
+
 def test_ivf_finds_exact_top1_mostly(spark, sf_correctness):
     """IVF with nprobe=2 should find the exact nearest neighbor for most
     queries (coarse cells are label clusters, so the top hit is usually

@@ -232,6 +232,29 @@ def test_events_load_and_f06_leave_session_confs_unchanged(spark, sf_smoke):
     assert dict(spark.conf.getAll) == before
 
 
+def test_data_sources_register_on_a_second_session(spark, sf_smoke):
+    """The Python data sources register on every session of one
+    application: after the shared session registered them, a
+    ``newSession()`` registers them again (no
+    ``[DATA_SOURCE_ALREADY_EXISTS]``) and f06 runs there with the
+    shared session's rows. Registering leaves the active session as it
+    was."""
+    from big_data_analytics_cse545_spark.operators import ingest
+    from big_data_analytics_cse545_spark.session import configure_runtime
+    from big_data_analytics_cse545_spark.sources import avro_source, pysource
+
+    active = spark._jvm.org.apache.spark.sql.SparkSession.getActiveSession
+    before = active()
+    for register in (pysource.register, pysource.register_sink, avro_source.register):
+        register(spark)
+    other = configure_runtime(spark.newSession())
+    pysource.register_sink(other)
+    avro_source.register(other)
+    got = ingest.f06_python_datasource_scan(other, sf_smoke).collect()
+    assert got == ingest.f06_python_datasource_scan(spark, sf_smoke).collect()
+    assert active().equals(before)
+
+
 def test_events_timestamp_nanos_floor_to_micros(spark, tmp_path):
     """An events file whose ts is TIMESTAMP(NANOS) (the fixtures are
     micros) loads, and each ts is floor-truncated to the microsecond,
