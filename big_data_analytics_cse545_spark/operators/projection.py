@@ -100,8 +100,8 @@ def p02_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     proj_cols = []
     for p in range(RP_DIMS):
-        signs = F.array(*[F.lit(_rp_entry(p, d)) for d in range(DIM)])
-        proj_cols.append(dot(signs, F.col("embedding")).alias(f"proj{p}"))
+        signs = np.array([_rp_entry(p, d) for d in range(DIM)], dtype=np.float64)
+        proj_cols.append(dot(F.lit(signs), F.col("embedding")).alias(f"proj{p}"))
     projected = e.select("vec_id", *proj_cols)
     stacked = projected.select(
         F.explode(

@@ -25,6 +25,12 @@ def get_spark(
     Tunables come from the environment so the driver/bench can resize:
       SPARK_GRAFT_CPUS   -> local[$N] master (default local[*])
       SPARK_GRAFT_SHUFFLE_PARTITIONS -> spark.sql.shuffle.partitions
+
+    The builder also sizes the codegen cache
+    (``spark.sql.codegen.cache.maxEntries``) to 4000 classes, so a warm
+    pass over the registry compiles no class again. It is a static conf:
+    it takes effect only when this call creates the application's first
+    session.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -46,6 +52,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        # Static (JVM-wide, read once), so it is set here and never by
+        # configure_runtime. Spark's default of 100 is smaller than one
+        # perfbench pass, so every warm call recompiled with Janino; 4000
+        # is the smallest measured size that holds all 126 registry
+        # queries (README.md, "Session notes").
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

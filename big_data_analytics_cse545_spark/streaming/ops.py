@@ -52,9 +52,13 @@ def _stream_scan(spark: SparkSession, sf_dir: str, table_file: str) -> DataFrame
     standard Spark writer layout of part-* files) streams the directory
     itself. The glob alone would silently match zero leaf files on the
     directory layout — every streaming query would return empty with no
-    error pointing at the scan (round-6 review)."""
+    error pointing at the scan (round-6 review). The schema comes from
+    the batch loader's per-file-version cache, so a warm call starts no
+    inference job."""
+    from big_data_analytics_cse545_spark.sources.tables import parquet_schema
+
     path = os.path.join(sf_dir, table_file)
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (

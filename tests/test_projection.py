@@ -490,3 +490,20 @@ def test_pq_rejects_int16_overflowing_codebooks(spark, sf_correctness):
         api.pq_ann_join(
             e.limit(10), e, "embedding", "vec_id", n_centroids=40_000
         )
+
+
+def test_p02_builds_one_literal_per_projection_row(spark, sf_smoke, monkeypatch):
+    """Each projection row is one array literal: mapping ``F.lit`` over
+    the ``DIM`` entries of a row gives the same optimized plan, but
+    ``DIM`` literal nodes per row to analyse at every DataFrame step."""
+    from pyspark.sql import functions as F
+
+    real, calls = F.lit, []
+
+    def spy(x):
+        calls.append(x)
+        return real(x)
+
+    monkeypatch.setattr(F, "lit", spy)
+    projection.p02_random_projection(spark, sf_smoke)
+    assert len(calls) < projection.DIM, f"{len(calls)} F.lit calls for {projection.RP_DIMS} rows"

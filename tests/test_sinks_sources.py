@@ -288,3 +288,62 @@ def test_events_timestamp_nanos_floor_to_micros(spark, tmp_path):
         .collect()
     ]
     assert got == [t // 1000 for t in ns]
+
+
+def test_load_table_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
+    """The schema cache keys on the file's identity, not only its path:
+    a file rewritten in place with an extra column is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"], "r_comment": ["x", "y"]}),
+        path,
+    )
+    got = load_table(spark, str(tmp_path), "region")
+    assert got.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(got.collect()) == [(0, "A", "x"), (1, "B", "y")]
+
+
+def test_directory_layout_scans_return_the_file_layout_rows(spark, sf_smoke, tmp_path):
+    """A ``<table>.parquet`` directory of part files, read with the cached
+    schema, gives the rows of the single-file layout, in the batch
+    loader and in the streaming scan alike."""
+    from big_data_analytics_cse545_spark.streaming.ops import _events_stream, _run_to_table
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    for name in ("events", "documents"):
+        load_table(spark, sf_smoke, name).repartition(3).write.parquet(
+            str(tmp_path / f"{name}.parquet")
+        )
+        assert rows(load_table(spark, str(tmp_path), name)) == rows(
+            load_table(spark, sf_smoke, name)
+        )
+    streamed = _run_to_table(
+        _events_stream(spark, str(tmp_path)), spark, "events_dir_mem", "append"
+    )
+    assert rows(streamed) == rows(load_table(spark, sf_smoke, "events"))
+
+
+def test_uri_sf_dir_scans_read_the_path_as_given(spark, sf_smoke, tmp_path):
+    """A ``file://`` sf dir reaches Spark unchanged (the schema cache
+    never rewrites a URI), in the batch loader and the streaming scan."""
+    import shutil
+
+    from big_data_analytics_cse545_spark.streaming.ops import _events_stream, _run_to_table
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    for name in ("region", "events"):
+        shutil.copy(os.path.join(sf_smoke, f"{name}.parquet"), tmp_path)
+    uri = tmp_path.as_uri()
+    for name in ("region", "events"):
+        assert rows(load_table(spark, uri, name)) == rows(load_table(spark, sf_smoke, name))
+    streamed = _run_to_table(_events_stream(spark, uri), spark, "events_uri_mem", "append")
+    assert rows(streamed) == rows(load_table(spark, sf_smoke, "events"))
