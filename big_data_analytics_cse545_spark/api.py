@@ -650,7 +650,7 @@ def _ivf_cells(
     q_vec = vec(F.col(q_emb))
 
     def d2(center):
-        arr = F.array(*[F.lit(float(x)) for x in center])
+        arr = F.lit(center)  # clusterCenters() gives float64 ndarrays
         return F.aggregate(
             F.zip_with(q_vec, arr, lambda x, ctr: (x - ctr) * (x - ctr)),
             F.lit(0.0),
@@ -2049,8 +2049,8 @@ def host_pagerank(
     Edge hygiene here, ranking in :func:`graph.pagerank_micro`: null
     endpoints and self-loops are dropped, parallel edges collapse to
     one (DISTINCT — rank flows per LINK, not per mention), out-degree
-    is computed once and rides the persisted edge relation through all
-    iterations. ``extra_nodes`` (one ``host`` column) adds isolated
+    is computed once and rides the checkpointed edge relation through
+    all iterations. ``extra_nodes`` (one ``host`` column) adds isolated
     nodes that must appear in the output with the floor rank — e.g.
     every host seen in the corpus, linked-to or not, the g01 shape.
 
@@ -2062,30 +2062,27 @@ def host_pagerank(
     dangling mass is dropped, not redistributed (documented
     simplification).
 
-    Cache contract (r8 ADVICE, deliberate): the node/edge relations
-    persist under FIXED session keys, so only the MOST RECENT call's
-    returned DataFrame keeps its persisted inputs — a second call
-    releases the first's caches, and an earlier not-yet-collected
-    result silently recomputes its iters-deep lineage from the raw
-    edges (correct, just uncached). Concurrent calls are unsupported
-    (module-level cache dict). Per-call keys were rejected: nothing
-    marks when a lazy result is done being used, so unique keys leak
-    one host-sized cache per call for the session's lifetime — the
-    exact leak ``swap_cached`` exists to bound.
+    Cache contract: the node and edge relations are local checkpoints
+    (``localCheckpoint(eager=False)``, the discipline of
+    ``text.train_bpe``) that belong to the DataFrame this call returns.
+    Spark's ContextCleaner frees their blocks once that DataFrame is
+    garbage-collected, so concurrent calls share nothing and an earlier
+    result keeps its own relations until it is dropped. Like any local
+    checkpoint, a relation whose blocks are lost with an executor is
+    not recomputed: the query using it fails instead.
     """
-    from big_data_analytics_cse545_spark.cache import swap_cached
     from big_data_analytics_cse545_spark.operators.graph import (
         attach_out_degree,
         pagerank_micro,
     )
 
     e = _clean_host_edges(edges, src_col, dst_col)
-    nodes = swap_cached("api_pagerank_nodes", _host_node_universe(e, extra_nodes))
+    nodes = _host_node_universe(e, extra_nodes).localCheckpoint(eager=False)
     e = e.distinct()
     outdeg = e.groupBy("src_host").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    e = swap_cached("api_pagerank_edges", e.join(outdeg, "src_host"))
+    e = e.join(outdeg, "src_host").localCheckpoint(eager=False)
     return attach_out_degree(pagerank_micro(nodes, e, iters=iters), e)
 
 
@@ -2105,11 +2102,10 @@ def host_trustrank(
     page reaches scores exactly 0 instead of :func:`host_pagerank`'s
     uniform floor. Same exact BIGINT fixed-point arithmetic, same edge
     hygiene, same output schema (host, rank_micro, out_deg), same
-    fixed-key cache contract; ``host_pagerank`` is the all-seeds
+    per-call cache contract; ``host_pagerank`` is the all-seeds
     special case of the shared kernel (``graph.trustrank_micro``).
     Seeds are a host-dimension relation → broadcast-joined onto the
     node universe, never shuffling the graph."""
-    from big_data_analytics_cse545_spark.cache import swap_cached
     from big_data_analytics_cse545_spark.operators.graph import (
         attach_out_degree,
         trustrank_micro,
@@ -2121,19 +2117,19 @@ def host_trustrank(
             "is_seed", F.lit(True)
         )
     )
-    nodes = swap_cached(
-        "api_trustrank_nodes",
+    nodes = (
         _host_node_universe(e, extra_nodes)
         .join(seed_flags, "host", "left")
         .select(
             "host", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
-        ),
+        )
+        .localCheckpoint(eager=False)
     )
     e = e.distinct()
     outdeg = e.groupBy("src_host").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    e = swap_cached("api_trustrank_edges", e.join(outdeg, "src_host"))
+    e = e.join(outdeg, "src_host").localCheckpoint(eager=False)
     ranks = trustrank_micro(nodes, e, F.col("is_seed"), iters=iters)
     return attach_out_degree(ranks, e)
 
@@ -2168,9 +2164,8 @@ def host_pagerank_weighted(
     r·w·85 < 2^63 exactness bound before the loop (raising ValueError
     with the gcd/cap pre-normalization remedy rather than letting
     Spark's long arithmetic wrap). Same edge hygiene (null endpoints and
-    self-loops dropped), same fixed-key cache contract as
+    self-loops dropped), same per-call cache contract as
     :func:`host_pagerank` (see its docstring)."""
-    from big_data_analytics_cse545_spark.cache import swap_cached
     from big_data_analytics_cse545_spark.operators.graph import (
         attach_out_weight,
         trustrank_micro,
@@ -2200,12 +2195,10 @@ def host_pagerank_weighted(
     e = _clean_host_edges(edges, src_col, dst_col, w.alias("w_in")).filter(
         F.col("w_in").isNotNull() & (F.col("w_in") > 0)
     )
-    nodes = swap_cached(
-        "api_pagerank_weighted_nodes", _host_node_universe(e, extra_nodes)
-    )
+    nodes = _host_node_universe(e, extra_nodes).localCheckpoint(eager=False)
     e = e.groupBy("src_host", "dst_host").agg(F.sum("w_in").alias("w"))
     outw = e.groupBy("src_host").agg(F.sum("w").alias("outw"))
-    e = swap_cached("api_pagerank_weighted_edges", e.join(outw, "src_host"))
+    e = e.join(outw, "src_host").localCheckpoint(eager=False)
     ranks = trustrank_micro(nodes, e, F.lit(True), iters=iters, weighted=True)
     return attach_out_weight(ranks, e)
 

@@ -18,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_analytics_cse545_spark.cache import swap_cached
 from big_data_analytics_cse545_spark.functions.text import SQL_TOKENS, shingles, tokens
 from big_data_analytics_cse545_spark.sources import load_table, spread_scan
 
@@ -791,16 +790,16 @@ def d06_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sh = _shingles_df(spark, sf_dir)
     docs = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("shingles"))
-    # one live cache entry (the g01-edges discipline): the shingle
+    # per-call local checkpoints (the g01-edges discipline): the shingle
     # aggregation otherwise re-runs for the CountVectorizer fit pass AND
     # each side of approxSimilarityJoin (round-12 optimization, guide
     # §5 — reuse > recompute when the lineage is a corpus tokenize)
-    docs = swap_cached("d06_docs", docs)
+    docs = docs.localCheckpoint(eager=False)
     cv = CountVectorizer(
         inputCol="shingles", outputCol="features", binary=True
     ).fit(docs)
     v = cv.transform(docs).select("doc_id", "features")
-    v = swap_cached("d06_vecs", v)
+    v = v.localCheckpoint(eager=False)
     mh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=8, seed=42
     ).fit(v)
@@ -1612,13 +1611,12 @@ def shared_spans(
     token-position bounds of each maximal span in both docs; internally
     periodic text yields one span per alignment (diagonal), which is
     what token-level removal needs. Scale shape: the gram relation is
-    computed ONCE (swap-cached; both the winnow branch and both join
-    sides read it), shuffles carry (doc_id, pos, 32-hex hash) rows
-    only, and the quadratic confirm is confined to df-capped candidate
-    pairs — the d03/t15 100 TB shape. ``strip_spans`` below is the
+    computed ONCE (a per-call local checkpoint; both the winnow branch
+    and both join sides read it), shuffles carry (doc_id, pos, 32-hex
+    hash) rows only, and the quadratic confirm is confined to df-capped
+    candidate pairs — the d03/t15 100 TB shape. ``strip_spans`` below is the
     removal transform.
     """
-    from big_data_analytics_cse545_spark.cache import swap_cached
     from big_data_analytics_cse545_spark.operators.text import (
         WINNOW_K,
         winnow_bucket_pairs,
@@ -1628,9 +1626,9 @@ def shared_spans(
 
     from pyspark.sql.window import Window as W
 
-    grams = swap_cached(
-        "d13_grams", winnow_gram_relation(d, text_col=text_col, id_col=id_col)
-    )
+    grams = winnow_gram_relation(
+        d, text_col=text_col, id_col=id_col
+    ).localCheckpoint(eager=False)
     cand = winnow_bucket_pairs(winnow_fingerprints(grams)).distinct()
     # Round-13 optimization (guide §2.3 — the d02 posting-list prune on
     # the confirm join, r12 verdict item 4): a gram hash occurring

@@ -134,7 +134,7 @@ def _enforce_weight_bound(
     Σr_{k+1} ≤ N·BASE + 0.85·Σr_k keeps Σr ≤ N·RANK_ONE for every k,
     so r(v) ≤ N·RANK_ONE — hence the admissible per-edge weight is
     ``w ≤ (2^63−1) div (85·N·RANK_ONE)``. Two cheap aggregates over
-    host-sized relations (g03 passes them in cached); raises a pointed
+    host-sized relations (g03 passes them in checkpointed); raises a pointed
     ValueError prescribing the exact remedy instead of wrapping."""
     if n_nodes is None:
         n_nodes = nodes.count()
@@ -229,7 +229,7 @@ def trustrank_micro(
     Net per iteration: 2 join exchanges + 1 aggregate exchange → 1
     aggregate exchange + 1 host-sized broadcast.
     """
-    # One count over the (caller-cached) host-sized node relation
+    # One count over the (caller-checkpointed) host-sized node relation
     # decides the join strategy for every iteration — and doubles as
     # the weighted mode's exactness-bound input. Past the broadcast
     # ceiling the loop falls back to the pre-round-12 shuffled join

@@ -44,7 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_analytics_cse545_spark.cache import swap_cached as _swap_cached
 from big_data_analytics_cse545_spark.sources import load_table
 
 H = W = 40        # synthetic image size
@@ -715,10 +714,12 @@ def fused_signatures(
     return images.mapInPandas(gen, schema=schema)
 
 
-# swap-on-reentry persist discipline: cache.swap_cached (imported at
-# top as _swap_cached) — shared with graph since r8; NOT used by
-# text.train_bpe, whose chained in-loop lineage needs the
-# release-one-behind ordering (see cache.py's caveat)
+# Reused relations (m01's and m03's signatures, which both sides of the
+# band self-join read) are per-call local checkpoints, the discipline of
+# text.train_bpe and api.host_pagerank: each belongs to the DataFrame
+# its query returns, Spark frees its blocks when that DataFrame is
+# garbage-collected, and concurrent calls share nothing. A local
+# checkpoint is not recomputed after an executor is lost.
 
 
 def funnel_fork(
@@ -749,10 +750,11 @@ def m01_image_similarity_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature bands to mirror the reference's selectivity tuning
     (``a2_ahuja.py:133-139``)."""
     imgs = images_df(spark, sf_dir)
-    # one fused Python stage, persisted: both sides of the band self-join
-    # read the cached signatures instead of re-running the funnel (round
-    # 2 computed the whole decode→signature chain once per join side)
-    sigs = _swap_cached("m01_sigs", fused_signatures(imgs))
+    # one fused Python stage, checkpointed: both sides of the band
+    # self-join read the stored signatures instead of re-running the
+    # funnel (round 2 computed the whole decode→signature chain once per
+    # join side)
+    sigs = fused_signatures(imgs).localCheckpoint(eager=False)
     bands = sigs.select(
         "tile_id", F.posexplode(_bands_col()).alias("band", "bucket")
     )
@@ -836,17 +838,14 @@ def m03_binaryfile_ref_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per chunk; at our tiny tile size the default 2×2 pooling leaves
     # only 1-2 elements per chunk, a degenerate md5 alphabet whose
     # signature bits collide in nearly every 13-bit band.
-    sigs = _swap_cached(
-        "m03_sigs",
-        fused_signatures(
-            imgs,
-            pool=1,
-            n_chunks=REF_N_CHUNKS,
-            idx=REF_SIG_IDX,
-            width=1,
-            ref_bands=True,
-        ),
-    )
+    sigs = fused_signatures(
+        imgs,
+        pool=1,
+        n_chunks=REF_N_CHUNKS,
+        idx=REF_SIG_IDX,
+        width=1,
+        ref_bands=True,
+    ).localCheckpoint(eager=False)
     cand = ref_band_candidates(sigs)
     return cand.orderBy("t1", "t2")
 

@@ -848,7 +848,6 @@ ORDER BY vec_id, pos
 # ---------------------------------------------------------------------------
 
 PQ_M = 16        # subspaces (r4: 8 → 16; recall@3 0.8 → 1.0 at sf0.01)
-PQ_DSUB = DIM // PQ_M
 PQ_K = 16        # centroids per subspace → 16×4-bit codes per vector
 PQ_TRAIN_CAP = 2048  # absolute training-sample cap (model-sized, not data-sized)
 PQ_ITERS = 10

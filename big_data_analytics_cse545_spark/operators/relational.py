@@ -728,7 +728,6 @@ ORDER BY l_returnflag
 
 def q17_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — (status), (priority), () — via Spark SQL."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_q17")
     return spark.sql(
         """
         SELECT
@@ -737,10 +736,11 @@ def q17_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
           COUNT(*) AS n_orders,
           CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
           CAST(GROUPING(o_orderpriority) AS INT) AS g_priority
-        FROM orders_q17
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY g_status, g_priority, o_orderstatus, o_orderpriority
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1148,7 +1148,6 @@ def q25_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     many rows that is. Expressed in SQL (range frames with intervals are
     SQL-only surface in Spark).
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_q25")
     return spark.sql(
         """
         SELECT
@@ -1163,9 +1162,10 @@ def q25_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE)
             RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW
           ) AS n_orders_30d
-        FROM orders_q25
+        FROM {orders}
         ORDER BY o_custkey, order_date, o_orderkey
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1642,25 +1642,25 @@ def q33_sql_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is *near-identical SQL* (DuckDB shares the ANSI forms),
     making this also a portability check on the SQL dialect core.
     """
-    for name in ("customer", "orders"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"q33_{name}")
     return spark.sql(
         """
-        WITH big AS (SELECT * FROM q33_orders WHERE o_totalprice > 150000)
+        WITH big AS (SELECT * FROM {orders} WHERE o_totalprice > 150000)
         SELECT c.c_custkey,
                c.c_name,
-               (SELECT MAX(o.o_totalprice) FROM q33_orders o
+               (SELECT MAX(o.o_totalprice) FROM {orders} o
                  WHERE o.o_custkey = c.c_custkey) AS max_order,
                t.top_orderkey
-        FROM q33_customer c,
+        FROM {customer} c,
              LATERAL (SELECT o.o_orderkey AS top_orderkey
-                        FROM q33_orders o
+                        FROM {orders} o
                        WHERE o.o_custkey = c.c_custkey
                        ORDER BY o.o_totalprice DESC, o.o_orderkey
                        LIMIT 1) t
         WHERE EXISTS (SELECT 1 FROM big b WHERE b.o_custkey = c.c_custkey)
         ORDER BY c.c_custkey
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1893,9 +1893,6 @@ def q35_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     so at scale the row limit must be raised to ≥ N (or -1) or the
     query fails mid-flight by design, not silently truncates.
     """
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "q35_customer"
-    )
     return spark.sql(
         """
         WITH RECURSIVE walk (c_custkey, depth, path_key_sum) AS (
@@ -1904,7 +1901,7 @@ def q35_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT c.c_custkey,
                  w.depth + 1,
                  w.path_key_sum + c.c_custkey
-          FROM q35_customer c
+          FROM {customer} c
           JOIN walk w ON c.c_custkey DIV 7 = w.c_custkey
           WHERE c.c_custkey <> 0
         )
@@ -1916,7 +1913,8 @@ def q35_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM walk
         GROUP BY depth
         ORDER BY depth
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

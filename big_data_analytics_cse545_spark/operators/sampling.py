@@ -37,10 +37,6 @@ HASH_DOMAIN = 4294967296.0
 # x01 split percentages (bucket = md5 mod 100).
 TRAIN_PCT, VAL_PCT = 98, 1
 
-# x02 temperature: keep-rate r_s = (min_n / n_s)^(1-alpha); alpha=0.5
-# is the common "square-root temperature" that upweights rare sources.
-MIX_ALPHA = 0.5
-
 
 def hash_bucket(key: Column, tag: str, mod: int | None = None) -> Column:
     """Deterministic uniform hash of ``key`` (any column; cast to

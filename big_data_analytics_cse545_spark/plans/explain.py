@@ -44,49 +44,23 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df, "simple")
 
 
-def runtime_shuffle_exchanges(df: DataFrame) -> tuple[int, int, int]:
-    """Runtime-truthful shuffle-exchange count as
-    ``(outer, cached_internal, n_cached_relations)``.
-
-    The textual explain inlines every persisted relation's BUILD plan
-    under each of its InMemoryRelation references, so a regex count
-    multiplies the cached build's exchanges by the reference count —
-    g01's 6-iteration loop reads 85+ "Exchange" lines while a run
-    executes 34 (the r8 plan-audit finding). This walks the physical
-    tree via py4j instead: InMemoryTableScan is a LEAF (its reads hit
-    the cache), and each DISTINCT cached relation's build plan is
-    counted exactly once — which is what a run actually executes.
-    AdaptiveSparkPlanExec is unwrapped to its initialPlan (AQE may
-    still elide some of these at runtime; this is the upper bound the
-    static audit wants). ReusedExchange re-reads an exchange counted
-    elsewhere, so it adds nothing.
+def runtime_shuffle_exchanges(df: DataFrame) -> int:
+    """Shuffle exchanges a run executes, counted on the physical tree
+    via py4j: AdaptiveSparkPlanExec is unwrapped to its initialPlan (AQE
+    may still elide some of these at runtime; this is the upper bound
+    the static audit wants), and a ReusedExchange re-reads an exchange
+    counted elsewhere, so it adds nothing. A local checkpoint is a scan
+    here: the exchanges that built it belong to its own plan.
     """
 
-    def unwrap(n):
+    def count(n):
         if n.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            return n.initialPlan()
-        return n
-
-    def kids(n):
+            n = n.initialPlan()
+        c = 1 if n.getClass().getSimpleName() == "ShuffleExchangeExec" else 0
         ch = n.children()
-        return [ch.apply(i) for i in range(ch.size())]
+        return c + sum(count(ch.apply(i)) for i in range(ch.size()))
 
-    def count(n, cached):
-        n = unwrap(n)
-        nm = n.getClass().getSimpleName()
-        if nm == "InMemoryTableScanExec":
-            cp = n.relation().cacheBuilder().cachedPlan()
-            key = cp.id()
-            if key not in cached:
-                cached[key] = 0  # break cycles while this plan is walked
-                cached[key] = count(cp, cached)
-            return 0
-        c = 1 if nm == "ShuffleExchangeExec" else 0
-        return c + sum(count(x, cached) for x in kids(n))
-
-    cached: dict[int, int] = {}
-    outer = count(df._jdf.queryExecution().executedPlan(), cached)
-    return outer, sum(cached.values()), len(cached)
+    return count(df._jdf.queryExecution().executedPlan())
 
 
 def shuffle_exchanges(df: DataFrame) -> list[str]:

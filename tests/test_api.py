@@ -238,6 +238,25 @@ def test_ivf_join_learned_centroids(spark, sf_correctness):
     # Pruned recall is gated on clusterable data below.
 
 
+def test_ivf_cells_build_one_literal_per_centroid(spark, sf_smoke, monkeypatch):
+    """Each learned centroid is one array literal: mapping ``F.lit``
+    over its entries gives the same optimized plan, but ``dim`` literal
+    nodes per centroid to analyse at every DataFrame step."""
+    e = load_table(spark, sf_smoke, "embeddings")
+    q = e.filter(F.col("vec_id") % similarity.QUERY_MOD == 0)
+    real, calls = F.lit, []
+
+    def spy(x):
+        calls.append(x)
+        return real(x)
+
+    monkeypatch.setattr(F, "lit", spy)
+    for join in (api.ivf_join, api.ivf_pq_join):
+        calls.clear()
+        join(q, e, "embedding", "vec_id", k=3, n_cells=4, n_probe=2)
+        assert len(calls) < similarity.DIM, f"{len(calls)} F.lit calls for 4 centroids"
+
+
 def test_ivf_join_recall_on_clustered_data(spark):
     """On data that actually clusters (8 tight direction bundles), IVF
     with learned centroids and n_probe=2 must recall nearly all true

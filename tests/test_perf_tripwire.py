@@ -364,9 +364,10 @@ def _breaches(walls):
 
 def test_hot_queries_stay_within_factor_of_recorded_floor(spark):
     # quiesce the suite's live session-scoped local[32] JVM before
-    # probing: drop its cached relations so the fresh probe JVM is not
-    # competing with a hot block manager for the same 32 cores (later
-    # tests re-persist on demand — swap_cached is reentrant)
+    # probing: drop any relation a test cached so the fresh probe JVM is
+    # not competing with a hot block manager for the same 32 cores (the
+    # engine keeps nothing cached across calls: its reused relations are
+    # per-call local checkpoints, freed with the DataFrame that reads them)
     spark.catalog.clearCache()
     walls = _run_probe(_plan())
     first = _breaches(walls)

@@ -144,3 +144,26 @@ def test_rollup_on_empty_input_yields_no_rows_unlike_ansi(spark):
     # the bare aggregate DOES emit its one global row — the asymmetry
     # is specifically in the grouping-sets path
     assert empty.agg(F.count(F.lit(1))).count() == 1
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [
+        relational.q17_grouping_sets,
+        relational.q25_range_frame,
+        relational.q33_sql_subqueries,
+        relational.q35_recursive_cte,
+    ],
+    ids=lambda fn: fn.__name__[:3],
+)
+def test_sql_text_queries_leave_no_temp_view(spark, sf_smoke, fn):
+    """The SQL-text queries pass their tables to ``spark.sql`` as
+    DataFrame arguments: a fixed view name would let two clients of one
+    session overwrite each other's table between registration and
+    analysis, and would outlive the call in the session's catalog."""
+    from big_data_analytics_cse545_spark.session import configure_runtime
+
+    other = configure_runtime(spark.newSession())
+    assert other.catalog.listTables() == []
+    assert fn(other, sf_smoke).collect()
+    assert other.catalog.listTables() == []

@@ -33,15 +33,14 @@ def main() -> None:
         "# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
         "",
         f"Per-query plan digest at `{sf_dir}`. Exchanges = shuffle stages a",
-        "RUN executes: outer plan + each DISTINCT persisted relation's build",
-        "counted ONCE (cache-reusing loops like g01 print their cached build",
-        "under every reference in the explain text, so a naive regex count",
-        "multiplies it — 85 textual vs 34 executed on g01, round 8); the",
-        "form is `outer (+cached_build over N relations)`.",
-        "BHJ/SMJ = broadcast-hash / sort-merge joins (textual count; cached",
-        "builds repeat in it for loop queries); pushed = filters that",
-        "reached the parquet scan; PyOps = Arrow/Python boundary operators",
-        "(mapInPandas / ArrowEvalPython / FlatMap(Co)GroupsInPandas).",
+        "RUN executes, counted on the physical tree (a reused exchange",
+        "counts once). A local checkpoint (g01-g03's node and edge",
+        "relations, d06, d13, m01 and m03's reused relations) reads as a",
+        "scan: the exchanges that build it are not in the query's row.",
+        "BHJ/SMJ = broadcast-hash / sort-merge joins (textual count);",
+        "pushed = filters that reached the parquet scan; PyOps =",
+        "Arrow/Python boundary operators (mapInPandas / ArrowEvalPython /",
+        "FlatMap(Co)GroupsInPandas).",
         "",
         "| query | exchanges | BHJ | SMJ | pushed filters | PyOps |",
         "|---|---|---|---|---|---|",
@@ -71,20 +70,10 @@ def main() -> None:
                 f"| {name} | (eager driver loop — {eager_loops[name]}) | | | | |"
             )
             continue
-        # each query is audited from an empty cache: the api's cached
-        # relations have fixed keys, so a relation cached by the previous
-        # query (g01's node universe for g02) would otherwise count in
-        # this query's digest
-        spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
             plan = explain_str(df, "simple")
-            outer, cached_ex, n_cached = runtime_shuffle_exchanges(df)
-            n_ex = (
-                f"{outer} (+{cached_ex} cached/{n_cached})"
-                if n_cached
-                else f"{outer}"
-            )
+            n_ex = runtime_shuffle_exchanges(df)
             n_bhj = plan.count("BroadcastHashJoin")
             n_smj = plan.count("SortMergeJoin")
             n_py = (
@@ -109,8 +98,9 @@ def main() -> None:
         "## Notes",
         "",
         "- m01/m03 run the whole image funnel as ONE fused mapInPandas stage",
-        "  over a persisted signature relation (round 3) — the PyOps count is",
-        "  per plan SIDE; the cache means the kernel executes once per query.",
+        "  into a checkpointed signature relation (round 3); both join sides",
+        "  read the checkpoint, so the kernel runs once per query and their",
+        "  PyOps read 0 (the stage is below the checkpoint).",
         "- The reference's factor-5 bonus branch (`a2_ahuja.py:322-406,431-433`)",
         "  — one persisted tile relation re-pooled at two factors — is",
         "  `multimodal.funnel_fork`; decode-once is accumulator-proven in",
